@@ -87,29 +87,64 @@ def test_incremental_per_band_nodata(spark):
     assert list(inc.band_nodata.iloc[0]) == [-9999.0, 0.0, 0.0]
 
 
-def test_stack_guard_raises_loudly(spark, tiny_images):
-    """A holistic reducer over a group whose stack exceeds the budget
-    must fail with the escape hatches by name, not OOM."""
-    import re
-    celled = _celled(spark, tiny_images)
-    guarded = composite.composite(celled, "median", max_stack_bytes=10_000)
+def _stack_ops():
+    """The eight grouped time-stack operators, each as
+    ``(input, run(df, max_stack_bytes))``; input ``"scenes"`` is the
+    raw scene table, ``"celled"`` the cell-assigned one and
+    ``"periods"`` quarterly composites."""
+    from vrtility_spark import (breaks, feather, harmonic, mktrend,
+                                timeseries, trend)
+    return {
+        "composite": ("celled", lambda df, b: composite.composite(
+            df, "median", max_stack_bytes=b)),
+        "singleband_m2m": ("celled", lambda df, b: timeseries.singleband_m2m(
+            df, lambda X: X, max_stack_bytes=b)),
+        "gapfill_periods": ("periods", lambda df, b:
+                            timeseries.gapfill_periods(df, max_stack_bytes=b)),
+        "trend_stack": ("celled", lambda df, b: trend.trend_stack(
+            df, max_stack_bytes=b)),
+        "harmonic_stack": ("celled", lambda df, b: harmonic.harmonic_stack(
+            df, max_stack_bytes=b)),
+        "mk_trend": ("celled", lambda df, b: mktrend.mk_trend(
+            df, max_stack_bytes=b)),
+        "breaks_stack": ("celled", lambda df, b: breaks.breaks_stack(
+            df, max_stack_bytes=b)),
+        "feather_mosaic": ("scenes", lambda df, b: feather.feather_mosaic(
+            df, datagen.TILE_RES, 16, max_stack_bytes=b)),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_stack_ops()))
+def test_stack_guards_raise_loudly(spark, tiny_images, op):
+    """Every grouped time-stack operator reads its cells through
+    composite.cell_stack, so each fails loudly on a stack over the
+    budget (naming the escape hatches, not OOMing) and on a cell whose
+    scenes disagree on band_nodata (not silently mis-masking)."""
+    from pyspark.sql import functions as F
+    kind, run = _stack_ops()[op]
+    df = {"scenes": tiny_images, "celled": _celled(spark, tiny_images),
+          "periods": composite.composite_by_period(
+              _celled(spark, tiny_images), "median", period="month")}[kind]
+    order = "period" if kind == "periods" else "datetime"
+
     with pytest.raises(Exception) as ei:
-        guarded.collect()
+        run(df, 64).collect()
     msg = str(ei.value)
-    assert re.search(r"max_stack_bytes", msg)
-    assert "split_to_child_cells" in msg and "DECOMPOSABLE" in msg
-    # the same input under the same budget passes incrementally
-    ok = composite.composite(celled, "mean", max_stack_bytes=10_000)
-    assert ok.count() > 0
+    assert "max_stack_bytes" in msg and "split_to_child_cells" in msg
+    if op == "composite":
+        assert "DECOMPOSABLE" in msg
+        # the same input under the same budget passes incrementally
+        ok = composite.composite(df, "mean", max_stack_bytes=64)
+        assert ok.count() > 0
 
-
-def test_m2m_guard_raises_loudly(spark, tiny_images):
-    from vrtility_spark import timeseries
-    celled = _celled(spark, tiny_images)
-    with pytest.raises(Exception) as ei:
-        timeseries.singleband_m2m(
-            celled, lambda X: X, max_stack_bytes=10_000).collect()
-    assert "split_to_child_cells" in str(ei.value)
+    # the earliest rows of every cell get shifted per-band sentinels
+    first = df.agg(F.min(order)).first()[0]
+    mixed = df.withColumn("band_nodata", F.when(
+        F.col(order) == F.lit(first),
+        F.transform("band_nodata", lambda x: x + 1.0))
+        .otherwise(F.col("band_nodata")))
+    with pytest.raises(Exception, match="disagree"):
+        run(mixed, composite.MAX_STACK_BYTES).collect()
 
 
 def test_split_compose_assemble_equals_direct(spark, tiny_images):

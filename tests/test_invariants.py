@@ -265,3 +265,51 @@ def test_sampling_threshold_membership_property(fraction, key):
     thr_hi = sampling._hex_bound(
         round(min(1.0, fraction + 0.25) * sampling._BUCKETS))
     assert (hx < thr_hi) or not member
+
+
+# ------------------------------------------------- structural gates ----
+
+def test_stack_guards_live_in_the_shared_reader():
+    """Structural gate: the group profile guard (``nodata.nunique`` /
+    ``band_nodata_keys`` calls, comparisons against ``_profile_key``)
+    and the stack-budget check (ordering comparisons against
+    ``max_stack_bytes``) appear only in composite's shared cell-stack
+    helpers — a new grouped-map operator must not bring back a private
+    copy of either."""
+    import ast
+    import pathlib
+
+    allowed = {("composite.py", "_check_profile"),
+               ("composite.py", "_check_scene_profile"),
+               ("composite.py", "cell_stack")}
+
+    def name(node):
+        return getattr(node, "attr", getattr(node, "id", None))
+
+    def is_guard(node):
+        if isinstance(node, ast.Call):
+            f = node.func
+            return (name(f) == "band_nodata_keys"
+                    or (name(f) == "nunique"
+                        and name(getattr(f, "value", None)) == "nodata"))
+        if isinstance(node, ast.Compare):
+            sides = [node.left, *node.comparators]
+            if any(isinstance(s, ast.Call) and name(s.func) == "_profile_key"
+                   for s in sides):
+                return True
+            return (any(name(s) == "max_stack_bytes" for s in sides)
+                    and any(isinstance(o, (ast.Gt, ast.GtE, ast.Lt, ast.LtE))
+                            for o in node.ops))
+        return False
+
+    pkg = pathlib.Path(composite.__file__).parent
+    found = []
+    for path in sorted(pkg.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if is_guard(node) and (path.name, owner) not in allowed:
+                    found.append(f"{path.name}:{node.lineno} in {owner}")
+    assert not found, ("profile/budget guard outside composite.cell_stack "
+                       f"and its helpers: {found}")

@@ -351,3 +351,35 @@ def test_decompose_distributed_matches_driver(spark, tiny_images):
                 want[t].astype(np.float32))
             n += 1
     assert n == len(pdf)
+
+
+def test_m2m_masks_and_carries_band_nodata(spark):
+    """singleband_m2m masks with the per-band sentinels (band_nodata),
+    not the scalar nodata: a 65535 band-0 sentinel mid-series stays
+    nodata instead of being Hampel-filtered into a valid value. The
+    output carries band_nodata; a re-typing out_fmt (decompose) nulls
+    it."""
+    import pandas as pd
+    vals = [5000, 5100, 5200, 65535, 5300, 5400, 5500]
+    rows = []
+    for t, v in enumerate(vals):
+        arr = np.stack([np.full((2, 2), v), np.full((2, 2), 100 + t)])
+        rows.append({
+            "image_id": f"s{t}", "cell_id": 1,
+            "datetime": pd.Timestamp("2024-01-01") + pd.Timedelta(days=10 * t),
+            "bytes": codec.encode(arr.astype(np.uint16), "raw16"),
+            "w": 2, "h": 2, "fmt": "raw16", "nodata": 0.0,
+            "caption": f"c{t}", "band_nodata": [65535.0, 0.0]})
+    df = spark.createDataFrame(pd.DataFrame(rows), schema=(
+        "image_id string, cell_id long, datetime timestamp, bytes binary, "
+        "w int, h int, fmt string, nodata double, caption string, "
+        "band_nodata array<double>"))
+    out = {r.image_id: r for r in timeseries.hampel(df, k=2).collect()}
+    assert len(out) == len(vals)
+    mid = codec.decode(out["s3"].bytes, 2, 2, "raw16")
+    assert (mid[0] == 65535).all()
+    assert (mid[1] == 103).all()
+    for r in out.values():
+        assert list(r.band_nodata) == [65535.0, 0.0] and r.nodata == 0.0
+    dec = timeseries.decompose(df, period=2).collect()
+    assert all(r.band_nodata is None and r.nodata == -9999.0 for r in dec)

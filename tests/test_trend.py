@@ -184,3 +184,30 @@ def test_trend_stack_budget_guard(spark, celled):
 def test_trend_mode_router(spark, celled):
     with pytest.raises(KeyError, match="unknown trend mode"):
         trend.trend(celled, mode="nope")
+
+
+@pytest.mark.parametrize("op", ["trend-stack", "trend-incremental",
+                                "harmonic-stack", "harmonic-incremental",
+                                "mk_trend"])
+def test_null_datetime_scene_drops(spark, celled, op):
+    """A scene with a null datetime has no position in time: every
+    trend-family operator drops it (composite.cell_stack's rule, and
+    the same in the incremental partials) instead of fitting it at
+    NaT's int64-min instant — the result equals the run without it."""
+    from pyspark.sql import functions as F
+    from vrtility_spark import harmonic, mktrend
+    name, _, mode = op.partition("-")
+    run = {"trend": lambda df: trend.trend(df, mode=mode),
+           "harmonic": lambda df: harmonic.harmonic(df, mode=mode),
+           "mk_trend": mktrend.mk_trend}[name]
+    iid = celled.select("image_id").orderBy("image_id").first().image_id
+    nat = celled.withColumn("datetime", F.when(
+        F.col("image_id") == iid, F.lit(None).cast("timestamp"))
+        .otherwise(F.col("datetime")))
+    got = _decode_map(run(nat).collect())
+    want = _decode_map(run(celled.where(F.col("image_id") != iid)).collect())
+    assert got.keys() == want.keys()
+    for cid in want:
+        np.testing.assert_array_equal(got[cid][0], want[cid][0])
+        for col in ("n_scenes", "datetime_min", "datetime_max"):
+            assert getattr(got[cid][1], col) == getattr(want[cid][1], col)

@@ -31,9 +31,9 @@ runs one O(T) sweep maintaining running left-segment sums (six
 ``(B, H, W)`` planes — memory is independent of T beyond the stack
 itself), and the distributed shape is the same cell-keyed
 ``groupBy().applyInPandas`` the holistic composites use: scenes
-shuffle ONCE on the spatial key, with :mod:`trend`'s RAM guard
-(``max_stack_bytes``) refusing stacks that should be split spatially
-first.  At 100 TB the shuffle is the same volume as any composite —
+shuffle ONCE on the spatial key, and each cell is read through
+:func:`composite.cell_stack` (its group rules, memory budget
+included).  At 100 TB the shuffle is the same volume as any composite —
 no extra pass, no driver involvement.
 
 Reference parity: the reference's time-series verbs are per-timestep
@@ -47,20 +47,14 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from vrtility_spark import codec
 from vrtility_spark.composite import MAX_STACK_BYTES
-from vrtility_spark.trend import (
-    OUT_NODATA, _check_profile, _decoded, _out_row, t_years)
+from vrtility_spark.trend import TREND_SCHEMA, _stack_map
 
 _DEN_EPS = 1e-12
 
-BREAKS_SCHEMA = (
-    "cell_id long, bytes binary, w int, h int, fmt string, n_scenes int, "
-    "datetime_min timestamp, datetime_max timestamp, nodata double"
-)
+BREAKS_SCHEMA = TREND_SCHEMA  # same relational contract as trend
 
 
 def _seg_sse(n, St, Stt, Sy, Sty, Syy):
@@ -177,35 +171,10 @@ def breaks_stack(df: DataFrame, key: str = "cell_id",
                  max_stack_bytes: int | None = MAX_STACK_BYTES
                  ) -> DataFrame:
     """Distributed break detection: ONE cell-keyed grouped map (the
-    composite shuffle), stack RAM-guarded like :func:`trend.trend_stack`.
+    composite shuffle) over :func:`composite.cell_stack`.
     Output tiles are ``rawf32``/-9999 with ``4·B`` planes."""
     if min_seg < 2:
         raise ValueError(f"min_seg must be >= 2, got {min_seg}")
     ms = int(min_seg)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf[pdf.datetime.notna()]
-        pdf = (pdf.sort_values(["datetime", "image_id"]
-                               if "image_id" in pdf.columns
-                               else "datetime", kind="mergesort")
-               .reset_index(drop=True))
-        _check_profile(pdf, key)
-        w, h, fmt = int(pdf.w.iloc[0]), int(pdf.h.iloc[0]), pdf.fmt.iloc[0]
-        nb = codec.plane_count(pdf.bytes.iloc[0], w, h, fmt) or 1
-        est = len(pdf) * nb * h * w * 8
-        if max_stack_bytes is not None and est > max_stack_bytes:
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: break-detection stack "
-                f"needs ~{est / 2**30:.2f} GiB, over max_stack_bytes "
-                f"({max_stack_bytes / 2**30:.2f} GiB); split spatially "
-                "with composite.split_to_child_cells first.")
-        stack = np.stack([_decoded(r, scene_fn)
-                          for r in pdf.itertuples(index=False)])
-        ts = t_years(pdf.datetime.values.astype("datetime64[ns]")
-                     .astype(np.int64))
-        planes = breaks_np(ts, stack, min_seg=ms)
-        return pd.DataFrame([_out_row(
-            pdf[key].iloc[0], planes, w, h, len(pdf),
-            pdf.datetime.min(), pdf.datetime.max())])
-
-    return df.groupBy(key).applyInPandas(run, schema=BREAKS_SCHEMA)
+    return _stack_map(df, key, scene_fn, max_stack_bytes,
+                      lambda ts, stack: breaks_np(ts, stack, min_seg=ms))

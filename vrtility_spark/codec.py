@@ -231,8 +231,8 @@ def band_nodata_keys(pdf) -> set:
     """Distinct normalized ``band_nodata`` values across a pandas
     frame: ``None`` / scalar-NaN collapse to ``None``; arrays compare
     by their float64 byte image. One element ⇔ the group agrees on its
-    per-band sentinels — the profile check shared by grouped-map
-    operators (trend/harmonic/gapfill/remedian/overviews)."""
+    per-band sentinels — the band_nodata half of the grouped-map
+    profile check (composite._check_profile)."""
     import pandas as pd
     col = getattr(pdf, "band_nodata", pd.Series([None] * len(pdf)))
     return {None if v is None or (np.isscalar(v) and pd_isna(v))

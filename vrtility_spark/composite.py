@@ -588,6 +588,142 @@ def _profile_key(row):
             "nan" if nd != nd else nd, bn)
 
 
+# ------------------------------------------------ the cell-stack reader ----
+#
+# Every grouped time-stack operator (composite, singleband_m2m,
+# gapfill_periods, trend/harmonic/MK/breaks, feather) reads its cell the
+# same way: `cell_stack` below. The streaming accumulators (incremental
+# partials, remedian, trend/harmonic partials) share its per-scene
+# decode and profile rule without ever stacking.
+
+def _check_profile(pdf: pd.DataFrame, key: str, what: str = "scenes") -> None:
+    """The vrt_stack invariant: all rows of one group share one profile
+    — pixel grid and codec (``w``/``h``/``fmt``, plus ``nb`` on partial
+    rows), ``nodata`` (NaN counts as one value) and ``band_nodata``.
+    The reference errors on >1 SRS (R/vrt-stack.R:30); mixed zones are
+    impossible here because cell_id encodes the zone, but mixed pixel
+    grids / codecs / sentinels must fail loudly, not corrupt (a uint16
+    first-row profile would silently re-encode int16 scenes)."""
+    grid = [c for c in ("w", "h", "fmt", "nb") if c in pdf.columns]
+    bad = []
+    if any(pdf[c].nunique() > 1 for c in grid):
+        bad.append("/".join(grid))
+    if (pdf.nodata.nunique(dropna=False) > 1
+            or len(codec.band_nodata_keys(pdf)) > 1):
+        bad.append("nodata/band_nodata")
+    if bad:
+        raise ValueError(
+            f"cell {int(pdf[key].iloc[0])}: {what} disagree on "
+            f"{' and '.join(bad)}; normalize them onto one target "
+            "grid/profile first")
+
+
+def _check_scene_profile(profile, row, cell) -> None:
+    """Streaming twin of :func:`_check_profile`: one scene against the
+    profile (:func:`_profile_key`) its cell's accumulator opened with."""
+    if profile != _profile_key(row):
+        raise ValueError(
+            f"cell {cell}: scenes disagree on w/h/fmt or nodata/"
+            "band_nodata; normalize them onto one target grid/profile "
+            "first")
+
+
+def _decode_scene(row, scene_fn=None, arr=None) -> np.ndarray:
+    """One scene row → float64 planes, NaN where invalid: decode (unless
+    ``arr`` holds the decoded payload already), ``scene_fn(arr,
+    nodata)``, then mask with the row's per-band sentinels
+    (``band_nodata``, else the scalar ``nodata``)."""
+    if arr is None:
+        arr = codec.decode(row.bytes, row.w, row.h, row.fmt)
+    nd = codec.row_band_meta(row, len(arr), "band_nodata", row.nodata)
+    if scene_fn is not None:
+        n0 = len(arr)
+        arr = scene_fn(arr, nd)
+        # plane-dropping scene_fns (drop_mask_band=True) drop TRAILING
+        # planes; trim the per-band sentinel array alongside
+        if isinstance(nd, np.ndarray) and len(arr) != n0:
+            nd = nd[: len(arr)]
+    return codec.to_float_masked(arr, nd)
+
+
+def _empty_frame(schema: str) -> pd.DataFrame:
+    return pd.DataFrame(columns=[f.split(" ")[0] for f in schema.split(", ")])
+
+
+def cell_stack(pdf: pd.DataFrame, key: str, scene_fn=None,
+               order: str = "datetime", dtype: str = "float64",
+               max_stack_bytes: int | None = MAX_STACK_BYTES,
+               hatch: str = ""):
+    """Bring one cell's rows together as a time-ordered ``(T,B,H,W)``
+    stack — the reference's ``vrt_stack`` (R/vrt-stack.R:27-77), and the
+    one reader of every grouped time-stack operator. The group rules:
+
+    - rows whose ``order`` value is null drop: they have no position in
+      time (the asof_join precedent), and the incremental accumulators
+      apply the same rule;
+    - rows sort by ``(order, scene_order_key(image_id))``: same-instant
+      scenes would otherwise keep arbitrary partition-arrival order,
+      which selection reducers (mosaic/first/qmosaic, xoid ties) would
+      surface as run-to-run nondeterminism; the SAME key orders the
+      incremental accumulators, so both paths pick one winner;
+    - all rows share one profile (:func:`_check_profile`);
+    - the decoded stack (T·B·H·W·itemsize) must fit ``max_stack_bytes``
+      (None disables the check): the reference's tiling budget
+      (R/tiling.R:41-64) — fail loudly before the worker OOMs, naming
+      the escape hatches (``hatch`` adds an operator-specific one).
+
+    Each scene decodes once through ``scene_fn`` (:func:`_decode_scene`)
+    and is cast to ``dtype`` right after masking. Returns ``(pdf, stack,
+    nodata)``: the filtered, sorted frame; the stack, NaN for nodata;
+    and the group's sentinel — the per-band array trimmed to the
+    stack's planes, or the scalar. A group with no ordered row returns
+    ``(empty frame, None, None)``."""
+    pdf = pdf[pdf[order].notna()]
+    if not len(pdf):
+        return pdf, None, None
+    if "image_id" in pdf.columns:
+        pdf = (pdf.assign(_ord=[scene_order_key(i) for i in pdf.image_id])
+               .sort_values([order, "_ord"], kind="mergesort")
+               .drop(columns="_ord"))
+    else:
+        pdf = pdf.sort_values(order, kind="mergesort")
+    pdf = pdf.reset_index(drop=True)
+    _check_profile(pdf, key)
+    rows = list(pdf.itertuples(index=False))
+    first = rows[0]
+    w, h, fmt = int(first.w), int(first.h), first.fmt
+    # plane count from the payload LENGTH for raw formats — a decode
+    # just to count planes is one redundant full decode per group
+    # (png payloads decode once and reuse it as stack[0])
+    nb = codec.plane_count(first.bytes, w, h, fmt)
+    first_arr = None
+    if nb is None:
+        first_arr = codec.decode(first.bytes, w, h, fmt)
+        nb = len(first_arr)
+    est = len(rows) * nb * h * w * np.dtype(dtype).itemsize
+    if max_stack_bytes is not None and est > max_stack_bytes:
+        raise ValueError(
+            f"cell {int(pdf[key].iloc[0])}: stack needs "
+            f"~{est / 2**30:.2f} GiB ({len(rows)} scenes x {nb} bands x "
+            f"{h}x{w} px x {dtype}), over the max_stack_bytes budget "
+            f"({max_stack_bytes / 2**30:.2f} GiB). Escape hatches: "
+            f"{hatch}split_to_child_cells(df, k) to shrink groups "
+            "4^k-fold spatially before the shuffle, or a bigger "
+            "max_stack_bytes on a larger executor.")
+    # float32 compute (the composite default) halves the kernels'
+    # memory traffic (the scaling bottleneck at high parallelism) and
+    # matches the reference's Float32 derived-band policy
+    # (R/vrt-derived-block.R:123); float64 gives bit-exact parity with
+    # the float64 NumPy oracle.
+    stack = np.stack([
+        _decode_scene(r, scene_fn, first_arr if i == 0 else None)
+        .astype(dtype, copy=False) for i, r in enumerate(rows)])
+    nd = codec.row_band_meta(first, nb, "band_nodata", float(first.nodata))
+    if isinstance(nd, np.ndarray):
+        nd = nd[: stack.shape[1]]
+    return pdf, stack, nd
+
+
 class _CellAcc:
     """Running accumulator for one cell under a decomposable reducer."""
 
@@ -770,11 +906,15 @@ def _median_datetime(dt: pd.Series):
     n_dt = len(dt)
     if n_dt % 2 == 1:
         return dt.iloc[n_dt // 2]
+    # stats::median interpolates between the two middle times
     lo, hi = dt.iloc[n_dt // 2 - 1], dt.iloc[n_dt // 2]
     return lo + (hi - lo) / 2
 
 
 def _caption_agg(caps: list, total: int, cap: int) -> str:
+    # bounded caption rollup: a dense cell at 100x scale (1e4+ scenes)
+    # must not emit a multi-MB string row — keep the first ``cap`` in
+    # sorted order plus an overflow count
     caps = sorted(caps)[:cap]
     if total > cap:
         return "|".join(caps) + f"|+{total - cap} more"
@@ -825,21 +965,9 @@ def incremental_partials(
                 st = states.get(cell)
                 if st is None:
                     st = states[cell] = _CellAcc(reducer, row, cap)
-                elif st.profile != _profile_key(row):
-                    raise ValueError(
-                        f"cell {cell}: scenes disagree on pixel grid/"
-                        f"codec/nodata/band_nodata; normalize them onto "
-                        "one target grid/profile first")
-                arr = codec.decode(row.bytes, row.w, row.h, row.fmt)
-                nb = len(arr)
-                nd = codec.row_band_meta(row, nb, "band_nodata", row.nodata)
-                if scene_fn is not None:
-                    arr = scene_fn(arr, nd)
-                    # plane-dropping scene_fns (drop_mask_band=True)
-                    # drop TRAILING planes; trim the sentinels with them
-                    if isinstance(nd, np.ndarray) and len(arr) != nb:
-                        nd = nd[: len(arr)]
-                data = codec.to_float_masked(arr, nd)
+                else:
+                    _check_scene_profile(st.profile, row, cell)
+                data = _decode_scene(row, scene_fn)
                 dt = row.datetime
                 st.add(data, np.int64(pd.Timestamp(dt).value), dt,
                        row.caption,
@@ -901,15 +1029,7 @@ def composite_incremental(
         # cross-PARTITION profile agreement: each partial was checked
         # internally, but two partitions can each be consistent while
         # disagreeing with each other — including on band_nodata
-        bn_keys = codec.band_nodata_keys(pdf)
-        if (pdf.w.nunique() > 1 or pdf.h.nunique() > 1
-                or pdf.fmt.nunique() > 1 or pdf.nb.nunique() > 1
-                or pdf.nodata.nunique(dropna=False) > 1
-                or len(bn_keys) > 1):
-            raise ValueError(
-                f"cell {int(pdf.cell_id.iloc[0])}: partials disagree on "
-                "pixel grid/codec/nodata/band_nodata; normalize the "
-                "profile first")
+        _check_profile(pdf, "cell_id", "partials")
         first = pdf.iloc[0]
         nb, h, w = int(first.nb), int(first.h), int(first.w)
         shape = (nb, h, w)
@@ -970,8 +1090,9 @@ def composite(df: DataFrame, reducer: str | Callable[[np.ndarray], np.ndarray],
     over-budget cells sub-tile instead of failing.
 
     Expects an images DataFrame carrying ``cell_id`` (see
-    :func:`vrtility_spark.warp.assign_cells`); scenes in a group share
-    the tile grid (the ``vrt_collection_warped`` invariant).
+    :func:`vrtility_spark.warp.assign_cells`); the stack path reads each
+    cell through :func:`cell_stack` (its group rules: null datetimes
+    drop, tie order, one profile, the memory budget).
     Stamps the median acquisition datetime on each composite
     (R/vrt-compute.R:547-590) and carries captions through sorted (the
     caption-passthrough invariant of BASELINE.json).
@@ -1014,123 +1135,28 @@ def composite(df: DataFrame, reducer: str | Callable[[np.ndarray], np.ndarray],
     fn = resolve_reducer(reducer)
 
     def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # scene_order_key tiebreak: same-instant scenes otherwise keep
-        # arbitrary partition-arrival order, which selection reducers
-        # (mosaic/first/qmosaic, xoid ties) would surface as
-        # run-to-run nondeterminism; the SAME key orders the
-        # incremental accumulators, so both paths pick one winner
-        # null-datetime scenes drop (the asof_join precedent): no
-        # deterministic position in time-ordered selection exists for
-        # them, and the incremental accumulators apply the same rule
-        pdf = pdf[pdf.datetime.notna()]
-        if not len(pdf):
-            return pd.DataFrame(
-                columns=[f.split(" ")[0] for f in
-                         COMPOSITE_SCHEMA.split(", ")])
-        if "image_id" in pdf.columns:
-            pdf = (pdf.assign(_ord=[scene_order_key(i)
-                                    for i in pdf.image_id])
-                   .sort_values(["datetime", "_ord"], kind="mergesort")
-                   .drop(columns="_ord"))
-        else:
-            pdf = pdf.sort_values("datetime", kind="mergesort")
-        # the vrt_stack invariant: scenes in one stack must share the
-        # grid (the reference errors on >1 SRS, R/vrt-stack.R:30; mixed
-        # zones are impossible here because cell_id encodes the zone,
-        # but mixed pixel grids / codecs must fail loudly, not corrupt)
-        if (pdf.w.nunique() > 1 or pdf.h.nunique() > 1
-                or pdf.fmt.nunique() > 1 or pdf.nodata.nunique(dropna=False) > 1):
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: scenes disagree on pixel "
-                f"grid/codec/nodata (w={sorted(pdf.w.unique())}, "
-                f"h={sorted(pdf.h.unique())}, fmt={sorted(pdf.fmt.unique())}, "
-                f"nodata={sorted(pdf.nodata.unique())}); "
-                "normalize them onto one target grid/profile first")
-        w, h, fmt = int(pdf.w.iloc[0]), int(pdf.h.iloc[0]), pdf.fmt.iloc[0]
-        nodata = float(pdf.nodata.iloc[0])
-        dtype = codec.dtype_for(fmt)
-        # per-band sentinels (band_nodata) supersede the scalar when
-        # present; scenes in a group must agree on them too
-        rows = list(pdf.itertuples(index=False))
-        first = rows[0]
-        # plane count from the payload LENGTH for raw formats — a
-        # decode just to count planes is one redundant full decode per
-        # group (png payloads decode once and reuse it as stack[0])
-        nb0 = codec.plane_count(first.bytes, w, h, fmt)
-        first_arr = None
-        if nb0 is None:
-            first_arr = codec.decode(first.bytes, w, h, fmt)
-            nb0 = len(first_arr)
-        # RAM guard for the holistic stack (the reference's tiling
-        # budget, R/tiling.R:41-64): fail loudly before the worker OOMs
-        itemsize = np.dtype(compute_dtype).itemsize
-        est = len(rows) * nb0 * h * w * itemsize
-        if max_stack_bytes is not None and est > max_stack_bytes:
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: composite stack needs "
-                f"~{est / 2**30:.2f} GiB ({len(rows)} scenes x {nb0} "
-                f"bands x {h}x{w} px x {compute_dtype}), over the "
-                f"max_stack_bytes budget ({max_stack_bytes / 2**30:.2f} "
-                "GiB). Escape hatches: a DECOMPOSABLE reducer (mean/min/"
-                "max/sum/mosaic/first/geomean/mean_db run incrementally "
-                "and never stack), split_to_child_cells(df, k) to shrink "
-                "groups 4^k-fold spatially before the shuffle, or a "
-                "bigger max_stack_bytes on a larger executor.")
-        nd = codec.row_band_meta(first, nb0, "band_nodata", nodata)
-        if "band_nodata" in pdf.columns:
-            seen = codec.band_nodata_keys(pdf)
-            if len(seen) > 1:
-                raise ValueError(
-                    f"cell {int(pdf[key].iloc[0])}: scenes disagree on "
-                    "band_nodata; normalize the profile first")
-        # float32 compute by default: halves the kernels' memory
-        # traffic (the scaling bottleneck at high parallelism) and
-        # matches the reference's Float32 derived-band policy
-        # (R/vrt-derived-block.R:123); pass compute_dtype="float64"
-        # for bit-exact parity with the float64 NumPy oracle.
-        def dec(r, pre=None):
-            arr = codec.decode(r.bytes, r.w, r.h, r.fmt) if pre is None \
-                else pre
-            ndl = nd
-            if scene_fn is not None:
-                n0 = len(arr)
-                arr = scene_fn(arr, nd)
-                # plane-dropping scene_fns (drop_mask_band=True) drop
-                # TRAILING planes; trim the sentinels with them
-                if isinstance(nd, np.ndarray) and len(arr) != n0:
-                    ndl = nd[: len(arr)]
-            return codec.to_float_masked(arr, ndl).astype(compute_dtype)
-
-        stack = np.stack([dec(r, first_arr if i == 0 else None)
-                          for i, r in enumerate(rows)])
-        # (T, B, H, W)
-        out = fn(stack)
+        pdf, stack, nd = cell_stack(
+            pdf, key, scene_fn, dtype=compute_dtype,
+            max_stack_bytes=max_stack_bytes,
+            hatch="a DECOMPOSABLE reducer (mean/min/max/sum/mosaic/first/"
+                  "geomean/mean_db run incrementally and never stack), ")
+        if stack is None:
+            return _empty_frame(COMPOSITE_SCHEMA)
+        out = fn(stack)  # (T, B, H, W) -> (B, H, W)
         if isinstance(nd, np.ndarray) and len(nd) != out.shape[0]:
             nd = nd[: out.shape[0]]
-        payload = codec.from_float(out, nd, dtype)
-        dt = pdf["datetime"].sort_values().reset_index(drop=True)
-        n_dt = len(dt)
-        if n_dt % 2 == 1:
-            med_dt = dt.iloc[n_dt // 2]
-        else:  # stats::median interpolates between the two middle times
-            lo, hi = dt.iloc[n_dt // 2 - 1], dt.iloc[n_dt // 2]
-            med_dt = lo + (hi - lo) / 2
-        # bounded caption rollup: a dense cell at 100x scale (1e4+
-        # scenes) must not emit a multi-MB string row — keep the first
-        # ``caption_cap`` in sorted order plus an overflow count
-        caps = sorted(pdf.caption.tolist())
-        if len(caps) > caption_cap:
-            agg = "|".join(caps[:caption_cap]) + \
-                f"|+{len(caps) - caption_cap} more"
-        else:
-            agg = "|".join(caps)
+        fmt = pdf.fmt.iloc[0]
+        payload = codec.from_float(out, nd, codec.dtype_for(fmt))
         return pd.DataFrame([{
             "cell_id": int(pdf[key].iloc[0]),
             "bytes": codec.encode(payload, fmt),
-            "w": w, "h": h, "fmt": fmt, "n_scenes": len(pdf),
-            "datetime_median": med_dt, "nodata": nodata,
+            "w": int(pdf.w.iloc[0]), "h": int(pdf.h.iloc[0]), "fmt": fmt,
+            "n_scenes": len(pdf),
+            "datetime_median": _median_datetime(pdf["datetime"]),
+            "nodata": float(pdf.nodata.iloc[0]),
             "band_nodata": None if np.isscalar(nd) else list(nd),
-            "caption_agg": agg,
+            "caption_agg": _caption_agg(pdf.caption.tolist(), len(pdf),
+                                        caption_cap),
         }])
 
     return df.groupBy(key).applyInPandas(reduce_group, schema=COMPOSITE_SCHEMA)
@@ -1505,20 +1531,9 @@ def composite_remedian(
                     if acc is not None:
                         done.append(finalize())
                     cur_cell, acc = cell, _RemedianAcc(b, row, cap)
-                elif acc.profile != _profile_key(row):
-                    raise ValueError(
-                        f"cell {cell}: scenes disagree on pixel grid/"
-                        "codec/nodata/band_nodata; normalize them onto "
-                        "one target grid/profile first")
-                arr = codec.decode(row.bytes, row.w, row.h, row.fmt)
-                nd = codec.row_band_meta(row, len(arr), "band_nodata",
-                                         row.nodata)
-                if scene_fn is not None:
-                    n0 = len(arr)
-                    arr = scene_fn(arr, nd)
-                    if isinstance(nd, np.ndarray) and len(arr) != n0:
-                        nd = nd[: len(arr)]  # trailing planes dropped
-                acc.add(codec.to_float_masked(arr, nd), row.datetime,
+                else:
+                    _check_scene_profile(acc.profile, row, cell)
+                acc.add(_decode_scene(row, scene_fn), row.datetime,
                         row.caption)
             if done:
                 yield pd.DataFrame(done)

@@ -43,7 +43,8 @@ from pyspark.sql import functions as F
 
 from vrtility_spark import codec
 from vrtility_spark.composite import (
-    CAPTION_CAP, COMPOSITE_SCHEMA, MAX_STACK_BYTES, _median_datetime)
+    CAPTION_CAP, COMPOSITE_SCHEMA, MAX_STACK_BYTES, _caption_agg,
+    _empty_frame, _median_datetime, cell_stack)
 
 #: minimum weight for a valid pixel (output-pixel units): keeps every
 #: valid observation in the blend even exactly on a footprint edge
@@ -101,7 +102,8 @@ def feather_mosaic(scenes: DataFrame, res: int, out_w: int,
     """Scenes with arbitrary rectangular footprints → one feathered
     composite tile per covering cell (COMPOSITE_SCHEMA — chains
     anywhere a composite does, values re-encoded in the input
-    format)."""
+    format). Each cell's tiles are read through
+    :func:`composite.cell_stack` (its group rules apply)."""
     from vrtility_spark.cells import cell_size
     from vrtility_spark.warp import regrid_to_cells
     if cap_px < W_FLOOR:
@@ -116,60 +118,29 @@ def feather_mosaic(scenes: DataFrame, res: int, out_w: int,
                             mask_plane=mask_plane, scene_fn=scene_fn)
 
     def blend(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf[pdf.datetime.notna()]
-        if not len(pdf):
-            return pd.DataFrame(
-                columns=[f.split(" ")[0] for f in
-                         COMPOSITE_SCHEMA.split(", ")])
-        pdf = pdf.sort_values(
-            ["datetime", "image_id"] if "image_id" in pdf.columns
-            else "datetime", kind="mergesort").reset_index(drop=True)
-        if (pdf.w.nunique() > 1 or pdf.h.nunique() > 1
-                or pdf.fmt.nunique() > 1
-                or pdf.nodata.nunique(dropna=False) > 1
-                or len(codec.band_nodata_keys(pdf)) > 1):
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: scenes disagree on "
-                "pixel grid/codec/nodata/band_nodata; normalize them "
-                "onto one profile first")
-        w, h, fmt = int(pdf.w.iloc[0]), int(pdf.h.iloc[0]), pdf.fmt.iloc[0]
-        nodata = float(pdf.nodata.iloc[0])
+        pdf, stack, nd = cell_stack(pdf, key,
+                                    max_stack_bytes=max_stack_bytes)
+        if stack is None:
+            return _empty_frame(COMPOSITE_SCHEMA)
         first = pdf.iloc[0]
-        nb = codec.plane_count(first.bytes, w, h, fmt)
-        if nb is None:
-            nb = len(codec.decode(first.bytes, w, h, fmt))
-        est = len(pdf) * nb * h * w * 8
-        if max_stack_bytes is not None and est > max_stack_bytes:
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: feather stack needs "
-                f"~{est / 2**30:.2f} GiB, over max_stack_bytes "
-                f"({max_stack_bytes / 2**30:.2f} GiB); thin scenes or "
-                "split spatially first.")
-        nd = codec.row_band_meta(first, nb, "band_nodata", nodata)
+        w, h, fmt = int(first.w), int(first.h), first.fmt
         # the regrid stage rewrote xmin/ymin to the CELL origin
         cx0, cy0 = float(first.xmin), float(first.ymin)
-        stack, wts = [], []
-        for r in pdf.itertuples(index=False):
-            arr = codec.decode(r.bytes, r.w, r.h, r.fmt)
-            stack.append(codec.to_float_masked(arr, nd))
-            wts.append(feather_weights_np(
-                cx0, cy0, size, w, h,
-                (r.fp_xmin, r.fp_ymin, r.fp_xmax, r.fp_ymax),
-                cap_px))
-        out = feather_blend_np(np.stack(stack), np.stack(wts))
-        caps = sorted(pdf.caption.tolist())
-        agg = ("|".join(caps[:caption_cap])
-               + f"|+{len(caps) - caption_cap} more"
-               if len(caps) > caption_cap else "|".join(caps))
+        wts = np.stack([feather_weights_np(
+            cx0, cy0, size, w, h,
+            (r.fp_xmin, r.fp_ymin, r.fp_xmax, r.fp_ymax), cap_px)
+            for r in pdf.itertuples(index=False)])
+        out = feather_blend_np(stack, wts)
         return pd.DataFrame([{
-            "cell_id": int(pdf[key].iloc[0]),
+            "cell_id": int(first[key]),
             "bytes": codec.encode(
                 codec.from_float(out, nd, codec.dtype_for(fmt)), fmt),
             "w": w, "h": h, "fmt": fmt, "n_scenes": len(pdf),
             "datetime_median": _median_datetime(pdf["datetime"]),
-            "nodata": nodata,
+            "nodata": float(first.nodata),
             "band_nodata": None if np.isscalar(nd) else list(nd),
-            "caption_agg": agg,
+            "caption_agg": _caption_agg(pdf.caption.tolist(), len(pdf),
+                                        caption_cap),
         }])
 
     return tiles.groupBy(key).applyInPandas(blend,

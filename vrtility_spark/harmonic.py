@@ -31,18 +31,14 @@ output contract as :mod:`trend`.
 
 from __future__ import annotations
 
-from typing import Callable, Iterable
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from vrtility_spark import codec
-from vrtility_spark.composite import (
-    MAX_ACTIVE_BYTES, MAX_STACK_BYTES, _profile_key)
+from vrtility_spark.composite import MAX_ACTIVE_BYTES, MAX_STACK_BYTES
 from vrtility_spark.trend import (
-    OUT_NODATA, TREND_SCHEMA, _PARTIAL_SCHEMA, _check_profile, _decoded,
-    _out_row, t_years)
+    TREND_SCHEMA, _stack_map, _stat_merge, _stat_partials)
 
 #: normalized pivots below this mark a pixel's design as degenerate →
 #: NaN fit. The solver Jacobi-scales the normal matrix first (unit
@@ -203,33 +199,12 @@ def harmonic_stack(df: DataFrame, n_harmonics: int = 1,
                    scene_fn: Callable | None = None,
                    max_stack_bytes: int | None = MAX_STACK_BYTES
                    ) -> DataFrame:
-    """Direct grouped-stack path (RAM-guarded like every holistic
-    grouped stack) — the parity reference for the incremental path."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = (pdf.sort_values("datetime", kind="mergesort")
-               .reset_index(drop=True))
-        _check_profile(pdf, key)
-        w, h, fmt = int(pdf.w.iloc[0]), int(pdf.h.iloc[0]), pdf.fmt.iloc[0]
-        nb = codec.plane_count(pdf.bytes.iloc[0], w, h, fmt) or 1
-        est = len(pdf) * nb * h * w * 8
-        if max_stack_bytes is not None and est > max_stack_bytes:
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: harmonic stack needs "
-                f"~{est / 2**30:.2f} GiB, over max_stack_bytes "
-                f"({max_stack_bytes / 2**30:.2f} GiB). Use "
-                "mode='incremental' (never stacks) or split spatially "
-                "with composite.split_to_child_cells first.")
-        stack = np.stack([_decoded(r, scene_fn)
-                          for r in pdf.itertuples(index=False)])
-        ts = t_years(pdf.datetime.values.astype("datetime64[ns]")
-                     .astype(np.int64))
-        planes = harmonic_np(ts, stack, n_harmonics, period_years)
-        return pd.DataFrame([_out_row(
-            pdf[key].iloc[0], planes, w, h, len(pdf),
-            pdf.datetime.min(), pdf.datetime.max())])
-
-    return df.groupBy(key).applyInPandas(run, schema=HARMONIC_SCHEMA)
+    """Direct grouped-stack path (:func:`composite.cell_stack`) — the
+    parity reference for the incremental path."""
+    return _stack_map(
+        df, key, scene_fn, max_stack_bytes,
+        lambda ts, stack: harmonic_np(ts, stack, n_harmonics, period_years),
+        hatch="mode='incremental' (never stacks), ")
 
 
 def harmonic_partials(df: DataFrame, n_harmonics: int = 1,
@@ -239,71 +214,15 @@ def harmonic_partials(df: DataFrame, n_harmonics: int = 1,
                       max_active_bytes: int = MAX_ACTIVE_BYTES
                       ) -> DataFrame:
     """Stage 1: per-partition running sufficient statistics — one
-    ``(q, B, H, W)`` float64 block per active cell, flushed past
-    either working-set bound; the ONLY thing this operator shuffles."""
+    ``(q, B, H, W)`` float64 normal-equation block per active cell
+    (see :func:`trend._stat_partials`)."""
     K, P = int(n_harmonics), float(period_years)
-    p = n_params(K)
-    q = _acc_rows(p)
 
-    def partials(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        states: dict[int, list] = {}
+    def fold(acc, t, data):
+        fold_scene(acc, design_np(np.array([t]), K, P)[0], data)
 
-        def flush(keys=None):
-            keys = list(states) if keys is None else keys
-            if not keys:
-                return None
-            rows = []
-            for c in keys:
-                profile, acc, n, lo, hi = states.pop(c)
-                w, h, fmt, nd, bn = profile
-                rows.append({
-                    "cell_id": int(c), "w": w, "h": h, "fmt": fmt,
-                    "nodata": float("nan") if isinstance(nd, str) else nd,
-                    "band_nodata": (None if bn is None else
-                                    list(np.frombuffer(bn, "<f8"))),
-                    "nb": int(acc.shape[1]), "n_scenes": int(n),
-                    "acc": acc.astype("<f8").tobytes(),
-                    "dt_min": lo, "dt_max": hi,
-                })
-            return pd.DataFrame(rows)
-
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                cell = int(getattr(row, key))
-                data = _decoded(row, scene_fn)
-                st = states.get(cell)
-                if st is None:
-                    acc = np.zeros((q,) + data.shape)
-                    st = states[cell] = [
-                        _profile_key(row), acc, 0,
-                        row.datetime, row.datetime]
-                elif st[0] != _profile_key(row):
-                    raise ValueError(
-                        f"cell {cell}: scenes disagree on pixel grid/"
-                        "codec/nodata/band_nodata; normalize them onto "
-                        "one target grid/profile first")
-                elif data.shape != st[1].shape[1:]:
-                    raise ValueError(
-                        f"cell {cell}: scene plane shape {data.shape} "
-                        f"disagrees with the accumulator "
-                        f"{st[1].shape[1:]} (mixed band counts)")
-                t = float(t_years(np.int64(
-                    pd.Timestamp(row.datetime).value)))
-                x = design_np(np.array([t]), K, P)[0]
-                fold_scene(st[1], x, data)
-                st[2] += 1
-                if row.datetime < st[3]:
-                    st[3] = row.datetime
-                if row.datetime > st[4]:
-                    st[4] = row.datetime
-            tot = sum(s[1].nbytes for s in states.values())
-            if len(states) > max_active_cells or tot >= max_active_bytes:
-                yield flush()
-        tail = flush()
-        if tail is not None:
-            yield tail
-
-    return df.mapInPandas(partials, schema=_PARTIAL_SCHEMA)
+    return _stat_partials(df, key, scene_fn, _acc_rows(n_params(K)), fold,
+                          max_active_cells, max_active_bytes)
 
 
 def harmonic_incremental(df: DataFrame, n_harmonics: int = 1,
@@ -317,34 +236,13 @@ def harmonic_incremental(df: DataFrame, n_harmonics: int = 1,
     partition, merged per cell (elementwise sum), finalized with the
     deterministic elimination — scenes never shuffle."""
     K = int(n_harmonics)
-    q = _acc_rows(n_params(K))
     part = harmonic_partials(df, n_harmonics=K,
                              period_years=period_years, key=key,
                              scene_fn=scene_fn,
                              max_active_cells=max_active_cells,
                              max_active_bytes=max_active_bytes)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        bn_keys = codec.band_nodata_keys(pdf)
-        if (pdf.w.nunique() > 1 or pdf.h.nunique() > 1
-                or pdf.fmt.nunique() > 1 or pdf.nb.nunique() > 1
-                or pdf.nodata.nunique(dropna=False) > 1
-                or len(bn_keys) > 1):
-            raise ValueError(
-                f"cell {int(pdf.cell_id.iloc[0])}: partials disagree on "
-                "pixel grid/codec/nodata/band_nodata")
-        first = pdf.iloc[0]
-        shape = (q, int(first.nb), int(first.h), int(first.w))
-        acc = np.zeros(shape)
-        for b in pdf.acc:
-            acc += np.frombuffer(b, "<f8").reshape(shape)
-        planes = harmonic_finalize(acc, K)
-        return pd.DataFrame([_out_row(
-            first.cell_id, planes, first.w, first.h,
-            int(pdf.n_scenes.sum()), pdf.dt_min.min(), pdf.dt_max.max())])
-
-    return part.groupBy("cell_id").applyInPandas(
-        merge, schema=HARMONIC_SCHEMA)
+    return _stat_merge(part, _acc_rows(n_params(K)),
+                       lambda acc: harmonic_finalize(acc, K))
 
 
 def harmonic(df: DataFrame, n_harmonics: int = 1,

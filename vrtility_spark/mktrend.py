@@ -33,9 +33,9 @@ Statistics (per pixel/band, over the ``n`` valid observations):
 Spark-first shape: unlike OLS/harmonic these are NOT decomposable —
 S and the tie correction are rank statistics and Sen is a median over
 all pairs, so no fixed-size per-scene partial exists. The operator
-therefore uses the grouped-stack path (one ``applyInPandas`` per cell,
-``max_stack_bytes`` guard, same contract as the holistic composites:
-geomedian/medoid). That is the right 100-TB shape anyway: T (scenes
+therefore uses the grouped-stack path (one ``applyInPandas`` per cell
+reading it through :func:`composite.cell_stack`, as the holistic
+composites geomedian/medoid do). That is the right 100-TB shape anyway: T (scenes
 per cell) is bounded by the acquisition cadence, the O(T²) pair work
 is pure in-worker NumPy, and the pair-slope array is ROW-CHUNKED so
 worker memory stays bounded by ``chunk_bytes`` regardless of tile
@@ -54,13 +54,10 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from vrtility_spark import codec
 from vrtility_spark.composite import MAX_STACK_BYTES
-from vrtility_spark.trend import (
-    OUT_NODATA, TREND_SCHEMA, _check_profile, _decoded, _out_row, t_years)
+from vrtility_spark.trend import _stack_map
 
 #: bound on the materialized pair-slope block (P × B × chunk_h × W f64)
 SEN_CHUNK_BYTES = 256 * 2**20
@@ -153,33 +150,10 @@ def mk_trend(df: DataFrame, key: str = "cell_id",
              max_stack_bytes: int | None = MAX_STACK_BYTES,
              chunk_bytes: int = SEN_CHUNK_BYTES) -> DataFrame:
     """Distributed per-cell Mann–Kendall + Sen over a scene table:
-    one grouped Arrow map per cell (holistic — see module docstring for
-    why no decomposable path exists), output one ``rawf32`` tile per
-    cell with ``4B`` planes. Same RAM guard and escape hatches as the
-    holistic composites."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = (pdf.sort_values("datetime", kind="mergesort")
-               .reset_index(drop=True))
-        _check_profile(pdf, key)
-        w, h, fmt = int(pdf.w.iloc[0]), int(pdf.h.iloc[0]), pdf.fmt.iloc[0]
-        nb = codec.plane_count(pdf.bytes.iloc[0], w, h, fmt) or 1
-        est = len(pdf) * nb * h * w * 8
-        if max_stack_bytes is not None and est > max_stack_bytes:
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: MK stack needs "
-                f"~{est / 2**30:.2f} GiB, over max_stack_bytes "
-                f"({max_stack_bytes / 2**30:.2f} GiB). Split spatially "
-                "with composite.split_to_child_cells / Pipeline."
-                "split_cells first (the statistic is per-pixel, so "
-                "spatial splits compose exactly).")
-        stack = np.stack([_decoded(r, scene_fn)
-                          for r in pdf.itertuples(index=False)])
-        ts = t_years(pdf.datetime.values.astype("datetime64[ns]")
-                     .astype(np.int64))
-        planes = mk_np(ts, stack, chunk_bytes=chunk_bytes)
-        return pd.DataFrame([_out_row(
-            pdf[key].iloc[0], planes, w, h, len(pdf),
-            pdf.datetime.min(), pdf.datetime.max())])
-
-    return df.groupBy(key).applyInPandas(run, schema=TREND_SCHEMA)
+    one grouped Arrow map per cell over :func:`composite.cell_stack`
+    (holistic — see module docstring for why no decomposable path
+    exists), output one ``rawf32`` tile per cell with ``4B`` planes.
+    The statistic is per-pixel, so spatial splits compose exactly."""
+    return _stack_map(
+        df, key, scene_fn, max_stack_bytes,
+        lambda ts, stack: mk_np(ts, stack, chunk_bytes=chunk_bytes))

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vrtility_spark import cells, codec
+from vrtility_spark import cells, codec, composite
 
 OVERVIEW_METHODS = ("average", "nearest", "min", "max", "mode")
 
@@ -159,17 +159,13 @@ def build_level(df: DataFrame, method="average",
                 f"build_level: parent group holds {len(pdf)} rows over "
                 f"{pdf[key].nunique()} cells; input must be one row per "
                 "cell — composite first")
-        # sibling nodata agreement (same rule as trend._check_profile):
-        # every tile in the 2x2 group is decoded with the FIRST child's
-        # sentinel, and the output row's passthrough metadata comes from
-        # a possibly different representative child — disagreeing
-        # sentinels would silently mis-mask instead of erroring
-        bn_keys = codec.band_nodata_keys(pdf)
-        if pdf.nodata.nunique(dropna=False) > 1 or len(bn_keys) > 1:
-            raise ValueError(
-                f"build_level: sibling tiles under parent of cell "
-                f"{int(pdf[key].iloc[0])} disagree on nodata/"
-                "band_nodata; normalize them onto one profile first")
+        # sibling profile agreement (the cell-stack rule): tiles at one
+        # res share the pixel grid, and every tile in the 2x2 group is
+        # decoded with the FIRST child's sentinel while the output
+        # row's passthrough metadata comes from a possibly different
+        # representative child — disagreeing sentinels would silently
+        # mis-mask instead of erroring
+        composite._check_profile(pdf, key, "sibling tiles")
         first = pdf.iloc[0]
         w, h, fmt = int(first.w), int(first.h), first.fmt
         zone, res, _, _ = (int(v) for v in
@@ -181,11 +177,6 @@ def build_level(df: DataFrame, method="average",
         nd = None
         nb = None
         for row in pdf.itertuples(index=False):
-            if int(row.w) != w or int(row.h) != h or row.fmt != fmt:
-                raise ValueError(
-                    "build_level: sibling tiles disagree on w/h/fmt "
-                    f"({row.w}x{row.h} {row.fmt} vs {w}x{h} {fmt}); "
-                    "tiles at one res must share the pixel grid")
             arr = codec.decode(row.bytes, w, h, fmt)
             if canvas is None:
                 nb = len(arr)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vrtility_spark import codec
+from vrtility_spark.composite import MAX_STACK_BYTES, _empty_frame, cell_stack
 
 
 def hampel_np(X: np.ndarray, k: int, t0: float = 3.0,
@@ -253,11 +254,9 @@ def whittaker(df: DataFrame, lam: float = 5.0, d: int = 2,
 
 M2M_SCHEMA = (
     "image_id string, cell_id long, datetime timestamp, bytes binary, "
-    "w int, h int, fmt string, nodata double, caption string"
+    "w int, h int, fmt string, nodata double, caption string, "
+    "band_nodata array<double>"
 )
-
-
-from vrtility_spark.composite import MAX_STACK_BYTES  # one shared budget
 
 
 def singleband_m2m(df: DataFrame,
@@ -266,71 +265,46 @@ def singleband_m2m(df: DataFrame,
                    max_stack_bytes: int | None = MAX_STACK_BYTES,
                    out_fmt: str | None = None,
                    out_nodata: float = -9999.0) -> DataFrame:
-    """Grouped many-to-many map: per cell, stack the time series, apply
-    ``m2m_fun`` to each band's (time × pixels) matrix, emit one row per
-    input timestep — the ``singleband_m2m`` driver
-    (R/singleband-many-to-many.R:138-257) as a single
-    ``groupBy().applyInPandas`` with exploded output. The per-timestep
-    sink becomes ``write.partitionBy("datetime")``.
+    """Grouped many-to-many map: per cell, stack the time series
+    (:func:`composite.cell_stack`), apply ``m2m_fun`` to each band's
+    (time × pixels) matrix, emit one row per stacked timestep — the
+    ``singleband_m2m`` routine (R/singleband-many-to-many.R:138-257) as a
+    single ``groupBy().applyInPandas`` with exploded output. The
+    per-timestep sink becomes ``write.partitionBy("datetime")``.
 
     ``out_fmt`` re-types the per-timestep payloads (e.g. ``"rawf32"``
-    with the ``out_nodata`` sentinel) for kernels whose outputs leave
-    the input's integer range — signed decomposition components would
-    be destroyed by a uint16 re-encode; default keeps the input codec
-    (the smoother/filter contract).
+    with the ``out_nodata`` sentinel, ``band_nodata`` null) for kernels
+    whose outputs leave the input's integer range — signed
+    decomposition components would be destroyed by a uint16 re-encode;
+    default keeps the input codec and per-band sentinels (the
+    smoother/filter contract).
     """
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("datetime", kind="mergesort").reset_index(drop=True)
-        # same loud mixed-profile guard as composite: re-encoding int16
-        # scenes with a uint16 first-row profile would silently corrupt
-        if (pdf.w.nunique() > 1 or pdf.h.nunique() > 1
-                or pdf.fmt.nunique() > 1
-                or pdf.nodata.nunique(dropna=False) > 1):
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: scenes disagree on pixel "
-                f"grid/codec/nodata (w={sorted(pdf.w.unique())}, "
-                f"h={sorted(pdf.h.unique())}, fmt={sorted(pdf.fmt.unique())}, "
-                f"nodata={sorted(pdf.nodata.unique())}); "
-                "normalize them onto one target grid/profile first")
-        nodata = float(pdf.nodata.iloc[0])
-        w, h, fmt = int(pdf.w.iloc[0]), int(pdf.h.iloc[0]), pdf.fmt.iloc[0]
-        dtype = codec.dtype_for(fmt)
-        # same RAM guard as composite (R/tiling.R:41-64 twin): a m2m
-        # group materializes the full (T,B,H,W) float stack in one task
-        nb_est = codec.plane_count(pdf.bytes.iloc[0], w, h, fmt) or 1
-        est = len(pdf) * nb_est * h * w * 8
-        if max_stack_bytes is not None and est > max_stack_bytes:
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: m2m stack needs "
-                f"~{est / 2**30:.2f} GiB ({len(pdf)} scenes x {nb_est} "
-                f"bands x {h}x{w} px x float64), over max_stack_bytes "
-                f"({max_stack_bytes / 2**30:.2f} GiB). Split spatially "
-                "with composite.split_to_child_cells(df, k) before the "
-                "shuffle, or raise max_stack_bytes on a larger executor.")
-        stack = np.stack([
-            codec.to_float_masked(codec.decode(r.bytes, r.w, r.h, r.fmt), nodata)
-            for r in pdf.itertuples(index=False)
-        ])  # (T,B,H,W)
+        pdf, stack, nd = cell_stack(pdf, key,
+                                    max_stack_bytes=max_stack_bytes)
+        if stack is None:
+            return _empty_frame(M2M_SCHEMA)
         Tn, B, H, W = stack.shape
         filtered = np.stack([
             m2m_fun(stack[:, b].reshape(Tn, H * W)).reshape(Tn, H, W)
             for b in range(B)
         ], axis=1)
-        o_fmt = out_fmt or fmt
-        o_nd = out_nodata if out_fmt else nodata
-        o_dtype = codec.dtype_for(o_fmt) if out_fmt else dtype
-        rows = []
-        for t in range(Tn):
-            rows.append({
-                "image_id": pdf.image_id.iloc[t],
-                "cell_id": int(pdf[key].iloc[t]),
-                "datetime": pdf.datetime.iloc[t],
-                "bytes": codec.encode(
-                    codec.from_float(filtered[t], o_nd, o_dtype), o_fmt),
-                "w": w, "h": h, "fmt": o_fmt, "nodata": o_nd,
-                "caption": pdf.caption.iloc[t],
-            })
-        return pd.DataFrame(rows)
+        if out_fmt:
+            o_fmt, o_nd, o_scalar = out_fmt, out_nodata, out_nodata
+        else:
+            o_fmt, o_nd, o_scalar = (pdf.fmt.iloc[0], nd,
+                                     float(pdf.nodata.iloc[0]))
+        o_bn = None if np.isscalar(o_nd) else list(o_nd)
+        o_dtype = codec.dtype_for(o_fmt)
+        return pd.DataFrame([{
+            "image_id": pdf.image_id.iloc[t],
+            "cell_id": int(pdf[key].iloc[t]),
+            "datetime": pdf.datetime.iloc[t],
+            "bytes": codec.encode(
+                codec.from_float(filtered[t], o_nd, o_dtype), o_fmt),
+            "w": W, "h": H, "fmt": o_fmt, "nodata": o_scalar,
+            "caption": pdf.caption.iloc[t], "band_nodata": o_bn,
+        } for t in range(Tn)])
 
     return df.groupBy(key).applyInPandas(run, schema=M2M_SCHEMA)
 
@@ -352,8 +326,10 @@ def gapfill_periods(df: DataFrame, key: str = "cell_id",
     following period) — the standard cloud-gap-filled monthly/quarterly
     product step after :func:`composite.composite_by_period`.
 
-    Spark-first shape: one ``groupBy(cell)`` over composites whose
-    group size is the PERIOD COUNT (a decade of months is 120 rows),
+    Spark-first shape: one ``groupBy(cell)`` read through
+    :func:`composite.cell_stack` with ``order`` as its time axis (its
+    group rules apply: a null ``order`` row drops), over composites
+    whose group size is the PERIOD COUNT (a decade of months is 120 rows),
     never the scene count — the heavy scene reduction already happened
     in the periodic composite's single shuffle. All non-payload columns
     (``period``, ``n_scenes``, captions, …) pass through untouched:
@@ -367,42 +343,21 @@ def gapfill_periods(df: DataFrame, key: str = "cell_id",
     out_schema = df.schema
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        bn_keys = codec.band_nodata_keys(pdf)
-        if (pdf.w.nunique() > 1 or pdf.h.nunique() > 1
-                or pdf.fmt.nunique() > 1
-                or pdf.nodata.nunique(dropna=False) > 1 or len(bn_keys) > 1):
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: period composites "
-                "disagree on pixel grid/codec/nodata/band_nodata; "
-                "normalize them onto one profile first")
-        first = next(pdf.itertuples(index=False))
-        w, h, fmt = int(first.w), int(first.h), first.fmt
-        nb = codec.plane_count(pdf.bytes.iloc[0], w, h, fmt) or 1
-        est = len(pdf) * nb * h * w * 8
-        if max_stack_bytes is not None and est > max_stack_bytes:
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: gap-fill stack needs "
-                f"~{est / 2**30:.2f} GiB, over max_stack_bytes "
-                f"({max_stack_bytes / 2**30:.2f} GiB); split spatially "
-                "with composite.split_to_child_cells before the "
-                "periodic composite, or raise the budget.")
-        nd = codec.row_band_meta(first, nb, "band_nodata", first.nodata)
-        stack = np.stack([
-            codec.to_float_masked(codec.decode(r.bytes, w, h, fmt), nd)
-            for r in pdf.itertuples(index=False)])  # (P,B,H,W)
-        P = stack.shape[0]
+        pdf, stack, nd = cell_stack(pdf, key, order=order,
+                                    max_stack_bytes=max_stack_bytes)
+        if stack is None:
+            return pdf
+        P = stack.shape[0]  # (P,B,H,W)
         M = stack.reshape(P, -1)
         M = locf_np(M)
         if backfill:
             M = locf_np(M[::-1])[::-1]
         filled = M.reshape(stack.shape)
+        fmt = pdf.fmt.iloc[0]
         dtype = codec.dtype_for(fmt)
-        pdf = pdf.copy()
-        pdf["bytes"] = [
+        return pdf.assign(bytes=[
             codec.encode(codec.from_float(filled[i], nd, dtype), fmt)
-            for i in range(P)]
-        return pdf
+            for i in range(P)])
 
     return df.groupBy(key).applyInPandas(run, schema=out_schema)
 

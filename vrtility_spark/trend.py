@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame
 
 from vrtility_spark import codec
 from vrtility_spark.composite import (
-    MAX_ACTIVE_BYTES, MAX_STACK_BYTES, _profile_key)
+    MAX_ACTIVE_BYTES, MAX_STACK_BYTES, _check_profile, _check_scene_profile,
+    _decode_scene, _empty_frame, _profile_key, cell_stack)
 
 #: fixed time origin: ``t`` is fractional Julian years since this
 #: instant, so intercepts are comparable across jobs and the partial
@@ -97,30 +98,6 @@ def trend_np(ts_years: np.ndarray, stack: np.ndarray) -> np.ndarray:
     return trend_finalize(acc)
 
 
-def _check_profile(pdf: pd.DataFrame, key: str) -> None:
-    bn_keys = codec.band_nodata_keys(pdf)
-    if (pdf.w.nunique() > 1 or pdf.h.nunique() > 1
-            or pdf.fmt.nunique() > 1
-            or pdf.nodata.nunique(dropna=False) > 1 or len(bn_keys) > 1):
-        raise ValueError(
-            f"cell {int(pdf[key].iloc[0])}: scenes disagree on pixel "
-            "grid/codec/nodata/band_nodata; normalize them onto one "
-            "target grid/profile first")
-
-
-def _decoded(row, scene_fn):
-    arr = codec.decode(row.bytes, row.w, row.h, row.fmt)
-    nd = codec.row_band_meta(row, len(arr), "band_nodata", row.nodata)
-    if scene_fn is not None:
-        n0 = len(arr)
-        arr = scene_fn(arr, nd)
-        # plane-dropping scene_fns (drop_mask_band=True) drop TRAILING
-        # planes; trim the per-band sentinel array alongside
-        if isinstance(nd, np.ndarray) and len(arr) != n0:
-            nd = nd[: len(arr)]
-    return codec.to_float_masked(arr, nd)
-
-
 #: finite output sentinel (gdaldem's classic -9999, same rationale as
 #: terrain.py:149): a NaN ``nodata`` double surfaces as NULL through
 #: the Arrow grouped-map boundary, breaking float(row.nodata) in
@@ -139,59 +116,49 @@ def _out_row(cell_id, planes, w, h, n, dt_min, dt_max):
     }
 
 
-def trend_stack(df: DataFrame, key: str = "cell_id",
-                scene_fn: Callable | None = None,
-                max_stack_bytes: int | None = MAX_STACK_BYTES) -> DataFrame:
-    """Direct grouped-stack path: materializes the (T,B,H,W) stack per
-    cell (same RAM guard as the holistic composites) — the bit-parity
-    reference for :func:`trend_incremental` at small T."""
+def _stack_map(df: DataFrame, key: str, scene_fn, max_stack_bytes,
+               kernel: Callable[[np.ndarray, np.ndarray], np.ndarray],
+               hatch: str = "") -> DataFrame:
+    """One cell-keyed grouped map over :func:`composite.cell_stack`
+    (the group rules live there) emitting one ``rawf32`` tile of
+    ``kernel(t_years, stack)`` per cell — the stack path of every
+    per-pixel time statistic (trend, harmonic, MK/Sen, breaks)."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = (pdf.sort_values("datetime", kind="mergesort")
-               .reset_index(drop=True))
-        _check_profile(pdf, key)
-        w, h, fmt = int(pdf.w.iloc[0]), int(pdf.h.iloc[0]), pdf.fmt.iloc[0]
-        nb = codec.plane_count(pdf.bytes.iloc[0], w, h, fmt) or 1
-        est = len(pdf) * nb * h * w * 8
-        if max_stack_bytes is not None and est > max_stack_bytes:
-            raise ValueError(
-                f"cell {int(pdf[key].iloc[0])}: trend stack needs "
-                f"~{est / 2**30:.2f} GiB, over max_stack_bytes "
-                f"({max_stack_bytes / 2**30:.2f} GiB). Use "
-                "mode='incremental' (never stacks) or split spatially "
-                "with composite.split_to_child_cells first.")
-        stack = np.stack([_decoded(r, scene_fn)
-                          for r in pdf.itertuples(index=False)])
+        pdf, stack, _ = cell_stack(pdf, key, scene_fn,
+                                   max_stack_bytes=max_stack_bytes,
+                                   hatch=hatch)
+        if stack is None:
+            return _empty_frame(TREND_SCHEMA)
         ts = t_years(pdf.datetime.values.astype("datetime64[ns]")
                      .astype(np.int64))
-        planes = trend_np(ts, stack)
         return pd.DataFrame([_out_row(
-            pdf[key].iloc[0], planes, w, h, len(pdf),
-            pdf.datetime.min(), pdf.datetime.max())])
+            pdf[key].iloc[0], kernel(ts, stack), pdf.w.iloc[0],
+            pdf.h.iloc[0], len(pdf), pdf.datetime.min(),
+            pdf.datetime.max())])
 
     return df.groupBy(key).applyInPandas(run, schema=TREND_SCHEMA)
 
 
-def trend_partials(df: DataFrame, key: str = "cell_id",
-                   scene_fn: Callable | None = None,
-                   max_active_cells: int = 64,
-                   max_active_bytes: int = MAX_ACTIVE_BYTES) -> DataFrame:
-    """Stage 1: narrow per-partition accumulator map. Each state is a
-    ``(5, B, H, W)`` float64 sufficient-statistics block; states flush
-    early past either working-set bound (cells or bytes), so task
-    memory is capped regardless of scenes per cell — and this stage's
-    output is the ONLY thing the trend shuffles."""
+def _stat_partials(df: DataFrame, key: str, scene_fn, q: int,
+                   fold: Callable[[np.ndarray, float, np.ndarray], None],
+                   max_active_cells: int, max_active_bytes: int
+                   ) -> DataFrame:
+    """Stage 1 of an incremental fit: a narrow per-partition map holding
+    one ``(q, B, H, W)`` float64 sufficient-statistics block per active
+    cell; ``fold(acc, t_years, data)`` adds one decoded scene in place.
+    States flush early past either working-set bound (cells or bytes),
+    so task memory is capped regardless of scenes per cell — and this
+    stage's output is the ONLY thing the fit shuffles. Scenes follow
+    :func:`composite.cell_stack`'s rules: a null datetime drops, one
+    profile per cell."""
 
     def partials(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         states: dict[int, list] = {}  # cell -> [profile, acc, n, lo, hi]
 
-        def flush(keys=None):
-            keys = list(states) if keys is None else keys
-            if not keys:
-                return None
+        def flush():
             rows = []
-            for c in keys:
-                profile, acc, n, lo, hi = states.pop(c)
+            for c, (profile, acc, n, lo, hi) in states.items():
                 w, h, fmt, nd, bn = profile
                 rows.append({
                     "cell_id": int(c), "w": w, "h": h, "fmt": fmt,
@@ -205,50 +172,92 @@ def trend_partials(df: DataFrame, key: str = "cell_id",
                     "acc": acc.astype("<f8").tobytes(),
                     "dt_min": lo, "dt_max": hi,
                 })
+            states.clear()
             return pd.DataFrame(rows)
 
         for pdf in batches:
             for row in pdf.itertuples(index=False):
+                if pd.isna(row.datetime):
+                    continue
                 cell = int(getattr(row, key))
-                data = _decoded(row, scene_fn)
+                data = _decode_scene(row, scene_fn)
                 st = states.get(cell)
                 if st is None:
-                    acc = np.zeros((5,) + data.shape)
                     st = states[cell] = [
-                        _profile_key(row), acc, 0,
+                        _profile_key(row), np.zeros((q,) + data.shape), 0,
                         row.datetime, row.datetime]
-                elif st[0] != _profile_key(row):
-                    raise ValueError(
-                        f"cell {cell}: scenes disagree on pixel grid/"
-                        "codec/nodata/band_nodata; normalize them onto "
-                        "one target grid/profile first")
-                elif data.shape != st[1].shape[1:]:
-                    raise ValueError(
-                        f"cell {cell}: scene plane shape {data.shape} "
-                        f"disagrees with the accumulator "
-                        f"{st[1].shape[1:]} (mixed band counts)")
-                t = float(t_years(np.int64(pd.Timestamp(row.datetime).value)))
-                ok = ~np.isnan(data)
-                y = np.where(ok, data, 0.0)
-                acc = st[1]
-                acc[0] += ok
-                acc[1] += t * ok
-                acc[2] += (t * t) * ok
-                acc[3] += y
-                acc[4] += t * y
+                else:
+                    _check_scene_profile(st[0], row, cell)
+                    if data.shape != st[1].shape[1:]:
+                        raise ValueError(
+                            f"cell {cell}: scene plane shape {data.shape} "
+                            f"disagrees with the accumulator "
+                            f"{st[1].shape[1:]} (mixed band counts)")
+                fold(st[1], float(t_years(np.int64(
+                    pd.Timestamp(row.datetime).value))), data)
                 st[2] += 1
-                if row.datetime < st[3]:
-                    st[3] = row.datetime
-                if row.datetime > st[4]:
-                    st[4] = row.datetime
+                st[3] = min(st[3], row.datetime)
+                st[4] = max(st[4], row.datetime)
             tot = sum(s[1].nbytes for s in states.values())
-            if len(states) > max_active_cells or tot >= max_active_bytes:
+            if states and (len(states) > max_active_cells
+                           or tot >= max_active_bytes):
                 yield flush()
-        tail = flush()
-        if tail is not None:
-            yield tail
+        if states:
+            yield flush()
 
     return df.mapInPandas(partials, schema=_PARTIAL_SCHEMA)
+
+
+def _stat_merge(part: DataFrame, q: int,
+                finalize: Callable[[np.ndarray], np.ndarray]) -> DataFrame:
+    """Stage 2: sum each cell's partial blocks (elementwise) and
+    finalize them into the output tile."""
+
+    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        # cross-PARTITION profile agreement (each partial was checked
+        # internally)
+        _check_profile(pdf, "cell_id", "partials")
+        first = pdf.iloc[0]
+        shape = (q, int(first.nb), int(first.h), int(first.w))
+        acc = np.zeros(shape)
+        for b in pdf.acc:
+            acc += np.frombuffer(b, "<f8").reshape(shape)
+        return pd.DataFrame([_out_row(
+            first.cell_id, finalize(acc), first.w, first.h,
+            int(pdf.n_scenes.sum()), pdf.dt_min.min(), pdf.dt_max.max())])
+
+    return part.groupBy("cell_id").applyInPandas(merge, schema=TREND_SCHEMA)
+
+
+def _fold_trend(acc: np.ndarray, t: float, data: np.ndarray) -> None:
+    ok = ~np.isnan(data)
+    y = np.where(ok, data, 0.0)
+    acc[0] += ok
+    acc[1] += t * ok
+    acc[2] += (t * t) * ok
+    acc[3] += y
+    acc[4] += t * y
+
+
+def trend_stack(df: DataFrame, key: str = "cell_id",
+                scene_fn: Callable | None = None,
+                max_stack_bytes: int | None = MAX_STACK_BYTES) -> DataFrame:
+    """Direct grouped-stack path: materializes the (T,B,H,W) stack per
+    cell (:func:`composite.cell_stack`) — the bit-parity reference for
+    :func:`trend_incremental` at small T."""
+    return _stack_map(df, key, scene_fn, max_stack_bytes, trend_np,
+                      hatch="mode='incremental' (never stacks), ")
+
+
+def trend_partials(df: DataFrame, key: str = "cell_id",
+                   scene_fn: Callable | None = None,
+                   max_active_cells: int = 64,
+                   max_active_bytes: int = MAX_ACTIVE_BYTES) -> DataFrame:
+    """Stage 1: narrow per-partition accumulator map; each state is a
+    ``(5, B, H, W)`` block of ``n, Σt, Σt², Σy, Σt·y``
+    (see :func:`_stat_partials`)."""
+    return _stat_partials(df, key, scene_fn, 5, _fold_trend,
+                          max_active_cells, max_active_bytes)
 
 
 def trend_incremental(df: DataFrame, key: str = "cell_id",
@@ -258,30 +267,10 @@ def trend_incremental(df: DataFrame, key: str = "cell_id",
     """Bounded-memory trend: partial sufficient statistics per
     partition, merged per cell (elementwise sum), finalized in closed
     form — scenes never shuffle and no stack is ever materialized."""
-    part = trend_partials(df, key=key, scene_fn=scene_fn,
-                          max_active_cells=max_active_cells,
-                          max_active_bytes=max_active_bytes)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        bn_keys = codec.band_nodata_keys(pdf)
-        if (pdf.w.nunique() > 1 or pdf.h.nunique() > 1
-                or pdf.fmt.nunique() > 1 or pdf.nb.nunique() > 1
-                or pdf.nodata.nunique(dropna=False) > 1
-                or len(bn_keys) > 1):
-            raise ValueError(
-                f"cell {int(pdf.cell_id.iloc[0])}: partials disagree on "
-                "pixel grid/codec/nodata/band_nodata")
-        first = pdf.iloc[0]
-        shape = (5, int(first.nb), int(first.h), int(first.w))
-        acc = np.zeros(shape)
-        for b in pdf.acc:
-            acc += np.frombuffer(b, "<f8").reshape(shape)
-        planes = trend_finalize(acc)
-        return pd.DataFrame([_out_row(
-            first.cell_id, planes, first.w, first.h,
-            int(pdf.n_scenes.sum()), pdf.dt_min.min(), pdf.dt_max.max())])
-
-    return part.groupBy("cell_id").applyInPandas(merge, schema=TREND_SCHEMA)
+    return _stat_merge(trend_partials(df, key=key, scene_fn=scene_fn,
+                                      max_active_cells=max_active_cells,
+                                      max_active_bytes=max_active_bytes),
+                       5, trend_finalize)
 
 
 def trend(df: DataFrame, key: str = "cell_id",
