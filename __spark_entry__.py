@@ -297,7 +297,7 @@ def q_composite_scalars(spark, sf_dir):
 
 
 def q_knn(spark, sf_dir):
-    """J6 kNN via iterative ring expansion over the cell index."""
+    """J6 kNN over the cell index: one ring-count job, then one probe."""
     from vrtility_spark import knn as knn_mod
     pts = _events_points(spark, sf_dir)
     tiles = pts.select(
@@ -312,11 +312,7 @@ def q_knn(spark, sf_dir):
     )
     queries = spark.createDataFrame(
         KNN_QUERIES, "query_id string, zone long, x double, y double, k int")
-    # metadata-only parquet count: sizes the count-phase disk without
-    # materializing the tile cache first
-    n_tiles = _t(spark, sf_dir, "events").count()
-    out = knn_mod.knn_tiles(tiles, queries, res=CELL_RES, max_rings=64,
-                            n_tiles_hint=n_tiles)
+    out = knn_mod.knn_tiles(tiles, queries, res=CELL_RES, max_rings=64)
     return out.select("query_id", "image_id",
                       F.round("dist", 6).alias("dist_r"), "rank")
 

@@ -693,3 +693,10 @@ def test_twi_pipeline_verb_and_bundle(spark, tmp_path, tiny_images):
     a = {r.cell_id: bytes(r.bytes) for r in rows}
     b = {r.cell_id: bytes(r.bytes) for r in replay.df.collect()}
     assert a == b
+
+
+@pytest.mark.parametrize("fill", [True, False])
+def test_twi_from_dem_empty_table_raises(spark, fill):
+    df = spark.createDataFrame([], TILE_SCHEMA)
+    with pytest.raises(ValueError, match="empty"):
+        hydrology.twi_from_dem(df, fill=fill)

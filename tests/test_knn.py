@@ -197,3 +197,91 @@ def test_distributed_knn_never_collects_queries(spark, monkeypatch):
     d = np.hypot(xy[:, 0] - qx, xy[:, 1] - qy)
     want = sorted(range(n), key=lambda i: (d[i], tiles_pdf.image_id[i]))[:3]
     assert [i for _, i in got] == [tiles_pdf.image_id[i] for i in want]
+
+
+def _point_tiles(rng, n, zones, res):
+    """``n`` point footprints per zone, half clustered in one corner
+    and half uniform, with their cell ids at ``res``."""
+    import pandas as pd
+    from vrtility_spark import cells
+
+    parts = []
+    for z in zones:
+        xy = np.vstack([rng.uniform(0, 2e5, (n // 2, 2)),
+                        rng.uniform(0, cells.ZONE_SPAN, (n - n // 2, 2))])
+        parts.append(pd.DataFrame({
+            "image_id": [f"z{z}_{i:04d}" for i in range(n)], "zone": z,
+            "xmin": xy[:, 0], "xmax": xy[:, 0],
+            "ymin": xy[:, 1], "ymax": xy[:, 1],
+            "caption": "c", "phash": np.arange(n, dtype=np.int64),
+            "cell_id": cells.xy_to_cell_np(z, xy[:, 0], xy[:, 1], res)}))
+    return pd.concat(parts, ignore_index=True)
+
+
+def _queries(rng, n, zones):
+    import pandas as pd
+    from vrtility_spark import cells
+
+    return pd.DataFrame({
+        "query_id": [f"q{j}" for j in range(n)],
+        "zone": rng.choice(zones, n),
+        "x": rng.uniform(0, cells.ZONE_SPAN, n),
+        "y": rng.uniform(0, cells.ZONE_SPAN, n),
+        "k": rng.integers(1, 12, n)})
+
+
+def test_knn_plan_has_no_python_rdd(spark):
+    """The count and probe relations reach Spark through Arrow
+    (LocalTableScan), never as a Python RDD (Scan ExistingRDD)."""
+    rng = np.random.default_rng(11)
+    tiles = spark.createDataFrame(_point_tiles(rng, 200, [30], 6))
+    queries = spark.createDataFrame(_queries(rng, 4, [30]))
+    out = knn.knn_tiles(tiles, queries, res=6)
+    assert out.count() > 0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_knn_one_query_runs_at_most_seven_jobs(spark):
+    rng = np.random.default_rng(12)
+    tiles = spark.createDataFrame(_point_tiles(rng, 500, [30], 8)).cache()
+    tiles.count()
+    queries = spark.createDataFrame(_queries(rng, 1, [30]))
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-jobs", "one kNN query")
+    try:
+        rows = knn.knn_tiles(tiles, queries, res=8).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("knn-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        tiles.unpersist()
+    assert rows and len(jobs) <= 7, jobs
+
+
+def test_knn_many_queries_match_bruteforce(spark):
+    """256 queries over 3 zones, k in 1..11: the per-query count
+    predicates stay exact well past a short probe list."""
+    rng = np.random.default_rng(13)
+    zones = [30, 31, 32]
+    tiles_pdf = _point_tiles(rng, 150, zones, 5)
+    qs = _queries(rng, 256, zones)
+    got = knn.knn_tiles(spark.createDataFrame(tiles_pdf),
+                        spark.createDataFrame(qs), res=5).toPandas()
+    exp = oracle.brute_force_knn(tiles_pdf, qs)
+    assert len(got) == qs.k.sum()
+    for qid, g in got.groupby("query_id"):
+        g = g.sort_values("rank")
+        assert list(g.image_id) == [i for _, i in exp[qid]], qid
+        np.testing.assert_allclose(g.dist.values, [d for d, _ in exp[qid]],
+                                   rtol=1e-12)
+
+
+def test_knn_empty_queries(spark):
+    rng = np.random.default_rng(14)
+    tiles = spark.createDataFrame(_point_tiles(rng, 20, [30], 5))
+    queries = spark.createDataFrame(_queries(rng, 0, [30]),
+                                    "query_id string, zone long, x double,"
+                                    " y double, k long")
+    out = knn.knn_tiles(tiles, queries, res=5)
+    assert out.schema == spark.createDataFrame([], knn._OUT_SCHEMA).schema
+    assert out.count() == 0

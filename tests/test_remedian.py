@@ -149,3 +149,20 @@ def test_remedian_router_and_errors(spark, celled):
         composite.composite(celled, "mean", mode="remedian")
     with pytest.raises(ValueError, match="batch"):
         composite.composite_remedian(celled, batch=2)
+
+
+def test_remedian_drops_null_datetime_scenes(spark, celled):
+    """A scene with no datetime has no place in the time order: the
+    remedian drops it, as every cell_stack-based composite does."""
+    from pyspark.sql import functions as F
+
+    victim = celled.select("image_id").orderBy("image_id").first()[0]
+    nat = celled.withColumn(
+        "datetime", F.when(F.col("image_id") == victim, None)
+        .otherwise(F.col("datetime")))
+    without = celled.where(F.col("image_id") != victim)
+
+    def run(df):
+        return {r.cell_id: r.asDict() for r in
+                composite.composite_remedian(df, batch=3).collect()}
+    assert run(nat) == run(without)

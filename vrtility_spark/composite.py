@@ -1540,7 +1540,9 @@ def composite_remedian(
         if acc is not None:
             yield pd.DataFrame([finalize()])
 
-    ordered = (df.repartition(F.col(key))
+    # null-datetime scenes have no place in time: dropped, as cell_stack does
+    ordered = (df.where(F.col("datetime").isNotNull())
+               .repartition(F.col(key))
                .sortWithinPartitions(key, "datetime", "image_id"))
     return ordered.mapInPandas(stream, schema=COMPOSITE_SCHEMA)
 

@@ -432,14 +432,18 @@ def twi_from_dem(dem_df: DataFrame, pixel_size: float | None = None,
     derivative branches share the filled DEM; ``pixel_size`` defaults
     to the grid's uniform GSD derived from the FIRST tile row (all
     tiles on one warp grid share it — mixed grids must pass it
-    explicitly)."""
+    explicitly). Deriving it runs one eager ``first()`` job and raises
+    ``ValueError`` on an empty DEM table."""
     from vrtility_spark import cells, terrain
-    dem = fill_sinks(dem_df, key=key) if fill else dem_df
     if pixel_size is None:
         first = dem_df.select(key, "w").first()
+        if first is None:
+            raise ValueError("twi_from_dem: the DEM tile table is empty, "
+                             "so there is no tile to derive pixel_size from")
         _, res, _, _ = (int(v) for v in
                         cells.decode_np(first[0]))
         pixel_size = cells.cell_size(res) / int(first[1])
+    dem = fill_sinks(dem_df, key=key) if fill else dem_df
     codes = terrain.terrain(dem, "flowdir", key=key)
     acc = flow_accumulation(codes, key=key, **acc_kwargs)
     slope = terrain.terrain(dem, "slope", key=key)

@@ -1,39 +1,47 @@
-"""kNN tile queries via a two-phase count-then-probe cell search.
+"""kNN tile queries: one exact count job, then one probe.
 
 Required by BASELINE.json's ``north_rule`` (the reference has no kNN
 operator — SURVEY.md §2.3 J6). For each query point, find the K
 nearest scene tiles (distance = query point → tile center), exactly.
 
-Design (two Spark jobs total, loop-free in the common case):
+:func:`knn_tiles` works in three steps, with no rounds:
 
-1. **Count phase** — enumerate candidate cells in a Chebyshev disk
-   around each query's cell (driver-side: the query set is a bounded
-   user-supplied probe list by contract, never the tile table) and run
-   ONE aggregation job: ``broadcast(cells) ⋈ tiles → count per
-   (query, cell)``. The result is tiny (≤ cells probed) and gives the
-   driver, per query, the smallest radius ``r0`` whose disk already
-   holds ≥ K tiles. Queries in locally sparse regions double the count
-   radius and re-count — but each extra round is a cheap counting
-   aggregate, not a candidate materialization.
-2. **Probe phase** — the disk(r0) guarantee bounds the Kth distance by
+1. **Collect the queries** once, through Arrow (``toPandas``): the
+   query set is a bounded, user-supplied probe list, never the tile
+   table.
+2. **Count** — ONE aggregation job. ``cell_id`` range predicates keep
+   the tiles inside each query's Chebyshev box of radius
+   ``max_rings``; they are counted per cell and collected, at most
+   ``(2·max_rings+1)²`` rows per query. NumPy turns each query's cell
+   counts into cumulative ring counts: ``r0`` is the smallest radius
+   whose disk holds ≥ K tiles, or ``max_rings`` when the box holds
+   fewer (the best bounded answer, or the whole zone when the box
+   covers it).
+3. **Probe** — the disk(r0) guarantee bounds the Kth distance by
    ``d0 = (r0+1)·cell_size·√2`` (query anywhere inside its cell, tile
    anywhere inside the farthest disk cell), so every true neighbour
-   lies within Chebyshev cell radius ``r1 = ceil(√2·(r0+1))``. One
-   broadcast join on the disk(r1) cells + a per-query ``row_number``
-   window over distance produces the exact top-K.
+   lies within Chebyshev cell radius ``r1 = ceil(√2·(r0+1))``. The
+   disk(r1) cells, tagged with their query's metadata, reach Spark as
+   an Arrow-built pandas frame (a ``LocalTableScan``, no Python RDD);
+   one broadcast join plus a per-query ``row_number`` over
+   ``(dist, image_id)`` gives the exact top-K. A disk(r1) that covers
+   its zone becomes a per-zone equi-join instead of a cell list.
 
-At 10^12-tile scale both phases stay cheap: the count job is a
-map-side-combined aggregate over a cached/bucketed tile table, and the
-probe fanout is bounded by K / local density — never the table size.
-When a probe disk would cover most of a zone (fewer than K tiles in
-the zone), the join degrades gracefully to a per-zone equi-join
-instead of enumerating cells.
+Nothing is persisted or checkpointed and the catalog is never counted;
+the result is a lazy plan. Driver work is bounded by the query count
+and ``max_rings``, never the table size.
+
+:func:`knn_tiles_distributed` keeps the query table distributed for
+10⁶+-row query sets, at the price of count rounds.
 """
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -44,6 +52,7 @@ _SQRT2 = math.sqrt(2.0)
 
 _OUT_SCHEMA = ("query_id string, image_id string, dist double, rank int, "
                "caption string, phash long")
+_META_SCHEMA = "query_id string, qx double, qy double, k int"
 
 
 def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
@@ -181,7 +190,6 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
             break
         rc = min(2 * rc, rc_cap)
 
-    import functools
     r0df = functools.reduce(DataFrame.unionByName, solved)
 
     # ---- phase 2: probe + exact rank (same guarantee as knn_tiles) ------
@@ -222,194 +230,104 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
     return result
 
 
-def _qcell(q, res: int):
-    """Clipped (ix, iy) of the query's own cell."""
-    n = (1 << res) - 1
-    size = cell_size(res)
-    ix = min(max(int(q.x // size), 0), n)
-    iy = min(max(int(q.y // size), 0), n)
-    return ix, iy
-
-
-def _disk_rows(q, res: int, r_from: int, r_to: int):
-    """(query_id, cell_id) pairs for Chebyshev rings in (r_from, r_to]."""
-    n = (1 << res) - 1
-    qix, qiy = _qcell(q, res)
-    out = []
-    for ix in range(max(0, qix - r_to), min(n, qix + r_to) + 1):
-        for iy in range(max(0, qiy - r_to), min(n, qiy + r_to) + 1):
-            if max(abs(ix - qix), abs(iy - qiy)) <= r_from:
-                continue
-            out.append((q.query_id, int(encode_np(q.zone, res, ix, iy))))
-    return out
-
-
-def _covers_zone(q, res: int, r: int) -> bool:
-    n = (1 << res) - 1
-    qix, qiy = _qcell(q, res)
-    return (qix - r <= 0 and qiy - r <= 0 and qix + r >= n and qiy + r >= n)
-
-
-def _min_disk_radius(q, res: int, qcounts: dict, counted_r: int) -> int | None:
-    """Smallest r ≤ counted_r with ≥ k tiles in disk(r); None if none.
-    ``qcounts`` is THIS query's sparse (cell → n) map — per-query keying
-    keeps the driver loop O(own cells), not O(all queries' cells)."""
-    qix, qiy = _qcell(q, res)
-    total = 0
-    by_ring: dict[int, int] = {}
-    for cell, c in qcounts.items():
-        ix = cell % _B
-        iy = (cell // _B) % _B
-        ring = max(abs(ix - qix), abs(iy - qiy))
-        by_ring[ring] = by_ring.get(ring, 0) + c
-    for r in range(0, counted_r + 1):
-        total += by_ring.get(r, 0)
-        if total >= q.k:
-            return r
-    return None
+def _box(qix, qiy, r, nmax: int):
+    """Bounds ``(x0, x1, y0, y1)`` of each query's Chebyshev box of
+    radius ``r`` around its cell, clipped to the zone."""
+    return (np.maximum(qix - r, 0), np.minimum(qix + r, nmax),
+            np.maximum(qiy - r, 0), np.minimum(qiy + r, nmax))
 
 
 def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
-              max_rings: int = 64, initial_radius: int | None = None,
-              n_tiles_hint: int | None = None,
-              persist: bool = True, reliable: bool = False,
+              max_rings: int = 64, reliable: bool = False,
               checkpoint_dir: str | None = None) -> DataFrame:
     """K nearest tiles per query row (exact).
 
     ``tiles`` must carry ``cell_id`` at ``res`` (see
     :func:`vrtility_spark.warp.assign_cells`) plus ``image_id``,
     ``xmin..ymax``, ``caption``, ``phash``. ``queries`` carries
-    ``query_id, zone, x, y, k``.
+    ``query_id, zone, x, y, k`` and is collected to the driver (an
+    ad-hoc probe list; :func:`knn_tiles_distributed` keeps it
+    distributed). ``max_rings`` caps the search radius in cells: a
+    query with fewer than K tiles inside the cap gets the best
+    bounded-partial answer.
 
-    ``persist=True`` caches the (metadata-only) tile projection so the
-    count and probe phases share one scan — right for ad-hoc tables.
-    At 1e12 rows pass ``persist=False`` with a tile table WRITTEN
-    bucketed/partitioned by ``cell_id`` (storage.write_images_bucketed):
-    both phases then prune to the probed cells at the source instead of
-    materializing the projection.
+    The result is a lazy plan; ``reliable=True`` checkpoints it to
+    durable storage instead (see :mod:`vrtility_spark.checkpointing`).
 
     Returns ``(query_id, image_id, dist, rank, caption, phash)``.
     """
     spark = tiles.sparkSession
-    size = cell_size(res)
-    nmax = (1 << res) - 1
     tiles_p = tiles.select(
         "cell_id", "image_id", "caption", "phash",
         ((F.col("xmin") + F.col("xmax")) / 2).alias("tcx"),
-        ((F.col("ymin") + F.col("ymax")) / 2).alias("tcy"),
-    )
-    if persist:
-        tiles_p = tiles_p.persist()
-    qrows = queries.select("query_id", "zone", "x", "y", "k").collect()
-    if not qrows:
-        if persist:
-            tiles_p.unpersist()
+        ((F.col("ymin") + F.col("ymax")) / 2).alias("tcy"))
+    q = queries.select(
+        "query_id", F.col("zone").cast("long").alias("zone"),
+        F.col("x").cast("double").alias("qx"),
+        F.col("y").cast("double").alias("qy"),
+        F.col("k").cast("int").alias("k")).toPandas()
+    if q.empty:
         return spark.createDataFrame([], _OUT_SCHEMA)
-    qmeta = spark.createDataFrame(
-        [(q.query_id, float(q.x), float(q.y), int(q.k)) for q in qrows],
-        "query_id string, qx double, qy double, k int")
+    size = cell_size(res)
+    nmax = (1 << res) - 1
+    zone, k = q.zone.to_numpy(np.int64), q.k.to_numpy()
+    qix = np.clip(np.floor(q.qx.to_numpy() / size), 0, nmax).astype(np.int64)
+    qiy = np.clip(np.floor(q.qy.to_numpy() / size), 0, nmax).astype(np.int64)
 
-    # ---- phase 1: count --------------------------------------------------
-    if initial_radius is None:
-        n_tiles = n_tiles_hint if n_tiles_hint is not None else tiles_p.count()
-        zones = len({q.zone for q in qrows}) or 1
-        density = max(n_tiles / (zones * (1 << res) ** 2), 1e-9)
-        # 4x oversampling absorbs local sparsity (lattice voids) so the
-        # common case is ONE counting round
-        want_cells = 4.0 * max(q.k for q in qrows) / density
-        initial_radius = max(2, math.ceil((math.sqrt(want_cells) - 1) / 2))
-    # max_rings bounds the COUNT radius (and thus driver-side cell
-    # enumeration and the probe fanout): with k-1 tiles in a sparse
-    # zone at high res, an unbounded search would enumerate the whole
-    # zone's cells driver-side; past the cap we return the best
-    # partial answer, like any bounded-radius kNN. The density-derived
-    # initial_radius is clamped to the same cap — a sparse tile table
-    # at high res would otherwise size the FIRST count round to a
-    # (2r+1)^2 disk of hundreds of millions of driver-side cells.
-    rc_cap = min(nmax, int(max_rings))
-    rc = min(int(initial_radius), rc_cap)
+    # ---- count: tiles per cell inside every query's max_rings box -------
+    rc = min(nmax, int(max_rings))
+    x0, x1, y0, y1 = _box(qix, qiy, rc, nmax)
+    lo, hi = encode_np(zone, res, x0, y0), encode_np(zone, res, x1, y1)
+    cell, ix = F.col("cell_id"), F.col("cell_id") % _B
+    in_box = functools.reduce(operator.or_, (
+        cell.between(int(a), int(b)) & ix.between(int(c), int(d))
+        for a, b, c, d in zip(lo, hi, x0, x1)))
+    counts = (tiles_p.where(in_box).groupBy("cell_id").count()
+              .toPandas().sort_values("cell_id"))
+    cid = counts.cell_id.to_numpy(np.int64)
+    n = counts["count"].to_numpy(np.int64)
+    r0 = np.full(len(q), rc)  # < K tiles within the cap: take them all
+    for j in range(len(q)):
+        a, b = np.searchsorted(cid, lo[j]), np.searchsorted(cid, hi[j], "right")
+        ring = np.maximum(np.abs(cid[a:b] % _B - qix[j]),
+                          np.abs(cid[a:b] // _B % _B - qiy[j]))
+        filled = np.bincount(ring, n[a:b], rc + 1)[:rc + 1].cumsum() >= k[j]
+        if filled[-1]:
+            r0[j] = filled.argmax()
 
-    counts: dict[str, dict[int, int]] = {q.query_id: {} for q in qrows}
-    counted: dict[str, int] = {q.query_id: -1 for q in qrows}
-    r0: dict[str, int] = {}
-    pending = list(qrows)
-    while pending:
-        rows = []
-        for q in pending:
-            rows.extend(_disk_rows(q, res, counted[q.query_id], rc))
-        if rows:
-            cand = spark.createDataFrame(rows, "query_id string, cand_cell long")
-            got = (F.broadcast(cand)
-                   .join(tiles_p, cand.cand_cell == tiles_p.cell_id, "inner")
-                   .groupBy("query_id", "cand_cell")
-                   .agg(F.count("*").alias("n")).collect())
-            for row in got:
-                counts[row.query_id][row.cand_cell] = row.n
-        still, need = [], 2 * rc
-        for q in pending:
-            counted[q.query_id] = rc
-            r = _min_disk_radius(q, res, counts[q.query_id], rc)
-            if r is not None:
-                r0[q.query_id] = r
-            elif _covers_zone(q, res, rc):
-                r0[q.query_id] = rc  # < k tiles in the whole zone: take all
-            else:
-                still.append(q)
-                # adaptive jump: scale the radius by the observed local
-                # density shortfall (√(k/m) area growth) instead of
-                # blind doubling — sparse-void queries converge in one
-                # extra round instead of O(log) rounds
-                m = sum(counts[q.query_id].values())
-                est = math.ceil(rc * math.sqrt(q.k / max(m, 0.5))) + 1
-                need = max(need, est)
-        pending = still
-        if rc >= rc_cap:
-            break
-        rc = min(need, rc_cap)
-    for q in qrows:  # bounded search exhausted: best partial answer
-        r0.setdefault(q.query_id, counted[q.query_id])
-
-    # ---- phase 2: probe + exact rank ------------------------------------
-    probe_rows, zone_rows = [], []
-    for q in qrows:
-        r1 = min(math.ceil(_SQRT2 * (r0[q.query_id] + 1)), nmax)
-        if 2 * r1 + 1 >= (1 << res):  # disk covers the zone: equi-join on zone
-            zone_rows.append((q.query_id, int(q.zone)))
-        else:
-            probe_rows.append((q, r1))
-
+    # ---- probe: disk(r1) cells, or the whole zone, then exact rank ------
+    r1 = np.minimum(np.ceil(_SQRT2 * (r0 + 1)).astype(np.int64), nmax)
+    whole = 2 * r1 + 1 > nmax  # disk covers the zone: equi-join on zone
+    meta = q[["query_id", "qx", "qy", "k"]]
     parts = []
-    if probe_rows:
-        rows = []
-        for q, r1 in probe_rows:
-            rows.extend(_disk_rows(q, res, -1, r1))
-        cand = spark.createDataFrame(rows, "query_id string, cand_cell long")
-        parts.append(
-            F.broadcast(cand)
-            .join(tiles_p, cand.cand_cell == tiles_p.cell_id, "inner")
-            .select("query_id", "image_id", "caption", "phash", "tcx", "tcy"))
-    if zone_rows:
-        zdf = spark.createDataFrame(zone_rows, "query_id string, qzone long")
-        tile_zone = F.floor(F.col("cell_id") / (16 * _B * _B))
-        parts.append(
-            F.broadcast(zdf)
-            .join(tiles_p.withColumn("tzone", tile_zone),
-                  F.col("qzone") == F.col("tzone"), "inner")
-            .select("query_id", "image_id", "caption", "phash", "tcx", "tcy"))
-    hits = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    if not whole.all():
+        x0, x1, y0, y1 = _box(qix, qiy, r1, nmax)
+        disk = np.flatnonzero(~whole)
+        cells = [encode_np(zone[j], res, np.arange(x0[j], x1[j] + 1)[None, :],
+                           np.arange(y0[j], y1[j] + 1)[:, None]).ravel()
+                 for j in disk]
+        cand = meta.iloc[np.repeat(disk, [len(c) for c in cells])].assign(
+            cand_cell=np.concatenate(cells))
+        cand = spark.createDataFrame(cand, _META_SCHEMA + ", cand_cell long")
+        parts.append(F.broadcast(cand).join(
+            tiles_p, F.col("cand_cell") == F.col("cell_id")))
+    if whole.any():
+        zq = spark.createDataFrame(meta[whole].assign(qzone=zone[whole]),
+                                   _META_SCHEMA + ", qzone long")
+        tzone = F.floor(F.col("cell_id") / (16 * _B * _B))
+        parts.append(F.broadcast(zq).join(tiles_p, F.col("qzone") == tzone))
+    hits = functools.reduce(DataFrame.unionByName, (
+        p.select("query_id", "qx", "qy", "k", "image_id", "caption",
+                 "phash", "tcx", "tcy") for p in parts))
 
     w = Window.partitionBy("query_id").orderBy("dist", "image_id")
-    out = (hits.join(F.broadcast(qmeta), "query_id")
+    out = (hits
            .withColumn("dist", F.sqrt((F.col("tcx") - F.col("qx")) ** 2
                                       + (F.col("tcy") - F.col("qy")) ** 2))
            .withColumn("rank", F.row_number().over(w))
            .where(F.col("rank") <= F.col("k"))
            .select("query_id", "image_id", "dist", "rank", "caption", "phash"))
-    # materialize before unpersisting the shared projection; the result
-    # must outlive tiles_p. reliable=True makes it durable (executor
-    # loss after this operator completes can't lose the answer).
-    result = truncate_lineage(out, eager=True, reliable=reliable,
-                              checkpoint_dir=checkpoint_dir)
-    if persist:
-        tiles_p.unpersist()
-    return result
+    if reliable:
+        return truncate_lineage(out, reliable=True,
+                                checkpoint_dir=checkpoint_dir)
+    return out

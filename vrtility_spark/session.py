@@ -98,6 +98,14 @@ def get_spark(
                                             "vrtility_warehouse")))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        # a fixed JIT compiler pool: by default HotSpot starts and retires
+        # compiler threads as its queue swings, and a retired thread's
+        # CPU time folds into the process total at that moment, so a
+        # process CPU reading that leaves the compilers out jumps by
+        # seconds inside whatever query is running. defaultJavaOptions,
+        # so a caller's extraJavaOptions does not drop it.
+        .config("spark.driver.defaultJavaOptions",
+                "-XX:-UseDynamicNumberOfCompilerThreads")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
