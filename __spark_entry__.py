@@ -336,9 +336,8 @@ def q_knn_distributed(spark, sf_dir):
     )
     queries = spark.createDataFrame(
         KNN_QUERIES, "query_id string, zone long, x double, y double, k int")
-    n_tiles = _t(spark, sf_dir, "events").count()
     out = knn_mod.knn_tiles_distributed(tiles, queries, res=CELL_RES,
-                                        max_rings=64, n_tiles_hint=n_tiles)
+                                        max_rings=64)
     return out.select("query_id", "image_id",
                       F.round("dist", 6).alias("dist_r"), "rank")
 
@@ -754,201 +753,6 @@ def q_fingerprint(spark, sf_dir):
     return sh.groupBy("doc_id").agg(F.min(F.md5(F.col("sh"))).alias("fingerprint"))
 
 
-def q_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition quality signals
-    (textquality.repetition_report): per-document duplicate-word
-    fraction (pure expressions, zero shuffle), the character share of
-    the single most frequent 2-gram (deterministic count-desc/gram-asc
-    tie-break), and the duplicate-3-gram occurrence fraction — counter
-    rows shuffle with map-side combine, text payloads never do."""
-    from vrtility_spark import textquality as tq
-    d = _t(spark, sf_dir, "documents")
-    rep = tq.repetition_report(d, chars_col="n_chars", top_n=2, dup_n=3)
-    return rep.select(
-        "doc_id", "n_words", "n_distinct_words",
-        F.round("dup_word_frac", 6).alias("dup_word_frac"),
-        "top2_gram", "top2_count",
-        F.round("top2_char_frac", 6).alias("top2_char_frac"),
-        "total_3grams", "distinct_3grams",
-        F.round("dup3_frac", 6).alias("dup3_frac"))
-
-
-def q_lm_perplexity(spark, sf_dir):
-    """Bigram-LM perplexity corpus scoring (textlm.train_lm/score_lm) —
-    the CCNet/Gopher-style quality filter: fit the capped count model
-    on the corpus itself (two count aggregations, counts shuffle with
-    map-side combine, documents never do), then score every document
-    in one broadcast zero-shuffle Arrow pass. Caps chosen to BIND at
-    sf0.01 so the deterministic count-desc/lexical tie-break is
-    exercised; docs with < 2 tokens drop (undefined perplexity). The
-    oracle replays the identical model in SQL: same vocab/bigram
-    ordering, same add-alpha smoothing denominator alpha*(V+2)."""
-    from vrtility_spark import textlm
-    d = _t(spark, sf_dir, "documents")
-    model = textlm.train_lm(d, vocab_size=2000, bigram_cap=5000,
-                            alpha=0.1)
-    scored = textlm.score_lm(d, model)
-    return scored.where(~F.isnan("perplexity")).select(
-        "doc_id",
-        F.round(F.log2("perplexity"), 4).alias("log2_ppl"),
-        F.round("perplexity", 2).alias("perplexity"))
-
-
-PACK_SEQ_LEN = 512      # LM packing window for the driver queries
-
-
-def q_pack_sequences(spark, sf_dir):
-    """LM sequence packing (packing.pack_documents): concat-and-chunk
-    every document into 512-token training windows via the two-phase
-    distributed prefix sum — range shuffle of (doc_id, n_tokens) longs
-    (text never shuffles), per-partition totals collected (~one long
-    per partition), offsets broadcast back, window cumsum PARTITIONED
-    BY the physical partition so no single-partition bottleneck. One
-    row per document: its global token offset and the sequence span it
-    lands in. The oracle replays the identical arithmetic as one SQL
-    window cumsum."""
-    from vrtility_spark import packing
-    d = _t(spark, sf_dir, "documents")
-    return packing.pack_documents(d, PACK_SEQ_LEN).select(
-        "doc_id", "n_tokens", "tok_start", "seq_first", "seq_last",
-        "pos_in_seq", "n_seqs")
-
-
-def q_pack_fill(spark, sf_dir):
-    """Per-sequence packing audit (packing.pack_spans +
-    sequence_fill): explode each document's [seq_first, seq_last] span
-    with F.sequence (pure expression, no Python), then aggregate
-    docs-per-sequence, tokens-per-sequence and fill fraction. Pins the
-    conservation property the packer guarantees — every sequence but
-    the last is exactly full. Span rows are (long, long, long, long):
-    the explosion never touches text payloads."""
-    from vrtility_spark import packing
-    d = _t(spark, sf_dir, "documents")
-    packed = packing.pack_documents(d, PACK_SEQ_LEN)
-    spans = packing.pack_spans(packed, PACK_SEQ_LEN)
-    return packing.sequence_fill(spans, PACK_SEQ_LEN)
-
-
-DECONTAM_MOD = 11       # every 11th doc plays the "benchmark" here
-DECONTAM_MIN_OVERLAP = 2
-CROSSDUP_N = 5          # window width for cross-document span dedup
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (decontam.contamination): per-corpus-
-    document count of 3-gram shingles shared with a benchmark set, with
-    the >= 2-shingle contamination flag. The benchmark's distinct
-    shingle hashes BROADCAST (eval suites are MBs against a 100-TB
-    corpus), so the corpus scan is probed map-side and only (doc,
-    count) pairs shuffle. Benchmark := doc_id % 11 == 0 — a
-    deterministic stand-in eval set with guaranteed overlap (word-soup
-    docs share plenty of 3-grams)."""
-    from vrtility_spark import decontam
-    d = _t(spark, sf_dir, "documents")
-    bench = d.where(F.col("doc_id") % DECONTAM_MOD == 0)
-    corpus = d.where(F.col("doc_id") % DECONTAM_MOD != 0)
-    rep = decontam.contamination(
-        corpus, bench, n=3, min_overlap=DECONTAM_MIN_OVERLAP)
-    return rep.select(
-        "doc_id", "n_shingles", "hit_shingles",
-        F.round("overlap_frac", 6).alias("overlap_frac"),
-        F.col("contaminated").cast("int").alias("contaminated"))
-
-
-def _pii_enriched(d):
-    """The documents fixture is PII-free word soup, so the query plants
-    deterministic PII spans keyed on doc_id (email on %3==0, phone on
-    %4==1, IPv4 on %5==2 — ids carry 0-2 categories each); the oracle
-    SQL builds the IDENTICAL strings, so detection/redaction is
-    exercised on real matches, not vacuous zero counts."""
-    did = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    return d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(did % 3 == 0, F.concat(
-                F.lit(" contact u"), s(did),
-                F.lit("@example.com now"))).otherwise(F.lit("")),
-            F.when(did % 4 == 1, F.concat(
-                F.lit(" call (555) 123-"),
-                F.lpad(s(did % 10000), 4, "0"))).otherwise(F.lit("")),
-            F.when(did % 5 == 2, F.concat(
-                F.lit(" host 10."), s(did % 256),
-                F.lit("."), s((did * 7) % 256),
-                F.lit("."), s((did * 13) % 256),
-                F.lit(" up"))).otherwise(F.lit("")),
-        ).alias("text"))
-
-
-def _pii_oracle_sql() -> str:
-    """DuckDB twin of q_pii_scrub: the SAME regex strings (Java ∩ RE2
-    subset) run under RE2 with explicit 'g' flags (Spark's
-    regexp_replace is global by default, DuckDB's is not), over the
-    identically-constructed enriched text."""
-    from vrtility_spark.pii import PII_PATTERNS
-    pats = {name: pat for name, pat, _tok in PII_PATTERNS}
-    red = "t"
-    stripped = "t"
-    for name, pat, tok in PII_PATTERNS:
-        red = f"regexp_replace({red}, '{pat}', '{tok}', 'g')"
-        stripped = f"regexp_replace({stripped}, '{pat}', '', 'g')"
-    return f"""
-        with e as (
-          select doc_id,
-                 text
-                 || case when doc_id % 3 = 0 then ' contact u'
-                      || cast(doc_id as varchar) || '@example.com now'
-                    else '' end
-                 || case when doc_id % 4 = 1 then ' call (555) 123-'
-                      || lpad(cast(doc_id % 10000 as varchar), 4, '0')
-                    else '' end
-                 || case when doc_id % 5 = 2 then ' host 10.'
-                      || cast(doc_id % 256 as varchar) || '.'
-                      || cast((doc_id * 7) % 256 as varchar) || '.'
-                      || cast((doc_id * 13) % 256 as varchar) || ' up'
-                    else '' end as t
-          from documents
-        ), m as (
-          select doc_id, t,
-                 len(regexp_extract_all(t, '{pats["email"]}')) as n_email,
-                 len(regexp_extract_all(t, '{pats["phone"]}')) as n_phone,
-                 len(regexp_extract_all(t, '{pats["ipv4"]}')) as n_ipv4,
-                 {red} as red,
-                 {stripped} as stripped
-          from e
-        )
-        select doc_id, n_email, n_phone, n_ipv4,
-               n_email + n_phone + n_ipv4 as n_pii,
-               length(t) - length(stripped) as pii_chars,
-               round(case when length(t) > 0
-                     then cast(length(t) - length(stripped) as double)
-                          / length(t)
-                     else 0.0 end, 6) as pii_char_frac,
-               length(red) as redacted_len,
-               md5(red) as redacted_md5
-        from m
-    """
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII detection + redaction (pii.pii_report): per-document
-    category counts, matched-character fraction, and the
-    placeholder-redacted text — the ROOTS/StarCoder-style regex scrub
-    stage. Pure regexp_count/regexp_replace expressions fused into the
-    scan projection: JVM-side, zero shuffle, zero Python — the plan a
-    100-TB corpus rewrite needs. Patterns live in the Java-regex ∩ RE2
-    common subset so the SQL oracle runs the exact same strings."""
-    from vrtility_spark import pii
-    d = _pii_enriched(_t(spark, sf_dir, "documents"))
-    rep = pii.pii_report(d)
-    return rep.select(
-        "doc_id", "n_email", "n_phone", "n_ipv4", "n_pii", "pii_chars",
-        F.round("pii_char_frac", 6).alias("pii_char_frac"),
-        F.length("redacted").alias("redacted_len"),
-        F.md5("redacted").alias("redacted_md5"))
-
-
 # =====================================================================
 # similarity search over embeddings
 # =====================================================================
@@ -1073,32 +877,6 @@ def q_ann_pq(spark, sf_dir):
                          rerank=True, rank_round=6)
             .select("q_id", "id", F.round("sim", 6).alias("sim_r"),
                     "rank"))
-
-
-def q_bpe_train(spark, sf_dir):
-    """Distributed BPE tokenizer training (bpe.word_counts /
-    bpe.train_bpe — Sennrich et al. 2016, the subword-vocabulary step
-    of an LLM data pipeline): the corpus collapses to a word-frequency
-    table in ONE shuffle, then each merge iteration is a
-    pure-Catalyst adjacent-pair explosion + map-side-combinable sum,
-    a TakeOrdered(1) argmax (exact integer counts, lexicographic
-    tie-break → deterministic under any partitioning) and one narrow
-    Arrow merge map, lineage-truncated per round.  Returns the merge
-    table — the persistable tokenizer artifact.  Pinned against the
-    naive pure-Python trainer on the same deterministic corpus
-    (tools/gen_oracle_constants.py); encode parity and
-    reshard-invariance are pytest-gated (tests/test_bpe_train.py).
-    The reference has no text processing; this quadrant comes from
-    the training-data brief."""
-    _ensure_shipped(spark)
-    from vrtility_spark import bpe, datagen
-    docs = spark.createDataFrame([(datagen.BPE_FIXTURE_TEXT,)],
-                                 "text string")
-    wc = bpe.word_counts(docs, "text")
-    merges = bpe.train_bpe(wc, 40)
-    return (bpe.merges_df(spark, merges)
-            .select("rank", F.col("left").alias("lhs"),
-                    F.col("right").alias("rhs"), "freq"))
 
 
 def q_ann_sq(spark, sf_dir):
@@ -1288,32 +1066,6 @@ def q_image_medoid_composite(spark, sf_dir):
         F.length("bytes").alias("payload_len"),
         F.md5("caption_agg").alias("caption_md5"),
         ps("bytes", "w", "h", "fmt").alias("pix_sum"))
-
-
-def q_audio_features(spark, sf_dir):
-    """Multimodal audio: PCM payloads decoded only inside Arrow UDFs;
-    NumPy DSP features (RMS / zero-cross / spectral centroid). Rows-only
-    check — binary payload math has no SQL twin; NumPy-oracle parity is
-    pytest-gated (tests/test_multimodal.py)."""
-    _ensure_shipped(spark)
-    from vrtility_spark import multimodal as mm
-    df = spark.createDataFrame(mm.audio_pandas(n=24), schema=mm.AUDIO_SCHEMA)
-    out = mm.audio_features(df)
-    return out.select("audio_id", "caption",
-                      F.round("rms", 6).alias("rms_r"),
-                      F.round("spectral_centroid_hz", 2).alias("centroid_r"))
-
-
-def q_video_features(spark, sf_dir):
-    """Multimodal video: frame-sample → per-clip luma/motion features in
-    one fused Arrow pass (same fusion policy as mask∘composite)."""
-    _ensure_shipped(spark)
-    from vrtility_spark import multimodal as mm
-    df = spark.createDataFrame(mm.video_pandas(n=12), schema=mm.VIDEO_SCHEMA)
-    out = mm.video_features(df, sample_every_k=2)
-    return out.select("video_id", "caption", "n_frames_sampled",
-                      F.round("mean_luma", 4).alias("mean_luma_r"),
-                      F.round("motion_energy", 4).alias("motion_r"))
 
 
 def q_image_hls_composite(spark, sf_dir):
@@ -1791,62 +1543,6 @@ def q_image_viewshed(spark, sf_dir):
         vs_px("bytes", "w", "h", "fmt", F.lit(1)).alias("visible_px"),
         vs_px("bytes", "w", "h", "fmt", F.lit(0)).alias("hidden_px"),
         vs_px("bytes", "w", "h", "fmt", F.lit(255)).alias("outside_px"))
-
-
-BM25_QUERY = ("hash", "spark", "vector")
-
-
-def q_bm25(spark, sf_dir):
-    """BM25 keyword relevance (bm25.bm25_scores): the lexical retrieval
-    baseline next to the embedding ANN family — Okapi BM25 with the
-    Lucene positive-idf variant over the engine's canonical
-    tokenization. The corpus-sized work is one narrow pass: scalar
-    (N, avgdl) aggregate, an array_intersect-guarded explode so only
-    matching docs emit rows, per-(doc, term) tf bounded by matches x
-    query terms, df broadcast into the score expression. The DuckDB
-    oracle string is GENERATED from the same formula constants
-    (bm25.bm25_sql) so operator and oracle cannot drift."""
-    from vrtility_spark import bm25
-    d = _t(spark, sf_dir, "documents")
-    out = bm25.bm25_scores(d, list(BM25_QUERY))
-    return out.select("doc_id", F.round("score", 6).alias("score"))
-
-
-def q_cross_dup(spark, sf_dir):
-    """Cross-document duplicated n-grams (crossdup.cross_duplicates):
-    the window-granularity exact-substring dedup signal of Lee et al.
-    2022 — per document, how many of its 5-gram windows also occur in
-    other documents. Three narrow gram-sized exchanges (per-(gram,doc)
-    counts → distinct-doc window over the gram → per-doc totals), never
-    a pair explosion: the stop-gram shared by every document stays ONE
-    aggregated row, so the plan is skew-bounded at 100 TB where
-    ngram_jaccard-style pair generation needs its DF cap."""
-    from vrtility_spark import crossdup
-    d = _t(spark, sf_dir, "documents")
-    rep = crossdup.cross_duplicates(d, n=CROSSDUP_N)
-    return rep.select(
-        "doc_id", F.col("n_windows").cast("long").alias("n_windows"),
-        "dup_windows", F.round("dup_frac", 6).alias("dup_frac"))
-
-
-def q_dup_span_scrub(spark, sf_dir):
-    """Exact-substring SPAN scrub (crossdup.scrub_dup_spans — the
-    token-level member of the Lee et al. 2022 deduplicate-text-
-    datasets family, remove-all-occurrences variant): every token
-    covered by a 5-gram shared by >= 2 distinct documents is cut and
-    the survivors rejoin in order. Pure Catalyst expressions — shingle
-    hash groupBy, one covered-position explode, a (doc, pos)
-    left-anti join, an ordered re-agg; the duplicated-shingle set is
-    duplication-sized, never corpus-sized. SQL-exact against the
-    string-shingle DuckDB twin (hashes vs strings: identical modulo
-    xxhash64 collisions, none at this scale)."""
-    from vrtility_spark import crossdup
-    d = _t(spark, sf_dir, "documents")
-    out = crossdup.scrub_dup_spans(d, n=CROSSDUP_N)
-    return out.select(
-        "doc_id", F.md5("text_scrubbed").alias("scrub_md5"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_removed").cast("long").alias("n_removed"))
 
 
 def q_image_histmatch(spark, sf_dir):
@@ -4383,19 +4079,12 @@ def _queries_canonical() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_score": q_quality_score,
         "lang_id": q_lang_id,
         "fingerprint": q_fingerprint,
-        "decontaminate": q_decontaminate,
-        "repetition_stats": q_repetition_stats,
-        "lm_perplexity": q_lm_perplexity,
-        "pack_sequences": q_pack_sequences,
-        "pack_fill": q_pack_fill,
-        "pii_scrub": q_pii_scrub,
         "embedding_topk": q_embedding_topk,
         "embedding_lsh": q_embedding_lsh,
         "embedding_dup_clusters": q_embedding_dup_clusters,
         "ann_ivf": q_ann_ivf,
         "ann_pq": q_ann_pq,
         "ann_sq": q_ann_sq,
-        "bpe_train": q_bpe_train,
         "image_median_composite": q_image_median_composite,
         "image_std_composite": q_image_std_composite,
         "image_remedian_composite": q_image_remedian_composite,
@@ -4457,8 +4146,6 @@ def _queries_canonical() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_texture": q_image_texture,
         "image_kmeans": q_image_kmeans,
         "semantic_dedup": q_semantic_dedup,
-        "audio_features": q_audio_features,
-        "video_features": q_video_features,
         "image_tri": q_image_tri,
         "image_curvature": q_image_curvature,
         "image_twi": q_image_twi,
@@ -4477,9 +4164,6 @@ def _queries_canonical() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_colorrelief": q_image_colorrelief,
         "image_viewshed": q_image_viewshed,
         "image_histmatch": q_image_histmatch,
-        "cross_dup_ngrams": q_cross_dup,
-        "dup_span_scrub": q_dup_span_scrub,
-        "bm25_search": q_bm25,
     }
 
 
@@ -4981,243 +4665,6 @@ def oracle_sql() -> dict[str, str]:
         "fingerprint": shingle_cte + """
             select doc_id, min(md5(sh)) as fingerprint from sh group by doc_id
         """,
-        "repetition_stats": """
-            with words as (
-              select doc_id, n_chars, string_split(text, ' ') as w
-              from documents
-            ), g2 as (
-              select doc_id, concat_ws(' ', w[i], w[i+1]) as gram
-              from words, unnest(range(1, greatest(len(w), 1))) as t(i)
-            ), c2 as (
-              select doc_id, gram, count(*) as cnt from g2 group by 1, 2
-            ), top2 as (
-              select doc_id, gram, cnt from (
-                select *, row_number() over (partition by doc_id
-                    order by cnt desc, gram asc) as rn from c2)
-              where rn = 1
-            ), g3 as (
-              select doc_id, concat_ws(' ', w[i], w[i+1], w[i+2]) as gram
-              from words, unnest(range(1, greatest(len(w) - 1, 1))) as t(i)
-            ), a3 as (
-              select doc_id, count(*) as total_3grams,
-                     count(distinct gram) as distinct_3grams
-              from g3 group by doc_id
-            )
-            select d.doc_id,
-                   len(d.w) as n_words,
-                   len(list_distinct(d.w)) as n_distinct_words,
-                   round(1.0 - len(list_distinct(d.w)) * 1.0 / len(d.w),
-                         6) as dup_word_frac,
-                   coalesce(t.gram, '') as top2_gram,
-                   coalesce(t.cnt, 0) as top2_count,
-                   round(case when d.n_chars > 0
-                         then least(1.0, coalesce(t.cnt, 0)
-                              * length(coalesce(t.gram, '')) * 1.0
-                              / d.n_chars)
-                         else 0.0 end, 6) as top2_char_frac,
-                   coalesce(a.total_3grams, 0) as total_3grams,
-                   coalesce(a.distinct_3grams, 0) as distinct_3grams,
-                   round(case when coalesce(a.total_3grams, 0) > 0
-                         then 1.0 - a.distinct_3grams * 1.0 / a.total_3grams
-                         else 0.0 end, 6) as dup3_frac
-            from words d
-            left join top2 t using (doc_id)
-            left join a3 a using (doc_id)
-        """,
-        "lm_perplexity": """
-            with words as (
-              select doc_id,
-                     list_filter(string_split(text, ' '),
-                                 x -> x <> '') as w
-              from documents
-            ), toks as (
-              select doc_id, i, w[i] as tok
-              from words, unnest(range(1, len(w) + 1)) as t(i)
-            ), vocab as (
-              select tok,
-                     row_number() over (order by cnt desc, tok) - 1 as vid
-              from (select tok, count(*) as cnt from toks
-                    group by tok order by cnt desc, tok limit 2000)
-            ), nv as (
-              select count(*) as v from vocab
-            ), ids as (
-              select t.doc_id, t.i,
-                     coalesce(v.vid, (select v from nv)) as vid
-              from toks t left join vocab v using (tok)
-            ), uni as (
-              select vid, cast(count(*) as double) as c
-              from ids group by vid
-            ), pairs as (
-              select a.doc_id, a.vid as pa, b.vid as pb
-              from ids a join ids b
-                on a.doc_id = b.doc_id and b.i = a.i + 1
-            ), bi as (
-              select pa, pb, cast(count(*) as double) as c
-              from pairs group by pa, pb
-              order by c desc, pa, pb limit 5000
-            ), scored as (
-              select p.doc_id,
-                     -log2((coalesce(b.c, 0) + 0.1)
-                           / (u.c + 0.1 * ((select v from nv) + 1)))
-                       as nll
-              from pairs p
-              left join bi b on b.pa = p.pa and b.pb = p.pb
-              join uni u on u.vid = p.pa
-            )
-            select doc_id,
-                   round(avg(nll), 4) as log2_ppl,
-                   round(pow(2.0, avg(nll)), 2) as perplexity
-            from scored group by doc_id
-        """,
-        "pack_sequences": f"""
-            with c as (
-              select doc_id,
-                     cast(len(string_split(text, ' ')) as bigint)
-                       as n_tokens
-              from documents
-            ), p as (
-              select doc_id, n_tokens,
-                     cast(coalesce(sum(n_tokens) over (
-                         order by doc_id rows between unbounded
-                         preceding and 1 preceding), 0) as bigint)
-                       as tok_start
-              from c
-            )
-            select doc_id, n_tokens, tok_start,
-                   tok_start // {PACK_SEQ_LEN} as seq_first,
-                   (tok_start + greatest(n_tokens, 1) - 1)
-                     // {PACK_SEQ_LEN} as seq_last,
-                   tok_start % {PACK_SEQ_LEN} as pos_in_seq,
-                   (tok_start + greatest(n_tokens, 1) - 1)
-                     // {PACK_SEQ_LEN} - tok_start // {PACK_SEQ_LEN}
-                     + 1 as n_seqs
-            from p
-        """,
-        "pack_fill": f"""
-            with c as (
-              select doc_id,
-                     cast(len(string_split(text, ' ')) as bigint)
-                       as n_tokens
-              from documents
-            ), p as (
-              select doc_id, n_tokens,
-                     cast(coalesce(sum(n_tokens) over (
-                         order by doc_id rows between unbounded
-                         preceding and 1 preceding), 0) as bigint)
-                       as tok_start
-              from c
-            ), spans as (
-              select u.seq_id,
-                     greatest(least(p.tok_start + p.n_tokens,
-                                    (u.seq_id + 1) * {PACK_SEQ_LEN})
-                              - greatest(p.tok_start,
-                                         u.seq_id * {PACK_SEQ_LEN}),
-                              0) as span_len
-              from p, unnest(range(p.tok_start // {PACK_SEQ_LEN},
-                       (p.tok_start + greatest(p.n_tokens, 1) - 1)
-                         // {PACK_SEQ_LEN} + 1)) u(seq_id)
-            )
-            select seq_id,
-                   count(*) as n_docs,
-                   cast(sum(span_len) as bigint) as n_tokens,
-                   round(sum(span_len) / {PACK_SEQ_LEN}.0, 6)
-                     as fill_frac
-            from spans group by seq_id
-        """,
-        "decontaminate": shingle_cte + f"""
-            , bench as (
-              select distinct sh from sh where doc_id % {DECONTAM_MOD} = 0
-            ), corp as (
-              select * from sh where doc_id % {DECONTAM_MOD} <> 0
-            ), tot as (
-              select doc_id, count(*) as n_shingles from corp group by doc_id
-            ), hits as (
-              select c.doc_id, count(*) as hit_shingles
-              from corp c join bench using (sh) group by c.doc_id
-            )
-            select d.doc_id,
-                   coalesce(t.n_shingles, 0) as n_shingles,
-                   coalesce(h.hit_shingles, 0) as hit_shingles,
-                   round(case when coalesce(t.n_shingles, 0) > 0
-                         then coalesce(h.hit_shingles, 0) * 1.0 / t.n_shingles
-                         else 0.0 end, 6) as overlap_frac,
-                   cast(coalesce(h.hit_shingles, 0)
-                        >= {DECONTAM_MIN_OVERLAP} as int) as contaminated
-            from documents d
-            left join tot t using (doc_id)
-            left join hits h using (doc_id)
-            where d.doc_id % {DECONTAM_MOD} <> 0
-        """,
-        "pii_scrub": _pii_oracle_sql(),
-        "bm25_search": __import__(
-            "vrtility_spark.bm25", fromlist=["bm25_sql"]
-        ).bm25_sql(list(BM25_QUERY)),
-        "cross_dup_ngrams": f"""
-            with words as (
-              select doc_id, string_split(text, ' ') as w from documents
-            ), occ as (
-              select doc_id, concat_ws(' ', w[i], w[i+1], w[i+2],
-                                       w[i+3], w[i+4]) as g
-              from words,
-                   unnest(range(1, greatest(len(w) - 3, 1))) as t(i)
-            ), per as (
-              select doc_id, g, count(*) as cnt from occ group by 1, 2
-            ), hot as (
-              select g from per group by g having count(*) >= 2
-            ), dup as (
-              select doc_id, sum(cnt) as dup_windows
-              from per join hot using (g) group by doc_id
-            ), base as (
-              select doc_id,
-                     greatest(len(string_split(text, ' ')) - 4, 0)
-                       as n_windows
-              from documents
-            )
-            select b.doc_id, b.n_windows,
-                   coalesce(u.dup_windows, 0) as dup_windows,
-                   round(case when b.n_windows > 0
-                         then coalesce(u.dup_windows, 0) * 1.0
-                              / b.n_windows
-                         else 0.0 end, 6) as dup_frac
-            from base b left join dup u using (doc_id)
-        """,
-        "dup_span_scrub": """
-            with words as (
-              select doc_id, string_split(text, ' ') as w from documents
-            ), occ as (
-              select doc_id, i - 1 as pos,
-                     concat_ws(' ', w[i], w[i+1], w[i+2],
-                               w[i+3], w[i+4]) as g
-              from words,
-                   unnest(range(1, greatest(len(w) - 3, 1))) as t(i)
-            ), dup as (
-              select g from occ group by g
-              having count(distinct doc_id) >= 2
-            ), cov as (
-              select distinct o.doc_id, o.pos + jj as pos
-              from occ o join dup using (g),
-                   unnest(range(0, 5)) as u(jj)
-            ), toks as (
-              select doc_id, i - 1 as pos, w[i] as tok
-              from words, unnest(range(1, len(w) + 1)) as t(i)
-            ), keep as (
-              select t.doc_id, t.pos, t.tok from toks t
-              where not exists (
-                select 1 from cov c
-                where c.doc_id = t.doc_id and c.pos = t.pos)
-            ), reb as (
-              select doc_id, count(*) as kept,
-                     string_agg(tok, ' ' order by pos) as txt
-              from keep group by doc_id
-            ), base as (
-              select doc_id, len(string_split(text, ' ')) as n_tokens
-              from documents
-            )
-            select b.doc_id, md5(coalesce(r.txt, '')) as scrub_md5,
-                   b.n_tokens,
-                   b.n_tokens - coalesce(r.kept, 0) as n_removed
-            from base b left join reb r using (doc_id)
-        """,
         "embedding_topk": """
             with pairs as (
               select q.vec_id as q_id, c.vec_id as c_id, c.label,
@@ -5358,10 +4805,10 @@ def oracle_sql() -> dict[str, str]:
             where rank <= 5
         """,
     }
-    # payload queries (image/audio/video): pixel/waveform kernels have
-    # no SQL twin — they pin against constants-table oracles computed
-    # Spark-free from the deterministic fixtures + the pytest-gated
-    # NumPy kernels (tools/gen_oracle_constants.py)
+    # image payload queries: pixel kernels have no SQL twin — they pin
+    # against constants-table oracles computed Spark-free from the
+    # deterministic fixtures + the pytest-gated NumPy kernels
+    # (tools/gen_oracle_constants.py)
     try:
         from _oracle_constants import CONSTANT_ORACLES
         out.update(CONSTANT_ORACLES)

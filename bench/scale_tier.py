@@ -365,33 +365,6 @@ def main() -> None:
         "wall_per_input": round(big / base / ratio, 3),
     }
 
-    # BPE training family: 20 merges over the base vs the 10x
-    # replicated word histogram (disjoint replica vocabularies -> 10x
-    # the state rows and 10x the pair partials per iteration; the
-    # argmax and merge-map count is FIXED at 20 either way, so
-    # near-flat wall confirms per-iteration cost is overhead + a
-    # linear scan, not anything superlinear in vocab)
-    from vrtility_spark import bpe as _bpe
-    docs_b = spark.read.parquet(
-        os.path.join(BASE_SF, "documents.parquet"))
-    docs_s = spark.read.parquet(
-        os.path.join(scaled_sf, "documents.parquet"))
-    wc_b = _bpe.word_counts(docs_b, "text").cache()
-    wc_s = _bpe.word_counts(docs_s, "text").cache()
-    nb2, ns2 = wc_b.count(), wc_s.count()
-    base = time_call(lambda: _bpe.train_bpe(wc_b, 20), reps)
-    big = time_call(lambda: _bpe.train_bpe(wc_s, 20), reps)
-    wc_b.unpersist()
-    wc_s.unpersist()
-    ratio = ns2 / nb2
-    results["bpe_training"] = {
-        "base_sec": base, "scaled_sec": big,
-        "base_vocab": nb2, "scaled_vocab": ns2,
-        "input_ratio": round(ratio, 3),
-        "wall_ratio": round(big / base, 3),
-        "wall_per_input": round(big / base / ratio, 3),
-    }
-
     spark.stop()
     probe1 = kernel_probe()
 

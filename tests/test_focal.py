@@ -69,9 +69,12 @@ def _rand(shape, nan_frac=0.25):
     return a
 
 
-@pytest.mark.parametrize("op", ["mean", "sum", "count", "min", "max",
-                                "median", "std", "range", "majority"])
-@pytest.mark.parametrize("r", [1, 2])
+_NP_OPS = ["mean", "sum", "count", "min", "max", "median", "std", "range",
+           "majority"]
+
+
+@pytest.mark.parametrize("r, op", [(r, op) for r in (1, 2) for op in _NP_OPS]
+                         + [(3, "majority")])
 def test_focal_np_matches_loop(op, r):
     G = _rand((2, 9, 11))
     if op == "majority":
@@ -117,6 +120,24 @@ def test_focal_std_range_majority_closed_forms():
     Pt = np.full((1, 5, 5), np.nan)
     Pt[:, 1:-1, 1:-1] = two
     assert focal.focal_np(Pt, "std", 1)[0, 1, 1] == pytest.approx(1.0)
+
+
+def test_focal_majority_memory_is_linear_in_window():
+    """Radius-4 majority on one 64x64 band: a pairwise-equality count
+    over the 81-sample windows alone would allocate ~27 MB; run-length
+    counting on the sorted window must stay under 10 MB."""
+    import tracemalloc
+    r = 4
+    P = np.full((1, 64 + 2 * r, 64 + 2 * r), np.nan)
+    P[0, r:-r, r:-r] = np.arange(64 * 64).reshape(64, 64) % 7
+    tracemalloc.start()
+    try:
+        out = focal.focal_np(P, "majority", r)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert out.shape == (1, 64, 64) and np.isfinite(out).all()
+    assert peak < 10 * 2**20, f"majority peaked at {peak / 2**20:.1f} MB"
 
 
 def test_focal_np_conv_matches_loop():

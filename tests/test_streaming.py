@@ -401,40 +401,6 @@ def test_stateful_running_harmonic_equals_batch(spark, tiny_images,
         assert (np.isfinite(x) != np.isfinite(y)).mean() < 0.02
 
 
-def test_decontaminate_stream_equals_batch(spark, tmp_path):
-    """Streamed decontamination (two file drops) produces exactly the
-    batch operator's clean corpus, regardless of batch boundaries."""
-    from vrtility_spark.decontam import decontaminate
-    from vrtility_spark.streaming import decontaminate_stream
-
-    phrase = "alpha beta gamma delta"
-    docs = []
-    for i in range(40):
-        base = " ".join(f"d{i}w{k}" for k in range(10))
-        # every 5th doc quotes the benchmark phrase → contaminated
-        text = f"{base} {phrase}" if i % 5 == 0 else base
-        docs.append((i, text, "en", "web", len(text)))
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    corpus = spark.createDataFrame(docs, cols)
-    bench = spark.createDataFrame(
-        [(1000, f"intro {phrase} outro", "en", "eval", 30)], cols)
-
-    inp = str(tmp_path / "docs_in")
-    outp = str(tmp_path / "docs_clean")
-    # two drops → at least two micro-batches
-    corpus.where("doc_id < 20").write.parquet(inp + "/d1")
-    corpus.where("doc_id >= 20").write.parquet(inp + "/d2")
-    q = decontaminate_stream(spark, inp + "/*", bench, outp,
-                             min_overlap=2)
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in spark.read.parquet(outp).collect()}
-    want = {r["doc_id"] for r in
-            decontaminate(corpus, bench, min_overlap=2).collect()}
-    assert got == want
-    assert got and got != {d[0] for d in docs}  # both paths exercised
-    assert all(i % 5 != 0 for i in got)
-
-
 def test_streaming_chip_export(spark, tiny_images, tmp_path):
     """Training-chip export is a stateless narrow map, so it runs
     under Structured Streaming unchanged: stream composite tiles in,

@@ -1,12 +1,11 @@
 #!/usr/bin/env python
 """Generate ``_oracle_constants.py``: DuckDB constants-table oracles for
-the payload driver queries (image composites, image hampel, audio,
-video), computed WITHOUT Spark.
+the image payload driver queries (composites, hampel, terrain,
+hydrology, ...), computed WITHOUT Spark.
 
-The pixel/waveform kernels have no SQL twin, so these queries pin
-against VALUES tables instead: expected rows are derived here from the
-deterministic fixtures (``datagen`` / ``multimodal``, fixed seeds,
-sf-independent) through the NumPy kernels — the same kernels whose
+The pixel kernels have no SQL twin, so these queries pin against
+VALUES tables instead: expected rows are derived here from the
+deterministic ``datagen`` fixtures (fixed seeds, sf-independent) through the NumPy kernels — the same kernels whose
 correctness is independently loop-oracle-gated in ``tests/`` (e.g.
 ``oracle.composite_stack``, hypothesis properties for hampel). The
 constants therefore verify the DISTRIBUTED plumbing — grouping, scene
@@ -31,7 +30,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from vrtility_spark import (  # noqa: E402
-    cells, codec, composite, datagen, masks, multimodal, timeseries,
+    cells, codec, composite, datagen, masks, timeseries,
 )
 
 CAP = composite.CAPTION_CAP
@@ -1781,20 +1780,6 @@ def image_hampel_rows():
     return rows
 
 
-def bpe_train_rows(n_merges: int = 40):
-    """Distributed BPE training replicated without Spark: the naive
-    pure-Python trainer (pair-parity-gated in tests/test_bpe_train.py)
-    over the same deterministic corpus and whitespace/lowercase word
-    histogram.  Rows are the exact merge table."""
-    from vrtility_spark import bpe
-
-    freqs: dict = {}
-    for w in datagen.BPE_FIXTURE_TEXT.lower().split():
-        freqs[w] = freqs.get(w, 0) + 1
-    return [{"rank": r, "lhs": a, "rhs": b, "freq": f}
-            for r, a, b, f in bpe.train_bpe_py(freqs, n_merges)]
-
-
 def image_decompose_rows(period: int = 2):
     """Per-timestep classical seasonal decomposition replicated
     without Spark: per-cell stacks run through
@@ -1868,36 +1853,6 @@ def image_whittaker_rows():
                                .astype(np.int64).sum()),
                 "caption": grp.caption.iloc[t],
             })
-    return rows
-
-
-def audio_rows():
-    pdf = multimodal.audio_pandas(n=24)
-    rows = []
-    for r in pdf.itertuples(index=False):
-        wave = multimodal.decode_audio(r.bytes, r.fmt)
-        f = multimodal.audio_features_np(wave, r.sample_rate)
-        rows.append({
-            "audio_id": r.audio_id, "caption": r.caption,
-            "rms_r": _round_half_up(f["rms"], 6),
-            "centroid_r": _round_half_up(f["spectral_centroid_hz"], 2),
-        })
-    return rows
-
-
-def video_rows():
-    pdf = multimodal.video_pandas(n=12)
-    rows = []
-    for r in pdf.itertuples(index=False):
-        frames = multimodal.frame_sample_np(
-            multimodal.decode_video(r.bytes, r.w, r.h, r.fmt), 2)
-        f = multimodal.video_features_np(frames)
-        rows.append({
-            "video_id": r.video_id, "caption": r.caption,
-            "n_frames_sampled": f["n_frames_sampled"],
-            "mean_luma_r": _round_half_up(f["mean_luma"], 4),
-            "motion_r": _round_half_up(f["motion_energy"], 4),
-        })
     return rows
 
 
@@ -4109,10 +4064,6 @@ def main() -> None:
             image_tri_rows(),
             ["cell_id", "n_scenes", "payload_len", "tri_sum",
              "tpi_sum", "rough_sum", "nodata_px"]),
-        # distributed BPE training vs the naive pure-Python trainer
-        "bpe_train": values_sql(
-            bpe_train_rows(),
-            ["rank", "lhs", "rhs", "freq"]),
         # per-timestep seasonal decomposition: pins trend/seasonal/
         # residual planes through the m2m grouped map, rawf32 retype
         "image_decompose": values_sql(
@@ -4394,12 +4345,6 @@ def main() -> None:
             image_whittaker_rows(),
             ["image_id", "cell_id", "dt", "payload_len", "pix_sum",
              "caption"]),
-        "audio_features": values_sql(
-            audio_rows(), ["audio_id", "caption", "rms_r", "centroid_r"]),
-        "video_features": values_sql(
-            video_rows(),
-            ["video_id", "caption", "n_frames_sampled", "mean_luma_r",
-             "motion_r"]),
     }
     out = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "_oracle_constants.py")

@@ -343,16 +343,3 @@ def knn_queries_pandas(zones=DEFAULT_ZONES, n: int = 20, seed: int = 42) -> pd.D
             "k": int(rng.integers(1, 11)),
         })
     return pd.DataFrame(rows)
-
-
-#: deterministic corpus for the BPE-training driver query and its
-#: pure-Python constants oracle (tools/gen_oracle_constants.py) — word
-#: repetitions shaped so merge ranks exercise ties, shared stems and
-#: early-stop-free depth at 40 merges
-BPE_FIXTURE_TEXT = (
-    "the cat sat on the mat " * 5
-    + "the bat and the rat chat " * 3
-    + "low lower lowest slow slowly lowland " * 2
-    + "composite composition compost composer " * 2
-    + "tile tiling tiled retile "
-)

@@ -123,17 +123,24 @@ def focal_np(P: np.ndarray, op: str, radius: int,
     if op == "majority":
         # most frequent valid value, ties -> smallest (deterministic);
         # NaN when the window holds no valid sample.  Sort each
-        # window's k^2 samples ascending (NaN sorts last), count
-        # equals pairwise (k^2 small, so O(k^4) vector ops beat any
-        # per-window Python loop), take the FIRST index achieving the
-        # max count — ascending order makes that the smallest value.
+        # window's k^2 samples ascending (NaN sorts last) and count
+        # run lengths: at every position, how many equal samples end
+        # there.  The FIRST index achieving the max run ends the
+        # longest run of the smallest value.  Memory stays O(k^2) per
+        # pixel (one sorted copy plus one int32 run array).
         from numpy.lib.stride_tricks import sliding_window_view
+        n = k * k
         Wv = sliding_window_view(P, (k, k), axis=(1, 2))
-        S = np.sort(Wv.reshape(*Wv.shape[:3], k * k), axis=-1)
-        counts = (S[..., None, :] == S[..., :, None]).sum(axis=-1)
-        idx = counts.argmax(axis=-1)  # first max: smallest value wins
+        S = np.sort(Wv.reshape(*Wv.shape[:3], n), axis=-1)
+        pos = np.arange(n, dtype=np.int32)
+        run = np.zeros(S.shape, dtype=np.int32)  # index of the run start
+        run[..., 1:] = np.where(S[..., 1:] != S[..., :-1], pos[1:], 0)
+        np.maximum.accumulate(run, axis=-1, out=run)
+        np.subtract(pos + 1, run, out=run)  # run length so far
+        run[np.isnan(S)] = 0  # NaN never wins
+        idx = run.argmax(axis=-1)  # first max: smallest value wins
         out = np.take_along_axis(S, idx[..., None], axis=-1)[..., 0]
-        return out  # all-NaN window: counts all 0, idx 0, S[0] = NaN
+        return out  # all-NaN window: runs all 0, idx 0, S[0] = NaN
     if op == "conv":
         if weights is None:
             raise ValueError("op='conv' needs a (2r+1, 2r+1) weights array")

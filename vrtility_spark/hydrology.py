@@ -1618,10 +1618,9 @@ def flow_length(df: DataFrame, key: str = "cell_id",
                        F.lit(True)).otherwise(F.lit(False))
                  .alias("done"),
                 # absent target: outlet at own rep (fallback counts);
-                # done target: donate its final counts; live target:
-                # extend the partial through it
+                # done or live target: add its counts (final or
+                # partial) to ours
                 F.when(F.col("t_cell").isNull(), F.col("fb"))
-                 .when(F.col("t_done"), F.col("acc") + F.col("t_acc"))
                  .otherwise(F.col("acc") + F.col("t_acc")).alias("acc"),
                 F.when(F.col("t_cell").isNull() | F.col("t_done"),
                        F.lit(None).cast("long"))

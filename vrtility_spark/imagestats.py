@@ -3,9 +3,8 @@ training-data pipeline runs over raw imagery before it ever reaches a
 model: blur, information content, exposure clipping, contrast, and
 footprint validity, per band, in ONE zero-shuffle Arrow pass.
 
-The text side of this repo already has the Gopher-style signals
-(:mod:`vrtility_spark.textquality`); this is the image-side twin — the
-laion/DataComp-style "drop blurry, blank, and blown-out scenes" gate.
+This is the laion/DataComp-style "drop blurry, blank, and blown-out
+scenes" gate.
 The reference engine mosaics whatever it is given
 (/root/reference/R/vrt-collect.R builds collections without content
 screening), so this family extends it per the brief's

@@ -56,10 +56,7 @@ _META_SCHEMA = "query_id string, qx double, qy double, k int"
 
 
 def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
-                          max_rings: int = 64,
-                          initial_radius: int | None = None,
-                          n_tiles_hint: int | None = None,
-                          persist: bool = True, reliable: bool = False,
+                          max_rings: int = 64, reliable: bool = False,
                           checkpoint_dir: str | None = None) -> DataFrame:
     """Exact K nearest tiles per query — the DISTRIBUTED-QUERIES twin
     of :func:`knn_tiles` for 10⁶+-row query tables.
@@ -69,7 +66,8 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
     stays a DataFrame end to end: candidate disk cells are generated
     executor-side (two ``explode(sequence(...))`` generators per
     radius round), counted against a per-cell tile-count aggregate
-    (computed ONCE and reused every round), and each query's minimal
+    (computed ONCE and reused every round; its total over its occupied
+    cells also sets the first count radius), and each query's minimal
     disk radius ``r0`` falls out of a per-query cumulative ring sum —
     one window over rings, never a per-query driver loop. The ONLY
     thing that ever reaches the driver is one scalar per round: the
@@ -94,9 +92,7 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
     tiles_p = tiles.select(
         "cell_id", "image_id", "caption", "phash",
         ((F.col("xmin") + F.col("xmax")) / 2).alias("tcx"),
-        ((F.col("ymin") + F.col("ymax")) / 2).alias("tcy"))
-    if persist:
-        tiles_p = tiles_p.persist()
+        ((F.col("ymin") + F.col("ymax")) / 2).alias("tcy")).persist()
     cell_counts = (tiles_p.groupBy("cell_id")
                    .agg(F.count("*").alias("_n")).persist())
 
@@ -111,23 +107,22 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
          .withColumn("qix", _clip(F.floor(F.col("qx") / F.lit(size))))
          .withColumn("qiy", _clip(F.floor(F.col("qy") / F.lit(size))))
          .persist())
-    stats = q.agg(F.count("*").alias("nq"), F.max("k").alias("kmax"),
-                  F.count_distinct("zone").alias("nz")).collect()[0]
+    stats = q.agg(F.count("*").alias("nq"),
+                  F.max("k").alias("kmax")).collect()[0]
     if not stats.nq:
         q.unpersist()
         cell_counts.unpersist()
-        if persist:
-            tiles_p.unpersist()
+        tiles_p.unpersist()
         return spark.createDataFrame([], _OUT_SCHEMA)
 
-    if initial_radius is None:
-        n_tiles = (n_tiles_hint if n_tiles_hint is not None
-                   else tiles_p.count())
-        density = max(n_tiles / ((stats.nz or 1) * nside ** 2), 1e-9)
-        want_cells = 4.0 * stats.kmax / density
-        initial_radius = max(2, math.ceil((math.sqrt(want_cells) - 1) / 2))
+    # first count radius: the disk that holds ~4·kmax tiles at the
+    # mean density of the occupied cells
+    occ = cell_counts.agg(F.sum("_n").alias("n"),
+                          F.count("*").alias("cells")).collect()[0]
+    density = max((occ.n or 0) / max(occ.cells, 1), 1e-9)
+    want_cells = 4.0 * stats.kmax / density
     rc_cap = min(nmax, int(max_rings))
-    rc = min(int(initial_radius), rc_cap)
+    rc = min(max(2, math.ceil((math.sqrt(want_cells) - 1) / 2)), rc_cap)
 
     def _cell_expr(zone, ix, iy):
         return ((zone * 16 + F.lit(res)) * F.lit(_B) + iy) * F.lit(_B) + ix
@@ -225,8 +220,7 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
                               checkpoint_dir=checkpoint_dir)
     q.unpersist()
     cell_counts.unpersist()
-    if persist:
-        tiles_p.unpersist()
+    tiles_p.unpersist()
     return result
 
 

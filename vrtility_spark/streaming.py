@@ -500,45 +500,3 @@ def regrid_history(spark: SparkSession, scenes_tbl: SnapshotTable,
                          "cell_id", "left_semi")
     return hist.where(
         SF.col("cell_id").isin([int(c) for c in affected]))
-
-
-DOC_SCHEMA = ("doc_id long, text string, lang string, source string, "
-              "n_chars long")
-
-
-def decontaminate_stream(spark: SparkSession, input_dir: str,
-                         benchmark: DataFrame, out_path: str,
-                         n: int = 3, min_overlap: int = 1,
-                         min_frac: float = 0.0,
-                         checkpoint_dir: str | None = None,
-                         max_files_per_batch: int = 32):
-    """Streaming benchmark decontamination: document files land in
-    ``input_dir`` (the ingest side of a training-data pipeline) and
-    every micro-batch is probed against the STATIC benchmark with the
-    batch operator (:func:`vrtility_spark.decontam.decontaminate` —
-    the benchmark's shingle set broadcasts, the batch never shuffles
-    for the probe), appending only CLEAN documents to ``out_path``.
-
-    Contamination is a per-document decision — each document arrives
-    whole in one batch row — so no cross-batch state exists at all:
-    no watermark, no stateful store, restart-safe through the stream
-    checkpoint (a replayed batch rewrites the same rows; downstream
-    exact dedup by ``doc_id`` — already a pipeline invariant — absorbs
-    at-least-once duplicates)."""
-    from vrtility_spark.decontam import decontaminate
-
-    stream = (spark.readStream.schema(DOC_SCHEMA)
-              .option("maxFilesPerTrigger", max_files_per_batch)
-              .parquet(input_dir))
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        clean = decontaminate(batch_df, benchmark, n=n,
-                              min_overlap=min_overlap, min_frac=min_frac)
-        clean.write.mode("append").parquet(out_path)
-
-    return (stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation",
-                    checkpoint_dir or out_path + "/_ckpt")
-            .trigger(availableNow=True).start())
