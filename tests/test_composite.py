@@ -4,11 +4,13 @@ distinctness (test-py-pixel-funs.R:22-59), and the Spark grouped path."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 
 import oracle
-from vrtility_spark import codec, composite, datagen, schema, warp
+from vrtility_spark import codec, composite, datagen, masks, schema, warp
 
 
 # ------------------------------------------------ tiny-matrix units ----
@@ -111,6 +113,91 @@ def test_geomedian_vs_oracle_no_na():
     got = composite.REDUCERS["geomedian"](s)
     exp = oracle.multiband_stack(s, lambda X: oracle.weiszfeld_1(X))
     np.testing.assert_allclose(got, exp, atol=1e-4)
+
+
+@pytest.fixture(scope="module")
+def bench_cell():
+    """(T,B,P) float64 stack of the first cell of the composite
+    benchmark's scenes (seed 1, 12 dates of 64x64), S2 int mask applied
+    the way the engine's cell reader applies it."""
+    pdf = datagen.images_pandas(seed=1, nx=3, ny=3, n_dates=12, w=64, h=64)
+    fn = masks.make_scene_maskfun("int", datagen.S2_MASK_VALUES)
+    st = np.stack([composite._decode_scene(r, fn)
+                   for r in pdf.iloc[:12].itertuples()])
+    return st.reshape(st.shape[0], st.shape[1], -1)
+
+
+def _pixel_dependence(X, y, pix, col_w=None):
+    """Largest gap between each sampled pixel's result in the batch and
+    its result computed alone (over the bands ``col_w`` includes)."""
+    gap = 0.0
+    for j in pix:
+        w = None if col_w is None else col_w[:, [j]]
+        alone = composite.weiszfeld(X[:, :, [j]], col_w=w)[:, 0]
+        keep = slice(None) if col_w is None else col_w[:, j].astype(bool)
+        gap = max(gap, np.nanmax(np.abs(alone[keep] - y[keep, j]), initial=0.0))
+    return gap
+
+
+def test_weiszfeld_stops_per_pixel(bench_cell):
+    """Each pixel stops at its own first step below epsilon, so its
+    result is the one it gets alone and the oracle's. A batch-wide stop
+    keeps iterating converged pixels while their neighbours move, and
+    drifts some of them off the point they stopped on (by up to 51 units
+    on this cell under that rule)."""
+    X = bench_cell
+    y = composite.weiszfeld(X)
+    pix = range(0, X.shape[2], 3)
+    assert _pixel_dependence(X, y, pix) <= 1e-6
+    # the oracle starts at the median of complete rows, the kernel at the
+    # band nanmedian over all rows: compare where the two starts agree
+    complete = ~np.isnan(X).any(axis=1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        med = np.nanmedian(X, axis=0)
+    same = [j for j in pix if complete[:, j].any() and np.array_equal(
+        np.median(X[complete[:, j], :, j], axis=0), med[:, j])]
+    assert len(same) > len(pix) // 2
+    exp = np.stack([oracle.weiszfeld_1(X[:, :, j]) for j in same], axis=1)
+    np.testing.assert_allclose(y[:, same], exp, rtol=0, atol=1e-6)
+
+
+def test_weiszfeld_col_w_stops_per_pixel(bench_cell):
+    """The geomedoid path (distance and stop over the bands without
+    gaps) stops per pixel too, and matches the oracle run on those
+    bands of the non-empty rows."""
+    X = bench_cell
+    vr = composite._valid_rows(X)
+    col_w = (~np.any(np.isnan(X) & vr[:, None, :], axis=0)).astype(float)
+    y = composite.weiszfeld(X, col_w=col_w)
+    pix = [j for j in range(0, X.shape[2], 3) if vr[:, j].any()]
+    assert _pixel_dependence(X, y, pix, col_w) <= 1e-6
+    for j in pix:
+        keep = col_w[:, j].astype(bool)
+        exp = oracle.weiszfeld_1(X[vr[:, j]][:, keep, j])
+        np.testing.assert_allclose(y[keep, j], exp, rtol=0, atol=1e-6)
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+@pytest.mark.parametrize("T", [6, 7])
+def test_nanmedian0_is_numpy_nanmedian(dtype, T):
+    """The sort-based median equals ``np.nanmedian`` bit for bit: odd
+    and even valid counts, all-NaN lanes and infinities."""
+    rng = np.random.default_rng(T)
+    x = rng.normal(0, 1e3, size=(T, 3, 40)).astype(dtype)
+    x[rng.random(x.shape) < 0.3] = np.nan
+    x[:, 0, 0] = np.nan                      # all-NaN lane
+    x[:2, 1, 1] = [np.inf, -np.inf]          # both infinities
+    x[:3, 2, 2] = np.inf                     # infinite middle values
+    x[:, 2, 3] = [np.inf, -np.inf] + [np.nan] * (T - 2)  # inf + -inf
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        exp = np.nanmedian(x, axis=0)
+        got = composite.nanmedian0(x)
+    assert got.dtype == exp.dtype
+    assert np.array_equal(got.view(np.uint8), exp.view(np.uint8))
+    counts = (~np.isnan(x)).sum(axis=0)
+    assert {0, 1} <= set(counts.ravel() % 2) and (counts == 0).any()
 
 
 def test_reducers_pairwise_distinct(stack):

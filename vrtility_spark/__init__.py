@@ -29,4 +29,6 @@ pixel-space kernels. No per-row Python UDFs anywhere.
 
 __version__ = "0.1.0"
 
-from vrtility_spark import cells, codec  # noqa: F401
+# session: inside a PySpark worker, importing it installs the archive
+# re-read guard (see its docstring)
+from vrtility_spark import cells, codec, session  # noqa: F401

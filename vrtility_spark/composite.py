@@ -50,8 +50,31 @@ from vrtility_spark import codec
 # stack: (T, B, H, W) float64 with NaN for nodata → (B, H, W) float64
 
 
+def nanmedian0(x: np.ndarray) -> np.ndarray:
+    """``np.nanmedian(x, axis=0)``, bit for bit, from one sort.
+
+    NaN sorts last, so the valid values of each lane lead its sorted
+    column; the median is the mean of the two middle ones (one twice
+    for an odd count), NumPy's own ``(low + high) / 2``. All-NaN lanes
+    give NaN without a warning. About 3x faster than ``np.nanmedian``
+    on (12, 5, 64, 64) stacks, whose masked-array path dominates there.
+    """
+    if x.dtype.kind != "f":
+        x = x.astype(np.float64)
+    if len(x) == 0:  # nothing to take; np.nanmedian's answer too
+        return np.full(x.shape[1:], np.nan, x.dtype)
+    s = np.sort(x, axis=0)
+    n = x.shape[0] - np.count_nonzero(np.isnan(x), axis=0)
+    h = n // 2
+    lo = np.take_along_axis(s, np.where(n % 2 == 1, h, h - 1)[None], axis=0)[0]
+    hi = np.take_along_axis(s, h[None], axis=0)[0]
+    out = (lo + hi) / 2
+    out[n == 0] = np.nan
+    return out
+
+
 def median_t(stack: np.ndarray) -> np.ndarray:
-    return np.nanmedian(stack, axis=0)
+    return nanmedian0(stack)
 
 
 def mean_t(stack: np.ndarray) -> np.ndarray:
@@ -182,51 +205,88 @@ def weiszfeld(X: np.ndarray, nitermax: int = 100, epsilon: float = 1e-8,
     multiband_reduce_funs.R:55); observations containing any NaN are
     excluded (Weiszfeld requires complete cases, :36-38).
 
-    ``col_w`` (B,P in {0,1}) restricts the distance to an included-band
-    subset — the xoid ``xc = x[, non_na_cols]`` semantics
-    (multiband_reduce_funs.R:276-288). With ``col_w`` given, a row is
-    usable iff it is not all-NaN (it is then complete within the
-    included bands by construction).
+    Each pixel stops at its own first iterate that moves no band by
+    ``epsilon`` or more (``max|y_new - y| < epsilon``, the rule of the
+    reference and of ``tests/oracle.py:weiszfeld_1``), or after
+    ``nitermax`` iterations. A pixel's result therefore does not depend
+    on the other pixels of the call. ``epsilon`` is absolute: on
+    float32 data of reflectance magnitude, 1e-8 is below one ulp, so it
+    means "stop at an exact fixed point" and most pixels run all
+    ``nitermax`` iterations.
+
+    ``col_w`` (B,P in {0,1}) restricts the distance, and the stop test,
+    to an included-band subset — the xoid ``xc = x[, non_na_cols]``
+    semantics (multiband_reduce_funs.R:276-288). With ``col_w`` given,
+    a row is usable iff it is not all-NaN (it is then complete within
+    the included bands by construction).
     """
-    T, B, P = X.shape
     if X.dtype not in (np.float32, np.float64):
         X = X.astype(np.float64)  # isnan/zeroing below need float
+    return _weiszfeld(X, nanmedian0(X), nitermax, epsilon, col_w)
+
+
+def _weiszfeld(X, med, nitermax, epsilon, col_w=None):
+    """:func:`weiszfeld` on float ``X`` from its band medians ``med``."""
+    P = X.shape[2]
     dt = X.dtype
-    if col_w is None:
-        complete = ~np.any(np.isnan(X), axis=1)  # (T, P)
-        cw = np.ones((1, B, P), dtype=dt)
-    else:
-        complete = ~np.all(np.isnan(X), axis=1)
-        cw = col_w.reshape(1, B, P).astype(dt)
-    Xz = np.where(np.isnan(X), dt.type(0.0), X)
-    wrow = complete.astype(dt)[:, None, :]  # (T,1,P)
-    with np.errstate(all="ignore"):
-        y = np.nanmedian(X, axis=0)  # (B, P) init
-    y = np.where(np.isnan(y), 0.0, y)
+    nan = np.isnan(X)
+    complete = ~(nan.any(axis=1) if col_w is None else nan.all(axis=1))  # (T,P)
+    y = np.where(np.isnan(med), dt.type(0.0), med)  # (B,P) init, then result
+    # the iterating pixels' columns; a pixel that stops keeps its column
+    # (its result is already in y) until a quarter of them have stopped
+    live = np.arange(P)
+    Xl = np.where(nan, dt.type(0.0), X)
+    wl = complete.astype(dt)  # (T,P) usable-row weight
+    cw = None if col_w is None else col_w.astype(dt)  # (B,P)
+    yl = y
+    stopped = np.zeros(P, dtype=bool)
     for _ in range(nitermax):
-        d = np.sqrt(np.sum(cw * (Xz - y[None]) ** 2, axis=1, keepdims=True))
-        w = wrow / np.maximum(d, epsilon)
-        denom = np.sum(w, axis=0)  # (1,P)
-        y_new = np.sum(w * Xz, axis=0) / np.maximum(denom, epsilon)
-        if np.nanmax(np.abs(y_new - y)) < epsilon:
-            y = y_new
+        diff = Xl - yl[None]
+        if cw is not None:
+            diff *= cw
+        d = np.sqrt(np.einsum("tbp,tbp->tp", diff, diff))
+        w = wl / np.maximum(d, epsilon)
+        y_new = (np.einsum("tp,tbp->bp", w, Xl)
+                 / np.maximum(w.sum(axis=0), epsilon))
+        step = np.abs(y_new - yl)
+        if cw is not None:
+            step *= cw
+        now = ~stopped & (step.max(axis=0) < epsilon)
+        y[:, live[now]] = y_new[:, now]
+        stopped |= now
+        yl = y_new
+        n_stopped = np.count_nonzero(stopped)
+        if n_stopped == len(live):
             break
-        y = y_new
-    no_obs = complete.sum(axis=0) == 0  # pixels with no usable obs
-    if np.any(no_obs):
-        with np.errstate(all="ignore"):
-            fallback = np.nanmedian(X, axis=0)
-        y[:, no_obs] = fallback[:, no_obs]
+        if 4 * n_stopped >= len(live):
+            # compress, not fancy indexing: it keeps the arrays C-ordered
+            keep = ~stopped
+            live, yl = live[keep], yl.compress(keep, axis=1)
+            Xl, wl = Xl.compress(keep, axis=2), wl.compress(keep, axis=1)
+            if cw is not None:
+                cw = cw.compress(keep, axis=1)
+            stopped = stopped[keep]
+    else:
+        y[:, live[~stopped]] = yl[:, ~stopped]
+    no_obs = ~complete.any(axis=0)  # pixels with no usable obs
+    y[:, no_obs] = med[:, no_obs]
     return y
 
 
 def geomedian_mb(X: np.ndarray, nitermax: int = 100, epsilon: float = 1e-8,
                  impute_na: bool = True) -> np.ndarray:
-    y = weiszfeld(X, nitermax, epsilon)
+    """Per-pixel geometric median (:func:`weiszfeld`, same per-pixel
+    stop and ``epsilon`` meaning). With ``impute_na``, a band with a gap
+    among a pixel's non-empty observations takes its band median. One
+    band-median pass serves the init, that imputation and the fallback
+    for pixels without a complete observation."""
+    if X.dtype not in (np.float32, np.float64):
+        X = X.astype(np.float64)
+    med = nanmedian0(X)
+    y = _weiszfeld(X, med, nitermax, epsilon)
     if impute_na:
         vr = _valid_rows(X)
         col_has_na = np.any(np.isnan(X) & vr[:, None, :], axis=0)  # (B,P)
-        med = np.nanmedian(X, axis=0)
         y = np.where(col_has_na, med, y)
     return y
 
@@ -426,7 +486,7 @@ def xoid_mb(X: np.ndarray, stat_fn: Callable[[np.ndarray], np.ndarray],
 
 
 def _nanmedian_stat(x, w=None):
-    return np.nanmedian(x, axis=0)
+    return nanmedian0(x)
 
 
 def medoid_mb(X, distance_type="euclidean", impute_na=True):
@@ -450,12 +510,14 @@ def geomedoid_mb(X, distance_type="euclidean", impute_na=True,
 REDUCERS: dict[str, Callable[[np.ndarray], np.ndarray]] = {}
 
 
-# pixels per multiband-reducer chunk: keeps the iterative kernels'
-# working set (~T*B*chunk*8B*~6 temporaries) L2-resident, so the 100
-# Weiszfeld iterations re-read cache instead of streaming DRAM. Without
-# chunking, per-core throughput collapses as workers contend for memory
-# bandwidth (measured: 8->32 workers gave only 1.5x). Chunk boundaries
-# don't change results: every reducer is independent per pixel.
+# pixels per multiband-reducer chunk: bounds the kernels' working set
+# (a few T*B*chunk temporaries; ~1 MB each for T=12, B=5 in float32) so
+# Weiszfeld's iterations re-read cache instead of streaming DRAM.
+# Without chunking, per-core throughput collapses as workers contend for
+# memory bandwidth (measured: 8->32 workers gave only 1.5x). A 64x64
+# cell is one chunk. Chunk boundaries don't change results beyond the
+# last bits of a sum: every reducer is independent per pixel, Weiszfeld
+# included, since each pixel stops on its own.
 PIX_CHUNK = 4096
 
 

@@ -4,15 +4,61 @@ Mirrors the execution-policy choices of the reference
 (/root/reference/R/gdal-options.R:67-113 — one compute thread per
 worker, parallelism at the process level) translated to Spark: AQE on,
 Arrow on, bounded Arrow batches, shuffle partitions sized to cores.
+
+Imported inside a PySpark worker (every engine UDF imports the
+package, and the package imports this module), it also stops the
+worker from re-reading its zip archives on every task. PySpark's
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``
+at the start of each task, and CPython 3.11's
+``zipimporter.invalidate_caches`` re-reads the whole central directory
+of its archive, once per cached importer: a dozen importers on
+``pyspark.zip`` and two on the spark-core jar (thousands of entries)
+cost ~0.2 s of CPU per task. :func:`_stamp_zip_importers` makes that
+re-read conditional on the archive file having changed. A freshly
+forked worker still pays the full cost until its first engine UDF
+imports the package.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
+
+_zip_invalidate_caches = zipimport.zipimporter.invalidate_caches
+
+
+def _archive_stamp(path: str):
+    """Identity of an archive file's current contents, None if it is gone."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_ino, st.st_size, st.st_mtime_ns
+
+
+def _invalidate_if_changed(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive
+    directory only when the file was replaced or rewritten since this
+    importer last read it."""
+    stamp = _archive_stamp(self.archive)
+    if stamp is None or stamp != getattr(self, "_archive_stamp", None):
+        _zip_invalidate_caches(self)
+        self._archive_stamp = stamp
+
+
+def _stamp_zip_importers() -> None:
+    """Install :func:`_invalidate_if_changed` for every ``zipimporter``
+    of this process, and stamp the importers already cached as read."""
+    for importer in list(sys.path_importer_cache.values()):
+        if isinstance(importer, zipimport.zipimporter):
+            importer._archive_stamp = _archive_stamp(importer.archive)
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -113,3 +159,7 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+if SparkFiles._is_running_on_worker:
+    _stamp_zip_importers()
