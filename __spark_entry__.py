@@ -248,10 +248,10 @@ def q_coverage_filter(spark, sf_dir):
     """P5/J4 theta predicate through the engine's spatial_join: keep a
     scene when area(scene ∩ AOI) / area(AOI) exceeds the threshold —
     the reference's stac_coverage_filter semantics
-    (/root/reference/R/stac-utils.R:487-508). Scene footprints are
-    integer rectangles, so the Sutherland–Hodgman refine is exact and
-    the DuckDB oracle is closed-form rectangle math."""
-    _ensure_shipped(spark)  # spatial_join's refine runs pandas UDFs
+    (/root/reference/R/stac-utils.R:487-508). Scene footprints and
+    AOIs are rectangles, so the refine is the exact clamp expression
+    (no pandas UDF) and the DuckDB oracle is the same closed-form
+    rectangle math."""
     from vrtility_spark.join import spatial_join
     pts = _events_points(spark, sf_dir)
     images = pts.select(
@@ -264,16 +264,18 @@ def q_coverage_filter(spark, sf_dir):
         F.col("event_type").alias("caption"),
         F.col("user_id").alias("phash"),
         F.col("ts").alias("datetime"))
+    # built from pandas: spatial_join reads it to the driver without a
+    # Spark job
     aoi = spark.createDataFrame(
-        [(a, z, x0, y0, x1, y1,
-          f"POLYGON(({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))")
-         for a, z, x0, y0, x1, y1 in AOIS],
+        pd.DataFrame(
+            [(a, z, x0, y0, x1, y1,
+              f"POLYGON(({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))")
+             for a, z, x0, y0, x1, y1 in AOIS],
+            columns=["aoi_id", "zone", "xmin", "ymin", "xmax", "ymax",
+                     "geom_wkt"]),
         "aoi_id string, zone long, xmin double, ymin double, "
         "xmax double, ymax double, geom_wkt string")
-    # join_res 5: cell edge 32768 m >= the 40 km footprints' half —
-    # ~5 cover cells/scene instead of res 6's ~12 (see spatial_join's
-    # sizing rule; measured ~20% faster, byte-identical result)
-    out = spatial_join(images, aoi, join_res=5, min_coverage_of_aoi=0.000513)
+    out = spatial_join(images, aoi, min_coverage_of_aoi=0.000513)
     return out.select("aoi_id", "image_id",
                       F.round("coverage", 9).alias("cov_r"))
 

@@ -83,7 +83,7 @@ def main() -> None:
         n = spark.read.parquet(args.out).count()
     elif args.job == "join":
         aoi = schema.aoi_df(spark, datagen.aoi_pandas(nx=args.nx, ny=args.ny))
-        result = spatial_join(images, aoi, n_salts=8)
+        result = spatial_join(images, aoi, n_salts=8, broadcast_aoi=False)
         result.write.mode("overwrite").parquet(args.out)
         n = spark.read.parquet(args.out).count()
     else:  # knn

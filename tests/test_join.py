@@ -50,11 +50,91 @@ def test_spatial_join_matches_bruteforce(spark, tiny_images, tiny_aoi,
 
 def test_spatial_join_salted_identical_rows(spark, tiny_images, tiny_aoi,
                                             tiny_images_pdf, tiny_aoi_pdf):
-    got = J.spatial_join(tiny_images, tiny_aoi, n_salts=4) \
+    got = J.spatial_join(tiny_images, tiny_aoi, n_salts=4,
+                         broadcast_aoi=False) \
         .select("aoi_id", "image_id").toPandas()
     got_pairs = sorted(map(tuple, got.values))
     assert got_pairs == sorted(oracle.brute_force_join(tiny_images_pdf,
                                                        tiny_aoi_pdf))
+
+
+def test_broadcast_join_rejects_salting(spark, tiny_images, tiny_aoi):
+    """The broadcast join has no shuffle to salt: n_salts > 0 fails by
+    name instead of being ignored; "auto" resolves to no salt."""
+    import pytest as _pt
+    with _pt.raises(ValueError, match="broadcast_aoi=False"):
+        J.spatial_join(tiny_images, tiny_aoi, n_salts=4)
+    assert J.spatial_join(tiny_images, tiny_aoi, n_salts="auto") \
+        .select("aoi_id", "image_id").count() > 0
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_one_rect_aoi_join_runs_at_most_two_jobs(spark, tiny_images,
+                                                 tiny_images_pdf,
+                                                 tiny_aoi_pdf):
+    """A driver-held rectangle AOI plans without a Spark job (its rows
+    are read from the Arrow-built relation) and executes as one
+    broadcast zone/bbox join: no cover-cell explode of the catalog."""
+    tiny_images.count()
+    aoi_pdf = tiny_aoi_pdf[tiny_aoi_pdf.aoi_id == "hot"]
+    aoi = schema.aoi_df(spark, aoi_pdf)
+    df, plan_jobs = _jobs_in_group(
+        spark, "join-plan", lambda: J.spatial_join(tiny_images, aoi))
+    rows, exec_jobs = _jobs_in_group(
+        spark, "join-exec", lambda: df.select("aoi_id", "image_id").collect())
+    assert plan_jobs == 0
+    assert exec_jobs <= 2
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan and "BroadcastHashJoin" in plan, plan
+    assert sorted((r.aoi_id, r.image_id) for r in rows) \
+        == oracle.brute_force_join(tiny_images_pdf, aoi_pdf)
+    assert rows
+
+
+def test_empty_aoi_returns_empty_result(spark, tiny_images, tiny_aoi_pdf):
+    aoi = schema.aoi_df(spark, tiny_aoi_pdf.iloc[:0])
+    for broadcast in (True, False):
+        out = J.spatial_join(tiny_images, aoi, broadcast_aoi=broadcast)
+        assert out.columns == ["aoi_id", "image_id", "zone", "caption",
+                               "phash", "datetime", "isect_area",
+                               "coverage"]
+        assert out.collect() == []
+
+
+def test_multipart_rect_and_concave_parts_across_zones(spark, tiny_images,
+                                                       tiny_images_pdf):
+    """One AOI whose parts are a rectangle in zone 30 and a concave
+    L-shape in zone 31: the broadcast join refines both through the
+    polygon UDF and sums them over the whole geometry's area."""
+    import pandas as pd
+    rect = (16384.0, 8192.0, 98304.0, 73728.0)
+    l_shape = ("POLYGON ((8192 8192, 122880 8192, 122880 57344, "
+               "57344 57344, 57344 122880, 8192 122880, 8192 8192))")
+    x0, y0, x1, y1 = rect
+    aoi_pdf = pd.DataFrame([
+        dict(aoi_id="mixed", srs="ZONE:30", xmin=x0, ymin=y0, xmax=x1,
+             ymax=y1, geom_wkt=(f"POLYGON (({x0} {y0}, {x1} {y0}, "
+                                f"{x1} {y1}, {x0} {y1}, {x0} {y0}))")),
+        dict(aoi_id="mixed", srs="ZONE:31", xmin=8192.0, ymin=8192.0,
+             xmax=122880.0, ymax=122880.0, geom_wkt=l_shape)])
+    aoi = schema.aoi_df(spark, aoi_pdf.assign(min_coverage=0.0))
+    got = J.spatial_join(tiny_images, aoi).toPandas()
+    assert sorted(zip(got.aoi_id, got.image_id)) \
+        == oracle.brute_force_join(tiny_images_pdf, aoi_pdf)
+    assert set(got.zone) == {30, 31}
+    total = sum(J.polygon_area(J.parse_wkt_polygon(w))
+                for w in aoi_pdf.geom_wkt)
+    np.testing.assert_allclose(got.coverage, got.isect_area / total,
+                               rtol=1e-12)
 
 
 def test_salting_flattens_partitions(spark, tiny_images, tiny_aoi):

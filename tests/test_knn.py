@@ -285,3 +285,21 @@ def test_knn_empty_queries(spark):
     out = knn.knn_tiles(tiles, queries, res=5)
     assert out.schema == spark.createDataFrame([], knn._OUT_SCHEMA).schema
     assert out.count() == 0
+
+
+def test_knn_one_pandas_query_runs_at_most_five_jobs(spark):
+    """A query frame built from pandas is read to the driver without a
+    Spark job: the count job and the probe are all that run."""
+    rng = np.random.default_rng(12)
+    tiles = spark.createDataFrame(_point_tiles(rng, 500, [30], 8)).cache()
+    tiles.count()
+    queries = spark.createDataFrame(_queries(rng, 1, [30]))
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-pandas-jobs", "one pandas-built kNN query")
+    try:
+        rows = knn.knn_tiles(tiles, queries, res=8).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("knn-pandas-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        tiles.unpersist()
+    assert rows and len(jobs) <= 5, jobs

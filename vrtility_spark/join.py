@@ -1,4 +1,4 @@
-"""Spatial joins: cell-prefix hash join + exact geometric refinement.
+"""Spatial joins: zone/bbox broadcast or cell hash join + exact refinement.
 
 The reference's only spatial predicates are bbox/AOI intersection tests
 (``stac_coverage_filter``, /root/reference/R/stac-utils.R:487-508 —
@@ -7,16 +7,22 @@ applied driver-side per item. At 10^12-image scale that must become a
 distributed join, which this module makes explicit (BASELINE.json
 ``north_rule``):
 
-1. **coarse**: explode AOI bboxes and scene footprints to covering
-   cells at a join resolution → inner equi-join on ``(cell)`` — a plain
-   hash join Catalyst can broadcast when the AOI side is small.
-2. **refine**: exact polygon ∩ bbox intersection area inside a
+1. **coarse**: a driver-held AOI set (the default) is a few parts
+   the driver already holds: it is collected once and broadcast as one
+   Arrow relation, joined to the catalog on ``zone`` with a strict
+   bbox-overlap condition — a band join with an equality key, with no
+   cell replication on either side. An AOI set too big to collect
+   explodes, like the scene footprints, to covering cells at a join
+   resolution and meets them in an inner equi-join on ``(cell)``.
+2. **refine**: exact polygon ∩ bbox intersection area — a clamp
+   expression when every AOI part is an axis-aligned rectangle, else a
    vectorized pandas UDF (Sutherland–Hodgman clipping — handles the
    concave AOIs in the fixtures), giving the reference's area-ratio
    semantics exactly.
-3. **skew**: hot cells (a megacity AOI overlapping ~30% of a zone) are
-   salted explicitly: the big side gets a deterministic salt from
-   ``xxhash64``, the small side is exploded across all salts.
+3. **skew**: in the cell join, hot cells (a megacity AOI overlapping
+   ~30% of a zone) are salted explicitly: the big side gets a
+   deterministic salt from ``xxhash64``, the small side is exploded
+   across all salts.
 
 Point-in-polygon (ray crossing, NumPy-vectorized) covers the
 point-probe variant.
@@ -33,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vrtility_spark.schema import driver_frame
 from vrtility_spark.warp import cells_cover
 
 DEFAULT_JOIN_RES = 6  # 16384 m cells
@@ -214,12 +221,101 @@ def spatial_join(images: DataFrame, aoi: DataFrame,
 
     Returns one row per (aoi_id, image_id) with ``isect_area`` and
     ``coverage`` = area(∩)/area(AOI) — the reference's coverage ratio
-    (R/stac-utils.R:494-506). ``min_coverage_of_aoi`` applies the
-    theta-filter; ``n_salts > 0`` salts the coarse join for hot cells,
-    ``n_salts="auto"`` sizes the salt from the measured per-cell
-    histogram (:func:`auto_salt_count`) — and resolves to 0 under
-    ``broadcast_aoi=True``, where no shuffle partitions by cell and
-    salting would only multiply the broadcast side.
+    (R/stac-utils.R:494-506). ``image_id`` keys the catalog, as STAC
+    item ids do. ``min_coverage_of_aoi`` applies the theta-filter.
+
+    Multipart AOIs arrive as several rows per ``aoi_id`` (possibly in
+    different zones): every part is refined, intersection areas sum
+    over parts, and coverage divides by the area of the WHOLE
+    multipart geometry, parts the scene never touches included (parts
+    are assumed disjoint, as geometry parts are).
+
+    ``broadcast_aoi=True`` (the default) reads the AOI parts to the
+    driver and joins them to the catalog as one broadcast zone/bbox
+    join (:func:`_broadcast_parts`). ``broadcast_aoi=False`` is for AOI
+    sets too big to collect: both sides explode to cover cells at
+    ``join_res`` and meet in a hash join (:func:`_cell_join`).
+    ``join_res`` and ``n_salts`` apply only there: ``n_salts > 0``
+    salts the cell join for hot cells, and ``n_salts="auto"`` sizes the
+    salt from the measured per-cell histogram
+    (:func:`auto_salt_count`). With ``broadcast_aoi=True`` there is no
+    shuffle to salt: ``"auto"`` resolves to 0 and ``n_salts > 0``
+    raises.
+    """
+    if broadcast_aoi:
+        if n_salts != "auto" and n_salts > 0:
+            raise ValueError("n_salts > 0 needs broadcast_aoi=False: the "
+                             "broadcast join has no shuffle to salt")
+        refined = _broadcast_parts(images, aoi)
+    else:
+        refined = _cell_join(images, aoi, join_res, n_salts)
+    refined = refined.withColumn("coverage",
+                                 F.col("isect_area") / F.col("aoi_area"))
+    if min_coverage_of_aoi is not None:
+        refined = refined.where(F.col("coverage") > F.lit(min_coverage_of_aoi))
+    return refined.select("aoi_id", "image_id", "zone", "caption", "phash",
+                          "datetime", "isect_area", "coverage")
+
+
+_CATALOG_COLS = ("image_id", "zone", "xmin", "ymin", "xmax", "ymax",
+                 "caption", "phash", "datetime")
+_META_AGGS = ("zone", "caption", "phash", "datetime")
+
+
+def _broadcast_parts(images: DataFrame, aoi: DataFrame) -> DataFrame:
+    """The driver-held AOI side, collected once and broadcast back as
+    one Arrow relation with its part areas and per-AOI totals. Strict
+    bbox overlap keeps every positive-area intersection, so the refine
+    (a clamp expression when every part is a rectangle, else the UDF)
+    stays exact; the per-pair sum runs only for multipart AOIs."""
+    bbox = ["xmin", "ymin", "xmax", "ymax"]
+    parts = driver_frame(aoi.select("aoi_id", "zone", "geom_wkt", *bbox)) \
+        .drop_duplicates(["aoi_id", "geom_wkt"])
+    rings = [parse_wkt_polygon(w) for w in parts.geom_wkt]
+    is_rect = np.array([_as_rect(r) is not None for r in rings], dtype=bool)
+    # a rectangle's polygon area is its bbox area
+    part_area = np.where(is_rect,
+                         (parts.xmax - parts.xmin) * (parts.ymax - parts.ymin),
+                         [polygon_area(r) for r in rings])
+    totals = pd.Series(part_area).groupby(parts.aoi_id.to_numpy()).sum()
+    side = pd.DataFrame({
+        "aoi_id": parts.aoi_id, "p_zone": parts.zone,
+        **{f"p_{c}": parts[c] for c in bbox},
+        "aoi_area": parts.aoi_id.map(totals)})
+    ddl = ("aoi_id string, p_zone long, p_xmin double, p_ymin double, "
+           "p_xmax double, p_ymax double, aoi_area double")
+    all_rect = bool(is_rect.all())
+    if not all_rect:
+        side["geom_wkt"] = parts.geom_wkt
+        ddl += ", geom_wkt string"
+    side_df = images.sparkSession.createDataFrame(side, ddl)
+    cat = images.select(*_CATALOG_COLS)
+    c, p = F.col, lambda n: F.col(f"p_{n}")
+    overlap = ((c("zone") == p("zone"))
+               & (c("xmin") < p("xmax")) & (c("xmax") > p("xmin"))
+               & (c("ymin") < p("ymax")) & (c("ymax") > p("ymin")))
+    matched = cat.join(F.broadcast(side_df), overlap, "inner")
+    if all_rect:
+        iw = F.least(c("xmax"), p("xmax")) - F.greatest(c("xmin"), p("xmin"))
+        ih = F.least(c("ymax"), p("ymax")) - F.greatest(c("ymin"), p("ymin"))
+        isect = F.greatest(F.lit(0.0), iw) * F.greatest(F.lit(0.0), ih)
+    else:
+        isect = _isect_area_udf("geom_wkt", "xmin", "ymin", "xmax", "ymax")
+    per_part = matched.withColumn("isect_area", isect) \
+        .where(c("isect_area") > 0)
+    if not parts.aoi_id.duplicated().any():
+        return per_part
+    return (per_part.groupBy("aoi_id", "image_id")
+            .agg(*[F.first(m).alias(m) for m in _META_AGGS],
+                 F.sum("isect_area").alias("isect_area"),
+                 F.first("aoi_area").alias("aoi_area")))
+
+
+def _cell_join(images: DataFrame, aoi: DataFrame, join_res: int,
+               n_salts: int | str) -> DataFrame:
+    """The distributed AOI side: AOI parts and scene footprints explode
+    to their cover cells at ``join_res``, meet in an (optionally salted)
+    hash join on the cell, and refine in the Sutherland–Hodgman UDF.
 
     Size ``join_res`` so one cell edge is at least the typical scene
     footprint edge: the big side explodes to ``~(edge/cell + 1)^2``
@@ -228,55 +324,20 @@ def spatial_join(images: DataFrame, aoi: DataFrame,
     per scene and is ~20% slower end-to-end than res 5's ~5; going
     coarser than the footprint just adds refine-filtered false pairs
     at no benefit). The refine is exact at ANY resolution — the knob
-    trades explode fanout vs candidate precision only.
-    """
-    img_cells = cells_cover(
-        images.select("image_id", "zone", "xmin", "ymin", "xmax", "ymax",
-                      "caption", "phash", "datetime"),
-        join_res, out_col="jcell")
-    # multipart AOIs arrive as several rows per aoi_id (possibly in
-    # different zones): EVERY part is refined, intersection areas SUM
-    # over parts, and coverage is area(scene ∩ AOI) / area(AOI) over
-    # the WHOLE multipart geometry — the reference's
-    # stac_coverage_filter definition (R/stac-utils.R:494-506). The
-    # total AOI area includes parts the scene never touches (parts are
-    # assumed disjoint, as geometry parts are).
+    trades explode fanout vs candidate precision only."""
+    img_cells = cells_cover(images.select(*_CATALOG_COLS), join_res,
+                            out_col="jcell")
     aoi_parts = aoi.select("aoi_id", "zone", "geom_wkt",
-                           "xmin", "ymin", "xmax", "ymax")
-    # rectangle fast path: when every part is an axis-aligned rectangle
-    # — the dominant footprint/AOI case — the exact refine is a clamp
-    # FORMULA, so the whole join becomes pure Catalyst expressions:
-    # no Arrow transfer of the matched pairs, no pre-refine dedup
-    # shuffle (duplicate cell hits collapse inside the final
-    # aggregation via array_distinct over per-part contributions).
-    # Driver-side geometry inspection is CAPPED: a broadcastable AOI
-    # side is small by contract, but a non-broadcast (huge) AOI table
-    # must not be collected to decide a fast path — past the cap we
-    # just take the generic UDF route.
-    _INSPECT_CAP = 1024
-    rows = (aoi_parts.select("geom_wkt").distinct()
-            .take(_INSPECT_CAP + 1)) if broadcast_aoi else []
-    all_rect = (0 < len(rows) <= _INSPECT_CAP) and all(
-        _as_rect(parse_wkt_polygon(r.geom_wkt)) is not None for r in rows)
-    if all_rect:  # a rect's polygon area is its bbox area
-        aoi_parts = aoi_parts.withColumn(
-            "part_area", (F.col("xmax") - F.col("xmin"))
-            * (F.col("ymax") - F.col("ymin")))
-    else:
-        aoi_parts = aoi_parts.withColumn(
-            "part_area", _polygon_area_udf("geom_wkt"))
+                           "xmin", "ymin", "xmax", "ymax") \
+        .withColumn("part_area", _polygon_area_udf("geom_wkt"))
     aoi_total = (aoi_parts.dropDuplicates(["aoi_id", "geom_wkt"])
                  .groupBy("aoi_id")
                  .agg(F.sum("part_area").alias("aoi_area")))
-    part_bbox = ["xmin", "ymin", "xmax", "ymax"]
     aoi_cells = cells_cover(aoi_parts, join_res, zone_col="zone",
-                            out_col="jcell")
-    aoi_cells = aoi_cells.select(
-        "aoi_id", "geom_wkt", "jcell",
-        *[F.col(c).alias(f"p_{c}") for c in part_bbox]) if all_rect \
-        else aoi_cells.drop(*part_bbox, "zone", "part_area")
+                            out_col="jcell") \
+        .drop("xmin", "ymin", "xmax", "ymax", "zone", "part_area")
     if n_salts == "auto":
-        n_salts = 0 if broadcast_aoi else auto_salt_count(img_cells)
+        n_salts = auto_salt_count(img_cells)
     if n_salts > 0:
         img_cells = img_cells.withColumn(
             "salt", F.pmod(F.xxhash64("image_id"), F.lit(n_salts)).cast("int"))
@@ -286,50 +347,17 @@ def spatial_join(images: DataFrame, aoi: DataFrame,
         keys = ["jcell", "salt"]
     else:
         keys = ["jcell"]
-    right = F.broadcast(aoi_cells) if broadcast_aoi else aoi_cells
-    matched = img_cells.join(right, on=keys, how="inner")
-    meta_aggs = [F.first("zone").alias("zone"),
-                 F.first("caption").alias("caption"),
-                 F.first("phash").alias("phash"),
-                 F.first("datetime").alias("datetime")]
-    if all_rect:
-        iw = F.greatest(F.lit(0.0), F.least(F.col("xmax"), F.col("p_xmax"))
-                        - F.greatest(F.col("xmin"), F.col("p_xmin")))
-        ih = F.greatest(F.lit(0.0), F.least(F.col("ymax"), F.col("p_ymax"))
-                        - F.greatest(F.col("ymin"), F.col("p_ymin")))
-        per_pair = matched.withColumn("isect", iw * ih) \
-            .where(F.col("isect") > 0) \
-            .withColumn("part_id", F.xxhash64("geom_wkt"))
-        # ONE shuffle: duplicate (part, image) hits from several cover
-        # cells carry identical (part_id, isect) structs and collapse
-        # in array_distinct before the per-part sum
-        refined = (per_pair.groupBy("aoi_id", "image_id")
-                   .agg(*meta_aggs,
-                        F.aggregate(
-                            F.array_distinct(F.collect_list(
-                                F.struct("part_id", "isect"))),
-                            F.lit(0.0), lambda acc, s: acc + s.isect)
-                        .alias("isect_area")))
-    else:
-        pairs = matched.dropDuplicates(["aoi_id", "geom_wkt", "image_id"])
-        per_part = pairs.withColumn(
-            "isect_area",
-            _isect_area_udf("geom_wkt", "xmin", "ymin", "xmax", "ymax"),
-        ).where(F.col("isect_area") > 0)
-        refined = (per_part.groupBy("aoi_id", "image_id")
-                   .agg(*meta_aggs, F.sum("isect_area").alias("isect_area")))
-    # aoi_total is one row per aoi_id — broadcast it only when the
-    # caller declared the AOI side broadcastable (broadcast_aoi=False
-    # means "too many AOIs to ship to every executor", which applies
-    # to the totals table just as much as to the cover cells)
-    totals = F.broadcast(aoi_total) if broadcast_aoi else aoi_total
-    refined = (refined.join(totals, "aoi_id")
-               .withColumn("coverage",
-                           F.col("isect_area") / F.col("aoi_area")))
-    if min_coverage_of_aoi is not None:
-        refined = refined.where(F.col("coverage") > F.lit(min_coverage_of_aoi))
-    return refined.select("aoi_id", "image_id", "zone", "caption", "phash",
-                          "datetime", "isect_area", "coverage")
+    # a (part, image) pair hit from several cover cells is refined once
+    pairs = img_cells.join(aoi_cells, on=keys, how="inner") \
+        .dropDuplicates(["aoi_id", "geom_wkt", "image_id"])
+    per_part = pairs.withColumn(
+        "isect_area",
+        _isect_area_udf("geom_wkt", "xmin", "ymin", "xmax", "ymax"),
+    ).where(F.col("isect_area") > 0)
+    refined = (per_part.groupBy("aoi_id", "image_id")
+               .agg(*[F.first(m).alias(m) for m in _META_AGGS],
+                    F.sum("isect_area").alias("isect_area")))
+    return refined.join(aoi_total, "aoi_id")
 
 
 def spatial_semi_join(images: DataFrame, aoi: DataFrame, **kw) -> DataFrame:

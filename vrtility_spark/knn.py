@@ -6,9 +6,9 @@ nearest scene tiles (distance = query point → tile center), exactly.
 
 :func:`knn_tiles` works in three steps, with no rounds:
 
-1. **Collect the queries** once, through Arrow (``toPandas``): the
-   query set is a bounded, user-supplied probe list, never the tile
-   table.
+1. **Collect the queries** once (``schema.driver_frame``; no Spark
+   job when the query frame was built from pandas): the query set is
+   a bounded, user-supplied probe list, never the tile table.
 2. **Count** — ONE aggregation job. ``cell_id`` range predicates keep
    the tiles inside each query's Chebyshev box of radius
    ``max_rings``; they are counted per cell and collected, at most
@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from vrtility_spark.cells import _B, cell_size, encode_np
 from vrtility_spark.checkpointing import truncate_lineage
+from vrtility_spark.schema import driver_frame
 
 _SQRT2 = math.sqrt(2.0)
 
@@ -255,11 +256,11 @@ def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
         "cell_id", "image_id", "caption", "phash",
         ((F.col("xmin") + F.col("xmax")) / 2).alias("tcx"),
         ((F.col("ymin") + F.col("ymax")) / 2).alias("tcy"))
-    q = queries.select(
+    q = driver_frame(queries.select(
         "query_id", F.col("zone").cast("long").alias("zone"),
         F.col("x").cast("double").alias("qx"),
         F.col("y").cast("double").alias("qy"),
-        F.col("k").cast("int").alias("k")).toPandas()
+        F.col("k").cast("int").alias("k")))
     if q.empty:
         return spark.createDataFrame([], _OUT_SCHEMA)
     size = cell_size(res)

@@ -10,6 +10,7 @@ platform, orbit_state).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import types as T
 
 IMAGE_SCHEMA = T.StructType([
@@ -99,3 +100,14 @@ def aoi_df(spark, pdf):
 def knn_df(spark, pdf):
     return spark.createDataFrame(
         pdf[[f.name for f in KNN_QUERY_SCHEMA.fields]], schema=KNN_QUERY_SCHEMA)
+
+
+def driver_frame(df) -> pd.DataFrame:
+    """A small frame's rows on the driver, as pandas.
+
+    Built on ``collect()``: a frame made from pandas (Arrow) plans as a
+    ``LocalRelation``, whose rows ``collect()`` returns without a Spark
+    job, while ``toPandas()`` always runs one. Any other frame costs
+    the one job either way."""
+    return pd.DataFrame.from_records([tuple(r) for r in df.collect()],
+                                     columns=df.columns)
