@@ -105,9 +105,9 @@ def knn_df(spark, pdf):
 def driver_frame(df) -> pd.DataFrame:
     """A small frame's rows on the driver, as pandas.
 
-    Built on ``collect()``: a frame made from pandas (Arrow) plans as a
-    ``LocalRelation``, whose rows ``collect()`` returns without a Spark
-    job, while ``toPandas()`` always runs one. Any other frame costs
-    the one job either way."""
+    Built on ``collect()``: a frame made from a non-empty pandas frame
+    (Arrow) plans as a ``LocalRelation``, whose rows ``collect()``
+    returns without a Spark job, while ``toPandas()`` always runs one.
+    Any other frame costs the one job either way."""
     return pd.DataFrame.from_records([tuple(r) for r in df.collect()],
                                      columns=df.columns)
