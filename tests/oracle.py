@@ -181,7 +181,13 @@ def brute_force_join(images_pdf, aoi_pdf, min_coverage=None):
         totals[a.aoi_id] = totals.get(a.aoi_id, 0.0) + \
             polygon_area(parse_wkt_polygon(a.geom_wkt))
     isects: dict[tuple, float] = {}
+    seen_parts = set()
     for a in aoi_pdf.itertuples(index=False):
+        # a part listed twice is one part: counted once in the
+        # intersections as in the totals
+        if (a.aoi_id, a.geom_wkt) in seen_parts:
+            continue
+        seen_parts.add((a.aoi_id, a.geom_wkt))
         a_zone = int(a.srs.split(":")[1])
         for im in images_pdf.itertuples(index=False):
             if im.zone != a_zone:

@@ -558,6 +558,73 @@ def test_same_instant_scenes_deterministic(spark):
     assert dec_q[0, 0, 0] == 200
 
 
+def _arrow_cell(rows):
+    import pyarrow as pa
+    return pa.table({
+        "cell_id": pa.array([7] * len(rows), pa.int64()),
+        "image_id": [r[0] for r in rows],
+        "datetime": pa.array([r[1] for r in rows],
+                             pa.timestamp("us", tz="UTC")),
+        "bytes": pa.array([codec.encode(np.full((2, 3, 4), r[2], np.uint16),
+                                        "raw16") for r in rows], pa.binary()),
+        "w": pa.array([4] * len(rows), pa.int32()),
+        "h": pa.array([3] * len(rows), pa.int32()),
+        "fmt": [r[3] if len(r) > 3 else "raw16" for r in rows],
+        "nodata": [0.0] * len(rows),
+        "band_nodata": pa.array([None] * len(rows), pa.list_(pa.float64())),
+    })
+
+
+def test_cell_stack_reads_arrow_group():
+    """``cell_stack`` on an Arrow table: null datetimes drop, rows sort
+    by time then by ``scene_order_key`` for same-instant scenes, the
+    payloads decode in that order with nodata masked, and a profile
+    mismatch or an over-budget stack fails loudly."""
+    import datetime as dt
+    t0 = dt.datetime(2024, 6, 1, tzinfo=dt.timezone.utc)
+    t1 = dt.datetime(2024, 6, 2, tzinfo=dt.timezone.utc)
+    tied = sorted(["b_scene", "a_scene", "c_scene"],
+                  key=composite.scene_order_key)
+    fills = {"late": 5, "gone": 9, "b_scene": 1, "a_scene": 2,
+             "c_scene": 0}
+    rows = [("late", t1, 5), ("gone", None, 9),
+            ("b_scene", t0, 1), ("a_scene", t0, 2), ("c_scene", t0, 0)]
+    tbl, stack, nd = composite.cell_stack(_arrow_cell(rows), "cell_id")
+    order = [*tied, "late"]
+    assert tbl.column("image_id").to_pylist() == order
+    assert stack.shape == (4, 2, 3, 4) and stack.dtype == np.float64
+    for i, iid in enumerate(order):
+        want = np.nan if fills[iid] == 0 else fills[iid]  # 0 is nodata
+        np.testing.assert_array_equal(stack[i], np.full((2, 3, 4), want))
+    assert nd == 0.0
+    # a group of null datetimes only has no stack
+    empty, none, _ = composite.cell_stack(_arrow_cell(rows[1:2]), "cell_id")
+    assert empty.num_rows == 0 and none is None
+    with pytest.raises(ValueError, match="cell 7: scenes disagree on w/h/fmt"):
+        composite.cell_stack(_arrow_cell(rows[:1] + [("x", t0, 3, "png")]),
+                             "cell_id")
+    with pytest.raises(ValueError, match="over the max_stack_bytes budget"):
+        composite.cell_stack(_arrow_cell(rows), "cell_id",
+                             max_stack_bytes=100)
+
+
+def test_composite_grouped_map_reads_only_its_columns(spark, tiny_images):
+    """The stack path's grouped Arrow map gets only the columns
+    ``cell_stack`` and the output read — the catalog's band names,
+    per-band scales and cell prefix never reach the Python worker."""
+    import re
+    celled = warp.assign_cells(tiny_images, datagen.TILE_RES)
+    assert {"bands", "band_scale", "cell_prefix"} <= set(celled.columns)
+    plan = composite.composite(celled, "median")._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    line = next(ln for ln in plan.splitlines()
+                if "FlatMapGroupsInArrow" in ln)
+    args = re.search(r"reduce_group\(([^)]*)\)", line).group(1)
+    cols = {a.split("#")[0].strip() for a in args.split(",")}
+    assert cols == {"cell_id", "datetime", "bytes", "w", "h", "fmt",
+                    "nodata", "image_id", "band_nodata", "caption"}, cols
+
+
 def test_qmosaic_valid_neg_inf_beats_nan():
     # scene0 score NaN (invalid), scene1 score -inf (VALID): the
     # winner must be scene1 — -inf is a value, NaN is the absence

@@ -108,6 +108,10 @@ def test_empty_aoi_returns_empty_result(spark, tiny_images, tiny_aoi_pdf):
                                "phash", "datetime", "isect_area",
                                "coverage"]
         assert out.collect() == []
+    # the empty AOI side folds away: no Python-RDD scan in the broadcast
+    # join's plan
+    out = J.spatial_join(tiny_images, aoi)
+    assert "ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_multipart_rect_and_concave_parts_across_zones(spark, tiny_images,
@@ -217,6 +221,26 @@ def test_multipart_aoi_every_part_evaluated(spark, tiny_images, tiny_images_pdf)
         .select("isect_area", "coverage").toPandas()
     np.testing.assert_allclose(got2.coverage, got2.isect_area / total,
                                rtol=1e-12)
+
+
+def test_repeated_part_counts_once(spark, tiny_images, tiny_images_pdf):
+    """A part listed twice under one aoi_id is one part: the engine and
+    the oracle count it once in the intersections as in the total, so
+    coverage stays within (0, 1] and the thresholded rows agree."""
+    import pandas as pd
+    x0, y0, x1, y1 = 16384.0, 8192.0, 98304.0, 73728.0
+    part = dict(aoi_id="twice", srs="ZONE:30", xmin=x0, ymin=y0, xmax=x1,
+                ymax=y1, geom_wkt=(f"POLYGON (({x0} {y0}, {x1} {y0}, "
+                                   f"{x1} {y1}, {x0} {y1}, {x0} {y0}))"))
+    aoi_pdf = pd.DataFrame([part, part])
+    aoi = schema.aoi_df(spark, aoi_pdf.assign(min_coverage=0.0))
+    got = J.spatial_join(tiny_images, aoi).toPandas()
+    assert len(got) and (got.coverage > 0).all() \
+        and (got.coverage <= 1.0 + 1e-12).all()
+    for cut in (None, 0.2, 0.6):
+        rows = got if cut is None else got[got.coverage > cut]
+        assert sorted(zip(rows.aoi_id, rows.image_id)) \
+            == oracle.brute_force_join(tiny_images_pdf, aoi_pdf, cut)
 
 
 def test_asof_join_property_vs_bruteforce(spark):

@@ -282,9 +282,13 @@ def test_knn_empty_queries(spark):
     queries = spark.createDataFrame(_queries(rng, 0, [30]),
                                     "query_id string, zone long, x double,"
                                     " y double, k long")
-    out = knn.knn_tiles(tiles, queries, res=5)
-    assert out.schema == spark.createDataFrame([], knn._OUT_SCHEMA).schema
-    assert out.count() == 0
+    for search in (knn.knn_tiles, knn.knn_tiles_distributed):
+        out = search(tiles, queries, res=5)
+        assert out.schema == spark.createDataFrame([], knn._OUT_SCHEMA).schema
+        assert out.count() == 0
+        # the empty result folds to a LocalRelation: no Python-RDD scan
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
 
 
 def test_knn_one_pandas_query_runs_at_most_five_jobs(spark):

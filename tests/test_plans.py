@@ -112,7 +112,7 @@ def test_regrid_pipeline_single_shuffle_one_arrow_map(spark):
     plan = _plan(spark, "image_regrid_composite")
     assert plan.count(") Exchange") == 1, plan
     assert plan.count(") MapInPandas") == 1, plan
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
 
 
 def test_remedian_single_exchange_streaming_map(spark):

@@ -97,3 +97,64 @@ def test_worker_has_zip_stamps_driver_does_not(spark):
     rows = spark.range(2).mapInPandas(probe, "hooked boolean, stamped long").collect()
     assert rows and all(r.hooked and r.stamped > 0 for r in rows)
     assert zipimport.zipimporter.invalidate_caches is session._zip_invalidate_caches
+
+
+def _rounds(spark, probe, n_tasks=8, rounds=3):
+    """Run ``probe`` as one task per partition, ``rounds`` jobs one after
+    another; the reused Python workers run tasks of several jobs."""
+    sc = spark.sparkContext
+    return [row for _ in range(rounds)
+            for row in sc.parallelize(range(n_tasks), n_tasks)
+            .mapPartitions(probe).collect()]
+
+
+def test_worker_heap_is_frozen_between_tasks(spark):
+    """In a worker that already ran a task, the daemon's collection
+    between tasks froze the heap: the next task finds a permanent
+    generation and only its own few objects tracked."""
+
+    def probe(_):
+        import gc
+        import sys
+
+        import vrtility_spark  # noqa: F401  (installs the freeze hook)
+        before = getattr(sys, "_vrt_probe_tasks", 0)
+        sys._vrt_probe_tasks = before + 1
+        yield before, gc.get_freeze_count(), len(gc.get_objects())
+
+    rows = _rounds(spark, probe)
+    later = [r for r in rows if r[0] > 0]
+    assert later, rows
+    assert all(frozen > 0 and tracked < 2000 for _, frozen, tracked in later), later
+
+
+def test_cyclic_garbage_of_a_task_is_collected(spark):
+    """An object that references itself, made in one task and reachable
+    afterwards only through a weakref, is gone when the next task of
+    the same worker runs: the collection runs before the freeze."""
+
+    def probe(_):
+        import sys
+        import weakref
+
+        import vrtility_spark  # noqa: F401
+
+        class Cycle:
+            pass
+
+        ref = getattr(sys, "_vrt_probe_ref", None)
+        seen = None if ref is None else ref() is None
+        c = Cycle()
+        c.me = c
+        sys._vrt_probe_ref = weakref.ref(c)
+        yield seen
+
+    seen = [s for s in _rounds(spark, probe) if s is not None]
+    assert seen and all(seen), seen
+
+
+def test_driver_has_no_freeze_callback():
+    import gc
+
+    from vrtility_spark import session
+    assert session._freeze_after_task_gc not in gc.callbacks

@@ -44,6 +44,56 @@ def test_hampel_random_matches_oracle():
         np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+def _hampel_nanmedian_reference(X, k, t0=3.0):
+    """The Hampel kernel as it was before the sort-based medians:
+    ``np.nanmedian`` over ``sliding_window_view`` windows (window axis
+    last) — kept here as the bit-exact reference."""
+    from numpy.lib.stride_tricks import sliding_window_view
+    X = np.asarray(X, dtype=np.float64)
+    T, P = X.shape
+    isna = np.isnan(X)
+    order = np.argsort(isna, axis=0, kind="stable")
+    V = np.take_along_axis(X, order, axis=0)
+    n_valid = (~isna).sum(axis=0)
+    Fv = V.copy()
+    win = 2 * k + 1
+    if T >= win:
+        Wn = sliding_window_view(V, win, axis=0)
+        x0 = np.nanmedian(Wn, axis=2)
+        S0 = 1.4826 * np.nanmedian(np.abs(Wn - x0[..., None]), axis=2)
+        centers = V[k: T - k]
+        idx = np.arange(k, T - k)[:, None]
+        interior = (idx < (n_valid[None, :] - k)) & (n_valid[None, :] >= win)
+        with np.errstate(invalid="ignore"):
+            outlier = interior & (np.abs(centers - x0) > t0 * S0)
+        Fv[k: T - k] = np.where(outlier, x0, centers)
+    out = np.empty_like(X)
+    np.put_along_axis(out, order, Fv, axis=0)
+    out[isna] = np.nan
+    return out
+
+
+@pytest.mark.filterwarnings("ignore:All-NaN slice:RuntimeWarning")
+def test_hampel_kernel_bit_identical_to_nanmedian_windows():
+    """The sort-based kernel gives the old ``np.nanmedian`` kernel's
+    output bit for bit, and the oracle's, on NaN-heavy series,
+    all-NaN columns and spikes."""
+    rng = np.random.default_rng(31)
+    for T, P, nan_frac in ((12, 256, 0.6), (36, 300, 0.85), (5, 64, 0.3)):
+        X = rng.normal(100.0, 5.0, size=(T, P))
+        X[rng.random(X.shape) < 0.05] *= 40.0  # outliers
+        X[rng.random(X.shape) < nan_frac] = np.nan
+        X[:, :4] = np.nan   # all-NaN columns
+        X[:-1, 4] = np.nan  # a lone valid value
+        for k in (1, 2, 3):
+            got = timeseries.hampel_np(X, k)
+            assert np.array_equal(got, _hampel_nanmedian_reference(X, k),
+                                  equal_nan=True)
+            exp = np.stack([oracle.hampel_1(X[:, p], k)
+                            for p in range(P)], axis=1)
+            np.testing.assert_allclose(got, exp, equal_nan=True)
+
+
 def test_locf():
     X = np.array([[np.nan, 1.0], [2.0, np.nan], [np.nan, np.nan]])
     out = timeseries.locf_np(X)

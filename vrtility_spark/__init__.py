@@ -23,8 +23,11 @@ rows:
 
 Everything is DataFrame-first: plans are built from built-in
 ``pyspark.sql.functions`` wherever semantics allow (Catalyst codegen),
-and drop to Arrow-vectorized ``pandas_udf`` / ``applyInPandas`` only for
-pixel-space kernels. No per-row Python UDFs anywhere.
+and drop to Arrow-vectorized ``pandas_udf`` / ``applyInPandas`` /
+``applyInArrow`` only for pixel-space kernels; the grouped time-stack
+operators read their cells straight from Arrow
+(:func:`vrtility_spark.composite.cell_stack`). No per-row Python UDFs
+anywhere.
 """
 
 __version__ = "0.1.0"

@@ -30,7 +30,7 @@ candidate split, which needs the per-scene prefix of those statistics
 runs one O(T) sweep maintaining running left-segment sums (six
 ``(B, H, W)`` planes — memory is independent of T beyond the stack
 itself), and the distributed shape is the same cell-keyed
-``groupBy().applyInPandas`` the holistic composites use: scenes
+``groupBy().applyInArrow`` the holistic composites use: scenes
 shuffle ONCE on the spatial key, and each cell is read through
 :func:`composite.cell_stack` (its group rules, memory budget
 included).  At 100 TB the shuffle is the same volume as any composite —

@@ -227,17 +227,15 @@ def pd_isna(v) -> bool:
         return False
 
 
-def band_nodata_keys(pdf) -> set:
-    """Distinct normalized ``band_nodata`` values across a pandas
-    frame: ``None`` / scalar-NaN collapse to ``None``; arrays compare
-    by their float64 byte image. One element ⇔ the group agrees on its
-    per-band sentinels — the band_nodata half of the grouped-map
-    profile check (composite._check_profile)."""
-    import pandas as pd
-    col = getattr(pdf, "band_nodata", pd.Series([None] * len(pdf)))
+def band_nodata_keys(values) -> set:
+    """Distinct normalized ``band_nodata`` values: ``None`` /
+    scalar-NaN collapse to ``None``; arrays compare by their float64
+    byte image. At most one element ⇔ the group agrees on its per-band
+    sentinels — the band_nodata half of the grouped-map profile check
+    (composite._check_profile)."""
     return {None if v is None or (np.isscalar(v) and pd_isna(v))
             else np.asarray(v, dtype=np.float64).tobytes()
-            for v in col}
+            for v in values}
 
 
 def psnr(a: np.ndarray, b: np.ndarray, peak: float = 65535.0) -> float:

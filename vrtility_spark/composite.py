@@ -29,10 +29,12 @@ reducers R/multiband_reduce_funs.R):
 
 All kernels are NumPy-vectorized over every pixel of a tile at once
 (the two Rcpp pivot kernels, src/multiband-reduce.cpp and
-src/restructure-cells.cpp, vanish into reshapes). The Spark wrapper is
-one ``groupBy(cell_id).applyInPandas`` — the shuffle that brings a
-pixel's full time series to one task (the reference's ``vrt_stack``,
-R/vrt-stack.R:27-77).
+src/restructure-cells.cpp, vanish into reshapes). The Spark wrapper of
+the stack path is one ``groupBy(cell_id).applyInArrow`` over only the
+columns it reads — the shuffle that brings a pixel's full time series
+to one task (the reference's ``vrt_stack``, R/vrt-stack.R:27-77) —
+and :func:`cell_stack` reads each cell's payloads straight from the
+Arrow buffers, with no pandas frame in between.
 """
 
 from __future__ import annotations
@@ -41,6 +43,8 @@ from typing import Callable, Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -654,28 +658,45 @@ def _profile_key(row):
 #
 # Every grouped time-stack operator (composite, singleband_m2m,
 # gapfill_periods, trend/harmonic/MK/breaks, feather) reads its cell the
-# same way: `cell_stack` below. The streaming accumulators (incremental
-# partials, remedian, trend/harmonic partials) share its per-scene
-# decode and profile rule without ever stacking.
+# same way: `stack_input` projects the columns, one
+# ``groupBy(key).applyInArrow`` brings the cell to one task and
+# `cell_stack` reads it straight from Arrow. The streaming accumulators
+# (incremental partials, remedian, trend/harmonic partials) share its
+# per-scene masking and profile rule without ever stacking.
 
-def _check_profile(pdf: pd.DataFrame, key: str, what: str = "scenes") -> None:
-    """The vrt_stack invariant: all rows of one group share one profile
-    — pixel grid and codec (``w``/``h``/``fmt``, plus ``nb`` on partial
-    rows), ``nodata`` (NaN counts as one value) and ``band_nodata``.
-    The reference errors on >1 SRS (R/vrt-stack.R:30); mixed zones are
-    impossible here because cell_id encodes the zone, but mixed pixel
-    grids / codecs / sentinels must fail loudly, not corrupt (a uint16
+def _values(frame, col: str) -> list:
+    """One column of a pandas frame or an Arrow table, as a list."""
+    if isinstance(frame, pa.Table):
+        return frame.column(col).to_pylist()
+    return frame[col].tolist()
+
+
+def _check_profile(frame, key: str, what: str = "scenes") -> None:
+    """The vrt_stack invariant: all rows of one group (a pandas frame
+    or an Arrow table) share one profile — pixel grid and codec
+    (``w``/``h``/``fmt``, plus ``nb`` on partial rows), ``nodata`` and
+    ``band_nodata``; a null or NaN counts as one value. The reference
+    errors on >1 SRS (R/vrt-stack.R:30); mixed zones are impossible
+    here because cell_id encodes the zone, but mixed pixel grids /
+    codecs / sentinels must fail loudly, not corrupt (a uint16
     first-row profile would silently re-encode int16 scenes)."""
-    grid = [c for c in ("w", "h", "fmt", "nb") if c in pdf.columns]
+    cols = (frame.column_names if isinstance(frame, pa.Table)
+            else frame.columns)
+
+    def n_distinct(col):
+        return len({"nan" if v is None or v != v else v
+                    for v in _values(frame, col)})
+
+    grid = [c for c in ("w", "h", "fmt", "nb") if c in cols]
     bad = []
-    if any(pdf[c].nunique() > 1 for c in grid):
+    if any(n_distinct(c) > 1 for c in grid):
         bad.append("/".join(grid))
-    if (pdf.nodata.nunique(dropna=False) > 1
-            or len(codec.band_nodata_keys(pdf)) > 1):
+    bn = _values(frame, "band_nodata") if "band_nodata" in cols else []
+    if n_distinct("nodata") > 1 or len(codec.band_nodata_keys(bn)) > 1:
         bad.append("nodata/band_nodata")
     if bad:
         raise ValueError(
-            f"cell {int(pdf[key].iloc[0])}: {what} disagree on "
+            f"cell {int(_values(frame, key)[0])}: {what} disagree on "
             f"{' and '.join(bad)}; normalize them onto one target "
             "grid/profile first")
 
@@ -690,14 +711,10 @@ def _check_scene_profile(profile, row, cell) -> None:
             "first")
 
 
-def _decode_scene(row, scene_fn=None, arr=None) -> np.ndarray:
-    """One scene row → float64 planes, NaN where invalid: decode (unless
-    ``arr`` holds the decoded payload already), ``scene_fn(arr,
-    nodata)``, then mask with the row's per-band sentinels
-    (``band_nodata``, else the scalar ``nodata``)."""
-    if arr is None:
-        arr = codec.decode(row.bytes, row.w, row.h, row.fmt)
-    nd = codec.row_band_meta(row, len(arr), "band_nodata", row.nodata)
+def _mask_scene(arr: np.ndarray, nd, scene_fn=None) -> np.ndarray:
+    """Decoded planes → float64, NaN where invalid: ``scene_fn(arr,
+    nd)``, then mask with the per-band sentinels ``nd`` (an array) or
+    the scalar."""
     if scene_fn is not None:
         n0 = len(arr)
         arr = scene_fn(arr, nd)
@@ -708,17 +725,60 @@ def _decode_scene(row, scene_fn=None, arr=None) -> np.ndarray:
     return codec.to_float_masked(arr, nd)
 
 
-def _empty_frame(schema: str) -> pd.DataFrame:
-    return pd.DataFrame(columns=[f.split(" ")[0] for f in schema.split(", ")])
+def _decode_scene(row, scene_fn=None) -> np.ndarray:
+    """One scene row → float64 planes, NaN where invalid: decode, then
+    :func:`_mask_scene` with the row's ``band_nodata``, else its scalar
+    ``nodata``."""
+    arr = codec.decode(row.bytes, row.w, row.h, row.fmt)
+    nd = codec.row_band_meta(row, len(arr), "band_nodata", row.nodata)
+    return _mask_scene(arr, nd, scene_fn)
 
 
-def cell_stack(pdf: pd.DataFrame, key: str, scene_fn=None,
+def arrow_schema(ddl) -> pa.Schema:
+    """A Spark schema (DDL string or ``StructType``) as the Arrow schema
+    a grouped Arrow map must return. Needs the driver's session."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+    return to_arrow_schema(ddl if isinstance(ddl, StructType)
+                           else _parse_datatype_string(ddl))
+
+
+def _arrow_column(values, typ: pa.DataType):
+    if isinstance(values, (pa.Array, pa.ChunkedArray)):
+        return values.cast(typ)
+    if pa.types.is_timestamp(typ):
+        values = np.asarray(values, "datetime64[us]")
+    return pa.array(values, typ, from_pandas=True)
+
+
+def arrow_table(schema: pa.Schema, **cols) -> pa.Table:
+    """An output table of ``schema``: each column an Arrow column (cast
+    to its field's type) or a sequence of values (datetime64 for
+    timestamps), where a NaN double becomes null as through pandas."""
+    return pa.table([_arrow_column(cols[f.name], f.type) for f in schema],
+                    schema=schema)
+
+
+def stack_input(df: DataFrame, key: str, order: str = "datetime",
+                *extra: str) -> DataFrame:
+    """``df`` projected onto what :func:`cell_stack` reads (``key``,
+    ``order``, the payload and its profile, ``image_id`` and
+    ``band_nodata`` when present) plus an operator's ``extra`` columns:
+    the grouped map then ships no column it does not read."""
+    optional = [c for c in ("image_id", "band_nodata") if c in df.columns]
+    return df.select(*dict.fromkeys(
+        [key, order, "bytes", "w", "h", "fmt", "nodata", *optional,
+         *extra]))
+
+
+def cell_stack(tbl: pa.Table, key: str, scene_fn=None,
                order: str = "datetime", dtype: str = "float64",
                max_stack_bytes: int | None = MAX_STACK_BYTES,
                hatch: str = ""):
-    """Bring one cell's rows together as a time-ordered ``(T,B,H,W)``
-    stack — the reference's ``vrt_stack`` (R/vrt-stack.R:27-77), and the
-    one reader of every grouped time-stack operator. The group rules:
+    """Bring one cell's rows (an Arrow table) together as a time-ordered
+    ``(T,B,H,W)`` stack — the reference's ``vrt_stack``
+    (R/vrt-stack.R:27-77), and the one reader of every grouped
+    time-stack operator. The group rules:
 
     - rows whose ``order`` value is null drop: they have no position in
       time (the asof_join precedent), and the incremental accumulators
@@ -734,56 +794,66 @@ def cell_stack(pdf: pd.DataFrame, key: str, scene_fn=None,
       (R/tiling.R:41-64) — fail loudly before the worker OOMs, naming
       the escape hatches (``hatch`` adds an operator-specific one).
 
-    Each scene decodes once through ``scene_fn`` (:func:`_decode_scene`)
-    and is cast to ``dtype`` right after masking. Returns ``(pdf, stack,
-    nodata)``: the filtered, sorted frame; the stack, NaN for nodata;
-    and the group's sentinel — the per-band array trimmed to the
-    stack's planes, or the scalar. A group with no ordered row returns
-    ``(empty frame, None, None)``."""
-    pdf = pdf[pdf[order].notna()]
-    if not len(pdf):
-        return pdf, None, None
-    if "image_id" in pdf.columns:
-        pdf = (pdf.assign(_ord=[scene_order_key(i) for i in pdf.image_id])
-               .sort_values([order, "_ord"], kind="mergesort")
-               .drop(columns="_ord"))
-    else:
-        pdf = pdf.sort_values(order, kind="mergesort")
-    pdf = pdf.reset_index(drop=True)
-    _check_profile(pdf, key)
-    rows = list(pdf.itertuples(index=False))
-    first = rows[0]
-    w, h, fmt = int(first.w), int(first.h), first.fmt
+    Each payload is read from the Arrow binary buffer in place (raw
+    formats decode with a zero-copy ``np.frombuffer``), goes through
+    ``scene_fn`` and the sentinel mask (:func:`_mask_scene`) and is cast
+    to ``dtype``. Returns ``(tbl, stack, nodata)``: the filtered, sorted
+    table; the stack, NaN for nodata; and the group's sentinel — the
+    per-band array trimmed to the stack's planes, or the scalar. A group
+    with no ordered row returns ``(empty table, None, None)``."""
+    tbl = tbl.filter(pc.is_valid(tbl.column(order)))
+    if not tbl.num_rows:
+        return tbl, None, None
+    keys = pa.table({"o": tbl.column(order)})
+    if "image_id" in tbl.column_names:
+        keys = keys.append_column("k", pa.array(
+            [scene_order_key(i) for i in _values(tbl, "image_id")],
+            pa.int64()))
+    # a stable sort: rows tied on both keys keep their arrival order
+    tbl = tbl.take(pc.sort_indices(
+        keys, sort_keys=[(c, "ascending") for c in keys.column_names]))
+    _check_profile(tbl, key)
+    w, h = tbl.column("w")[0].as_py(), tbl.column("h")[0].as_py()
+    fmt = tbl.column("fmt")[0].as_py()
+    payloads = [s.as_buffer() for s in tbl.column("bytes")]
     # plane count from the payload LENGTH for raw formats — a decode
     # just to count planes is one redundant full decode per group
     # (png payloads decode once and reuse it as stack[0])
-    nb = codec.plane_count(first.bytes, w, h, fmt)
-    first_arr = None
+    first = None
+    nb = codec.plane_count(payloads[0], w, h, fmt)
     if nb is None:
-        first_arr = codec.decode(first.bytes, w, h, fmt)
-        nb = len(first_arr)
-    est = len(rows) * nb * h * w * np.dtype(dtype).itemsize
+        first = codec.decode(payloads[0], w, h, fmt)
+        nb = len(first)
+    est = len(payloads) * nb * h * w * np.dtype(dtype).itemsize
     if max_stack_bytes is not None and est > max_stack_bytes:
         raise ValueError(
-            f"cell {int(pdf[key].iloc[0])}: stack needs "
-            f"~{est / 2**30:.2f} GiB ({len(rows)} scenes x {nb} bands x "
-            f"{h}x{w} px x {dtype}), over the max_stack_bytes budget "
+            f"cell {int(tbl.column(key)[0].as_py())}: stack needs "
+            f"~{est / 2**30:.2f} GiB ({len(payloads)} scenes x {nb} bands"
+            f" x {h}x{w} px x {dtype}), over the max_stack_bytes budget "
             f"({max_stack_bytes / 2**30:.2f} GiB). Escape hatches: "
             f"{hatch}split_to_child_cells(df, k) to shrink groups "
             "4^k-fold spatially before the shuffle, or a bigger "
             "max_stack_bytes on a larger executor.")
+    nd = codec.nodata_scalar(tbl.column("nodata")[0].as_py())
+    if "band_nodata" in tbl.column_names:
+        nd = codec.band_meta_or_scalar(
+            tbl.column("band_nodata")[0].as_py(), nb, nd)
     # float32 compute (the composite default) halves the kernels'
     # memory traffic (the scaling bottleneck at high parallelism) and
     # matches the reference's Float32 derived-band policy
     # (R/vrt-derived-block.R:123); float64 gives bit-exact parity with
     # the float64 NumPy oracle.
-    stack = np.stack([
-        _decode_scene(r, scene_fn, first_arr if i == 0 else None)
-        .astype(dtype, copy=False) for i, r in enumerate(rows)])
-    nd = codec.row_band_meta(first, nb, "band_nodata", float(first.nodata))
+    stack = None
+    for i, buf in enumerate(payloads):
+        arr = first if i == 0 and first is not None else \
+            codec.decode(buf, w, h, fmt)
+        plane = _mask_scene(arr, nd, scene_fn)
+        if stack is None:
+            stack = np.empty((len(payloads),) + plane.shape, dtype)
+        stack[i] = plane
     if isinstance(nd, np.ndarray):
         nd = nd[: stack.shape[1]]
-    return pdf, stack, nd
+    return tbl, stack, nd
 
 
 class _CellAcc:
@@ -963,14 +1033,19 @@ def _finalize(reducer, a1, a2):
     return out
 
 
-def _median_datetime(dt: pd.Series):
-    dt = dt.sort_values().reset_index(drop=True)
+def _median_datetime(dt) -> np.datetime64:
+    """Median of non-null instants (datetime64 values, an Arrow
+    timestamp column or a pandas Series), in microseconds, Spark's
+    timestamp unit."""
+    if isinstance(dt, (pa.Array, pa.ChunkedArray)):
+        dt = dt.to_numpy()
+    dt = np.sort(np.asarray(dt, dtype="datetime64[us]"))
     n_dt = len(dt)
     if n_dt % 2 == 1:
-        return dt.iloc[n_dt // 2]
+        return dt[n_dt // 2]
     # stats::median interpolates between the two middle times
-    lo, hi = dt.iloc[n_dt // 2 - 1], dt.iloc[n_dt // 2]
-    return lo + (hi - lo) / 2
+    lo, hi = dt[n_dt // 2 - 1], dt[n_dt // 2]
+    return lo + (hi - lo) // 2
 
 
 def _caption_agg(caps: list, total: int, cap: int) -> str:
@@ -1134,7 +1209,7 @@ def composite(df: DataFrame, reducer: str | Callable[[np.ndarray], np.ndarray],
               mode: str = "auto",
               max_stack_bytes: int | None = MAX_STACK_BYTES,
               ) -> DataFrame:
-    """``groupBy(cell).applyInPandas(reduce)`` — the whole
+    """``groupBy(cell).applyInArrow(reduce)`` — the whole
     multiband_reduce driver (R/multiband_reduce.R:103-259) as one
     shuffle + one Arrow-vectorized grouped map.
 
@@ -1195,33 +1270,34 @@ def composite(df: DataFrame, reducer: str | Callable[[np.ndarray], np.ndarray],
                                      caption_cap=caption_cap,
                                      compute_dtype=compute_dtype)
     fn = resolve_reducer(reducer)
+    out_schema = arrow_schema(COMPOSITE_SCHEMA)
 
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, stack, nd = cell_stack(
-            pdf, key, scene_fn, dtype=compute_dtype,
+    def reduce_group(tbl: pa.Table) -> pa.Table:
+        tbl, stack, nd = cell_stack(
+            tbl, key, scene_fn, dtype=compute_dtype,
             max_stack_bytes=max_stack_bytes,
             hatch="a DECOMPOSABLE reducer (mean/min/max/sum/mosaic/first/"
                   "geomean/mean_db run incrementally and never stack), ")
         if stack is None:
-            return _empty_frame(COMPOSITE_SCHEMA)
+            return out_schema.empty_table()
         out = fn(stack)  # (T, B, H, W) -> (B, H, W)
         if isinstance(nd, np.ndarray) and len(nd) != out.shape[0]:
             nd = nd[: out.shape[0]]
-        fmt = pdf.fmt.iloc[0]
+        fmt = tbl.column("fmt")[0].as_py()
         payload = codec.from_float(out, nd, codec.dtype_for(fmt))
-        return pd.DataFrame([{
-            "cell_id": int(pdf[key].iloc[0]),
-            "bytes": codec.encode(payload, fmt),
-            "w": int(pdf.w.iloc[0]), "h": int(pdf.h.iloc[0]), "fmt": fmt,
-            "n_scenes": len(pdf),
-            "datetime_median": _median_datetime(pdf["datetime"]),
-            "nodata": float(pdf.nodata.iloc[0]),
-            "band_nodata": None if np.isscalar(nd) else list(nd),
-            "caption_agg": _caption_agg(pdf.caption.tolist(), len(pdf),
-                                        caption_cap),
-        }])
+        return arrow_table(
+            out_schema, cell_id=tbl.column(key).slice(0, 1),
+            bytes=[codec.encode(payload, fmt)],
+            w=tbl.column("w").slice(0, 1), h=tbl.column("h").slice(0, 1),
+            fmt=[fmt], n_scenes=[tbl.num_rows],
+            datetime_median=[_median_datetime(tbl.column("datetime"))],
+            nodata=[codec.nodata_scalar(tbl.column("nodata")[0].as_py())],
+            band_nodata=[None if np.isscalar(nd) else list(nd)],
+            caption_agg=[_caption_agg(_values(tbl, "caption"),
+                                      tbl.num_rows, caption_cap)])
 
-    return df.groupBy(key).applyInPandas(reduce_group, schema=COMPOSITE_SCHEMA)
+    return (stack_input(df, key, "datetime", "caption").groupBy(key)
+            .applyInArrow(reduce_group, schema=COMPOSITE_SCHEMA))
 
 
 def split_to_child_cells(df: DataFrame, k: int = 1,

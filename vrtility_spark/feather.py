@@ -34,17 +34,16 @@ shipping a weight plane through the shuffle.
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vrtility_spark import codec
 from vrtility_spark.composite import (
     CAPTION_CAP, COMPOSITE_SCHEMA, MAX_STACK_BYTES, _caption_agg,
-    _empty_frame, _median_datetime, cell_stack)
+    _median_datetime, _values, arrow_schema, arrow_table, cell_stack,
+    stack_input)
 
 #: minimum weight for a valid pixel (output-pixel units): keeps every
 #: valid observation in the blend even exactly on a footprint edge
@@ -117,31 +116,32 @@ def feather_mosaic(scenes: DataFrame, res: int, out_w: int,
                             resampling=resampling,
                             mask_plane=mask_plane, scene_fn=scene_fn)
 
-    def blend(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, stack, nd = cell_stack(pdf, key,
+    out_schema = arrow_schema(COMPOSITE_SCHEMA)
+
+    def blend(tbl: pa.Table) -> pa.Table:
+        tbl, stack, nd = cell_stack(tbl, key,
                                     max_stack_bytes=max_stack_bytes)
         if stack is None:
-            return _empty_frame(COMPOSITE_SCHEMA)
-        first = pdf.iloc[0]
-        w, h, fmt = int(first.w), int(first.h), first.fmt
+            return out_schema.empty_table()
+        first = {c: tbl.column(c)[0].as_py()
+                 for c in (key, "w", "h", "fmt", "nodata", "xmin", "ymin")}
+        w, h, fmt = first["w"], first["h"], first["fmt"]
         # the regrid stage rewrote xmin/ymin to the CELL origin
-        cx0, cy0 = float(first.xmin), float(first.ymin)
-        wts = np.stack([feather_weights_np(
-            cx0, cy0, size, w, h,
-            (r.fp_xmin, r.fp_ymin, r.fp_xmax, r.fp_ymax), cap_px)
-            for r in pdf.itertuples(index=False)])
+        cx0, cy0 = float(first["xmin"]), float(first["ymin"])
+        wts = np.stack([feather_weights_np(cx0, cy0, size, w, h, fp, cap_px)
+                        for fp in zip(*(_values(tbl, c) for c in _FP_COLS))])
         out = feather_blend_np(stack, wts)
-        return pd.DataFrame([{
-            "cell_id": int(first[key]),
-            "bytes": codec.encode(
-                codec.from_float(out, nd, codec.dtype_for(fmt)), fmt),
-            "w": w, "h": h, "fmt": fmt, "n_scenes": len(pdf),
-            "datetime_median": _median_datetime(pdf["datetime"]),
-            "nodata": float(first.nodata),
-            "band_nodata": None if np.isscalar(nd) else list(nd),
-            "caption_agg": _caption_agg(pdf.caption.tolist(), len(pdf),
-                                        caption_cap),
-        }])
+        return arrow_table(
+            out_schema, cell_id=[first[key]],
+            bytes=[codec.encode(
+                codec.from_float(out, nd, codec.dtype_for(fmt)), fmt)],
+            w=[w], h=[h], fmt=[fmt], n_scenes=[tbl.num_rows],
+            datetime_median=[_median_datetime(tbl.column("datetime"))],
+            nodata=[codec.nodata_scalar(first["nodata"])],
+            band_nodata=[None if np.isscalar(nd) else list(nd)],
+            caption_agg=[_caption_agg(_values(tbl, "caption"),
+                                      tbl.num_rows, caption_cap)])
 
-    return tiles.groupBy(key).applyInPandas(blend,
-                                            schema=COMPOSITE_SCHEMA)
+    return (stack_input(tiles, key, "datetime", "caption", "xmin", "ymin",
+                        *_FP_COLS).groupBy(key)
+            .applyInArrow(blend, schema=COMPOSITE_SCHEMA))

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vrtility_spark.schema import driver_frame
+from vrtility_spark.schema import driver_frame, empty_frame
 from vrtility_spark.warp import cells_cover
 
 DEFAULT_JOIN_RES = 6  # 16384 m cells
@@ -288,7 +288,8 @@ def _broadcast_parts(images: DataFrame, aoi: DataFrame) -> DataFrame:
     if not all_rect:
         side["geom_wkt"] = parts.geom_wkt
         ddl += ", geom_wkt string"
-    side_df = images.sparkSession.createDataFrame(side, ddl)
+    side_df = (images.sparkSession.createDataFrame(side, ddl) if len(side)
+               else empty_frame(aoi, ddl))
     cat = images.select(*_CATALOG_COLS)
     c, p = F.col, lambda n: F.col(f"p_{n}")
     overlap = ((c("zone") == p("zone"))

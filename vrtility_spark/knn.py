@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from vrtility_spark.cells import _B, cell_size, encode_np
 from vrtility_spark.checkpointing import truncate_lineage
-from vrtility_spark.schema import driver_frame
+from vrtility_spark.schema import driver_frame, empty_frame
 
 _SQRT2 = math.sqrt(2.0)
 
@@ -85,7 +85,6 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
     ever collected. Results are row-identical to :func:`knn_tiles` on
     the same input (pytest-pinned).
     """
-    spark = tiles.sparkSession
     size = cell_size(res)
     nmax = (1 << res) - 1
     nside = 1 << res
@@ -114,7 +113,7 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
         q.unpersist()
         cell_counts.unpersist()
         tiles_p.unpersist()
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return empty_frame(queries, _OUT_SCHEMA)
 
     # first count radius: the disk that holds ~4·kmax tiles at the
     # mean density of the occupied cells
@@ -262,7 +261,7 @@ def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
         F.col("y").cast("double").alias("qy"),
         F.col("k").cast("int").alias("k")))
     if q.empty:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return empty_frame(queries, _OUT_SCHEMA)
     size = cell_size(res)
     nmax = (1 << res) - 1
     zone, k = q.zone.to_numpy(np.int64), q.k.to_numpy()

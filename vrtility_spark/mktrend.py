@@ -33,7 +33,7 @@ Statistics (per pixel/band, over the ``n`` valid observations):
 Spark-first shape: unlike OLS/harmonic these are NOT decomposable —
 S and the tie correction are rank statistics and Sen is a median over
 all pairs, so no fixed-size per-scene partial exists. The operator
-therefore uses the grouped-stack path (one ``applyInPandas`` per cell
+therefore uses the grouped-stack path (one ``applyInArrow`` per cell
 reading it through :func:`composite.cell_stack`, as the holistic
 composites geomedian/medoid do). That is the right 100-TB shape anyway: T (scenes
 per cell) is bounded by the acquisition cadence, the O(T²) pair work

@@ -111,3 +111,17 @@ def driver_frame(df) -> pd.DataFrame:
     Any other frame costs the one job either way."""
     return pd.DataFrame.from_records([tuple(r) for r in df.collect()],
                                      columns=df.columns)
+
+
+def empty_frame(df, ddl: str):
+    """An empty frame with the columns of ``ddl``, planned from ``df``.
+
+    The always-false filter folds the plan to an empty
+    ``LocalRelation``, which runs no task. ``createDataFrame`` of an
+    empty list or an empty pandas frame plans as a Python RDD instead,
+    and starts Python workers to return nothing."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import _parse_datatype_string
+    return df.where(F.lit(False)).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name)
+          for f in _parse_datatype_string(ddl).fields])

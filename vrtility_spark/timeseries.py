@@ -15,9 +15,10 @@ Exact parity with the reference's C++ kernel
 - optional LOCF imputation of remaining NAs (:96-121).
 
 The whole filter is NumPy-vectorized across all pixels of a tile at
-once via a stable NaN-compaction argsort + strided sliding windows —
-the (time × pixels) matrix shape of ``singleband_m2m``
-(/root/reference/R/singleband-many-to-many.R:138-257).
+once via a stable NaN-compaction argsort + windows stacked along a
+leading axis, whose medians come from the sort-based
+:func:`composite.nanmedian0` — the (time × pixels) matrix shape of
+``singleband_m2m`` (/root/reference/R/singleband-many-to-many.R:138-257).
 """
 
 from __future__ import annotations
@@ -27,13 +28,14 @@ import warnings
 from typing import Callable
 
 import numpy as np
-import pandas as pd
-from numpy.lib.stride_tricks import sliding_window_view
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vrtility_spark import codec
-from vrtility_spark.composite import MAX_STACK_BYTES, _empty_frame, cell_stack
+from vrtility_spark.composite import (
+    MAX_STACK_BYTES, arrow_schema, arrow_table, cell_stack, nanmedian0,
+    stack_input)
 
 
 def hampel_np(X: np.ndarray, k: int, t0: float = 3.0,
@@ -49,9 +51,10 @@ def hampel_np(X: np.ndarray, k: int, t0: float = 3.0,
     Fv = V.copy()
     win = 2 * k + 1
     if T >= win:
-        Wn = sliding_window_view(V, win, axis=0)  # (T-2k, P, win)
-        x0 = np.nanmedian(Wn, axis=2)
-        S0 = 1.4826 * np.nanmedian(np.abs(Wn - x0[..., None]), axis=2)
+        # window axis first, (win, T-2k, P), for the sort-based median
+        Wn = np.stack([V[j: T - 2 * k + j] for j in range(win)])
+        x0 = nanmedian0(Wn)
+        S0 = 1.4826 * nanmedian0(np.abs(Wn - x0))
         centers = V[k: T - k]  # (T-2k, P)
         # center index i (in compacted coords) = row + k; interior iff
         # k <= i < n_valid - k  and n_valid >= 2k+1
@@ -269,7 +272,7 @@ def singleband_m2m(df: DataFrame,
     (:func:`composite.cell_stack`), apply ``m2m_fun`` to each band's
     (time × pixels) matrix, emit one row per stacked timestep — the
     ``singleband_m2m`` routine (R/singleband-many-to-many.R:138-257) as a
-    single ``groupBy().applyInPandas`` with exploded output. The
+    single ``groupBy().applyInArrow`` with exploded output. The
     per-timestep sink becomes ``write.partitionBy("datetime")``.
 
     ``out_fmt`` re-types the per-timestep payloads (e.g. ``"rawf32"``
@@ -279,11 +282,13 @@ def singleband_m2m(df: DataFrame,
     default keeps the input codec and per-band sentinels (the
     smoother/filter contract).
     """
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, stack, nd = cell_stack(pdf, key,
+    out_schema = arrow_schema(M2M_SCHEMA)
+
+    def run(tbl: pa.Table) -> pa.Table:
+        tbl, stack, nd = cell_stack(tbl, key,
                                     max_stack_bytes=max_stack_bytes)
         if stack is None:
-            return _empty_frame(M2M_SCHEMA)
+            return out_schema.empty_table()
         Tn, B, H, W = stack.shape
         filtered = np.stack([
             m2m_fun(stack[:, b].reshape(Tn, H * W)).reshape(Tn, H, W)
@@ -292,21 +297,22 @@ def singleband_m2m(df: DataFrame,
         if out_fmt:
             o_fmt, o_nd, o_scalar = out_fmt, out_nodata, out_nodata
         else:
-            o_fmt, o_nd, o_scalar = (pdf.fmt.iloc[0], nd,
-                                     float(pdf.nodata.iloc[0]))
+            o_fmt, o_nd, o_scalar = (
+                tbl.column("fmt")[0].as_py(), nd,
+                codec.nodata_scalar(tbl.column("nodata")[0].as_py()))
         o_bn = None if np.isscalar(o_nd) else list(o_nd)
         o_dtype = codec.dtype_for(o_fmt)
-        return pd.DataFrame([{
-            "image_id": pdf.image_id.iloc[t],
-            "cell_id": int(pdf[key].iloc[t]),
-            "datetime": pdf.datetime.iloc[t],
-            "bytes": codec.encode(
-                codec.from_float(filtered[t], o_nd, o_dtype), o_fmt),
-            "w": W, "h": H, "fmt": o_fmt, "nodata": o_scalar,
-            "caption": pdf.caption.iloc[t], "band_nodata": o_bn,
-        } for t in range(Tn)])
+        return arrow_table(
+            out_schema, image_id=tbl.column("image_id"),
+            cell_id=tbl.column(key), datetime=tbl.column("datetime"),
+            bytes=[codec.encode(codec.from_float(f, o_nd, o_dtype), o_fmt)
+                   for f in filtered],
+            w=[W] * Tn, h=[H] * Tn, fmt=[o_fmt] * Tn,
+            nodata=[o_scalar] * Tn, caption=tbl.column("caption"),
+            band_nodata=[o_bn] * Tn)
 
-    return df.groupBy(key).applyInPandas(run, schema=M2M_SCHEMA)
+    return (stack_input(df, key, "datetime", "image_id", "caption")
+            .groupBy(key).applyInArrow(run, schema=M2M_SCHEMA))
 
 
 def hampel(df: DataFrame, k: int, t0: float = 3.0, impute_na: bool = False,
@@ -340,26 +346,29 @@ def gapfill_periods(df: DataFrame, key: str = "cell_id",
     needs no parsing. Fills every plane, including a trailing
     class/mask plane if the composite kept one.
     """
-    out_schema = df.schema
+    out_schema = arrow_schema(df.schema)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, stack, nd = cell_stack(pdf, key, order=order,
+    def run(tbl: pa.Table) -> pa.Table:
+        tbl, stack, nd = cell_stack(tbl, key, order=order,
                                     max_stack_bytes=max_stack_bytes)
         if stack is None:
-            return pdf
+            return tbl.cast(out_schema)
         P = stack.shape[0]  # (P,B,H,W)
         M = stack.reshape(P, -1)
         M = locf_np(M)
         if backfill:
             M = locf_np(M[::-1])[::-1]
         filled = M.reshape(stack.shape)
-        fmt = pdf.fmt.iloc[0]
+        fmt = tbl.column("fmt")[0].as_py()
         dtype = codec.dtype_for(fmt)
-        return pdf.assign(bytes=[
+        payloads = pa.array([
             codec.encode(codec.from_float(filled[i], nd, dtype), fmt)
-            for i in range(P)])
+            for i in range(P)], pa.binary())
+        return tbl.set_column(tbl.column_names.index("bytes"), "bytes",
+                              payloads).cast(out_schema)
 
-    return df.groupBy(key).applyInPandas(run, schema=out_schema)
+    # every column passes through, so the grouped map reads them all
+    return df.groupBy(key).applyInArrow(run, schema=df.schema)
 
 
 # ---------------------------------------------- scalar window twins ----

@@ -26,12 +26,14 @@ from typing import Callable, Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from vrtility_spark import codec
 from vrtility_spark.composite import (
     MAX_ACTIVE_BYTES, MAX_STACK_BYTES, _check_profile, _check_scene_profile,
-    _decode_scene, _empty_frame, _profile_key, cell_stack)
+    _decode_scene, _profile_key, arrow_schema, arrow_table, cell_stack,
+    stack_input)
 
 #: fixed time origin: ``t`` is fractional Julian years since this
 #: instant, so intercepts are comparable across jobs and the partial
@@ -124,20 +126,25 @@ def _stack_map(df: DataFrame, key: str, scene_fn, max_stack_bytes,
     ``kernel(t_years, stack)`` per cell — the stack path of every
     per-pixel time statistic (trend, harmonic, MK/Sen, breaks)."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, stack, _ = cell_stack(pdf, key, scene_fn,
+    out_schema = arrow_schema(TREND_SCHEMA)
+
+    def run(tbl: pa.Table) -> pa.Table:
+        tbl, stack, _ = cell_stack(tbl, key, scene_fn,
                                    max_stack_bytes=max_stack_bytes,
                                    hatch=hatch)
         if stack is None:
-            return _empty_frame(TREND_SCHEMA)
-        ts = t_years(pdf.datetime.values.astype("datetime64[ns]")
-                     .astype(np.int64))
-        return pd.DataFrame([_out_row(
-            pdf[key].iloc[0], kernel(ts, stack), pdf.w.iloc[0],
-            pdf.h.iloc[0], len(pdf), pdf.datetime.min(),
-            pdf.datetime.max())])
+            return out_schema.empty_table()
+        # rows come sorted by datetime: the first and last are the range
+        dts = tbl.column("datetime").to_numpy()
+        ts = t_years(dts.astype("datetime64[ns]").astype(np.int64))
+        row = _out_row(tbl.column(key)[0].as_py(), kernel(ts, stack),
+                       tbl.column("w")[0].as_py(),
+                       tbl.column("h")[0].as_py(), len(dts), dts[0],
+                       dts[-1])
+        return arrow_table(out_schema, **{c: [v] for c, v in row.items()})
 
-    return df.groupBy(key).applyInPandas(run, schema=TREND_SCHEMA)
+    return (stack_input(df, key).groupBy(key)
+            .applyInArrow(run, schema=TREND_SCHEMA))
 
 
 def _stat_partials(df: DataFrame, key: str, scene_fn, q: int,
