@@ -316,11 +316,8 @@ def test_incremental_mixed_nodata_profiles_one_flush(spark, tiny_images_pdf):
     assert a.nodata.isna().sum() == 6 and b.nodata.isna().sum() == 6
 
 
-def test_incremental_mixed_band_count_raises(spark, tiny_images):
-    """A scene with a different plane count in the same cell must fail
-    LOUDLY on the incremental path (numpy broadcasting would otherwise
-    silently smear one plane across all accumulator bands)."""
-    import pytest as _pt
+def _mixed_band_celled(spark, tiny_images):
+    """Three scenes of one cell, the second with one plane of three."""
     pdf = tiny_images.toPandas().iloc[:3].copy()
     # drop two planes from the second scene's payload only
     r = pdf.iloc[1]
@@ -330,9 +327,26 @@ def test_incremental_mixed_band_count_raises(spark, tiny_images):
     pdf["band_offset"] = None
     pdf["band_nodata"] = None
     df = schema.images_df(spark, pdf).coalesce(1)
-    celled = warp.assign_cells(df, datagen.TILE_RES)
+    return warp.assign_cells(df, datagen.TILE_RES)
+
+
+def test_incremental_mixed_band_count_raises(spark, tiny_images):
+    """A scene with a different plane count in the same cell must fail
+    LOUDLY on the incremental path (numpy broadcasting would otherwise
+    silently smear one plane across all accumulator bands)."""
+    import pytest as _pt
+    celled = _mixed_band_celled(spark, tiny_images)
     with _pt.raises(Exception, match="band counts|accumulator"):
         composite.composite(celled, "mean").collect()
+
+
+def test_stack_mixed_band_count_raises(spark, tiny_images):
+    """The holistic twin of the test above: the stack reader must not
+    broadcast a 1-plane scene over the other scenes' bands."""
+    import pytest as _pt
+    celled = _mixed_band_celled(spark, tiny_images)
+    with _pt.raises(Exception, match="band counts"):
+        composite.composite(celled, "median").collect()
 
 
 def test_incremental_cross_partition_band_nodata_disagreement(spark):

@@ -153,6 +153,38 @@ def test_cyclic_garbage_of_a_task_is_collected(spark):
     assert seen and all(seen), seen
 
 
+def test_frozen_cycle_dropped_later_is_collected(spark):
+    """A cycle held in module state across a task boundary is frozen;
+    dropped in a later task, it is dead once the worker has run
+    ``UNFREEZE_EVERY`` more tasks: the periodic unfreeze lets a full
+    collection walk it again."""
+    from vrtility_spark.session import UNFREEZE_EVERY
+
+    def probe(_):
+        import sys
+        import weakref
+
+        import vrtility_spark  # noqa: F401
+
+        class Cycle:
+            pass
+
+        k = getattr(sys, "_vrt_held_tasks", 0)
+        sys._vrt_held_tasks = k + 1
+        if k == 0:
+            c = Cycle()
+            c.me = c
+            sys._vrt_held = c
+            sys._vrt_held_ref = weakref.ref(c)
+        elif k == 1:
+            del sys._vrt_held
+        yield k, sys._vrt_held_ref() is None
+
+    rows = _rounds(spark, probe, rounds=2 * UNFREEZE_EVERY)
+    late = [dead for k, dead in rows if k > UNFREEZE_EVERY + 2]
+    assert late and all(late), rows
+
+
 def test_driver_has_no_freeze_callback():
     import gc
 

@@ -788,7 +788,8 @@ def cell_stack(tbl: pa.Table, key: str, scene_fn=None,
       which selection reducers (mosaic/first/qmosaic, xoid ties) would
       surface as run-to-run nondeterminism; the SAME key orders the
       incremental accumulators, so both paths pick one winner;
-    - all rows share one profile (:func:`_check_profile`);
+    - all rows share one profile (:func:`_check_profile`), and every
+      payload has the first one's plane count;
     - the decoded stack (T·B·H·W·itemsize) must fit ``max_stack_bytes``
       (None disables the check): the reference's tiling budget
       (R/tiling.R:41-64) — fail loudly before the worker OOMs, naming
@@ -847,6 +848,13 @@ def cell_stack(tbl: pa.Table, key: str, scene_fn=None,
     for i, buf in enumerate(payloads):
         arr = first if i == 0 and first is not None else \
             codec.decode(buf, w, h, fmt)
+        if len(arr) != nb:
+            # assigning into the stack would broadcast a 1-plane scene
+            # over every band: mixed profiles fail loudly, not corrupt
+            raise ValueError(
+                f"cell {int(tbl.column(key)[0].as_py())}: scene {i} has "
+                f"{len(arr)} planes, the cell's first scene {nb} (mixed "
+                "band counts in one cell); normalize the profile first")
         plane = _mask_scene(arr, nd, scene_fn)
         if stack is None:
             stack = np.empty((len(payloads),) + plane.shape, dtype)

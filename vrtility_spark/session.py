@@ -31,7 +31,14 @@ between tasks. Everything it freezes has just survived a full
 collection, so it is reachable; a task's cyclic garbage is collected
 before the freeze, and refcount-freed objects are freed as always.
 Freezing at import instead would miss pandas and pyarrow, which load
-later.
+later. The trade-off: an object that outlives a task (a broadcast
+value in PySpark's ``_broadcastRegistry``, a module cache entry) is
+frozen, and if it later becomes unreachable as part of a reference
+cycle, no collection sees it while it stays frozen. So every
+:data:`UNFREEZE_EVERY`-th between-task collection starts with
+``gc.unfreeze()`` and walks the whole heap again, which frees such
+cycles: the leak is bounded by what a worker drops in that many tasks,
+for one full walk per that many tasks.
 """
 
 from __future__ import annotations
@@ -77,11 +84,23 @@ def _stamp_zip_importers() -> None:
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 
 
+UNFREEZE_EVERY = 16
+_between_task_gcs = 0
+
+
 def _freeze_after_task_gc(phase: str, info: dict) -> None:
     """``gc.callbacks`` entry: freeze the heap once a full collection
-    between two tasks has finished (see the module docstring)."""
-    if (phase == "stop" and info["generation"] == 2
-            and TaskContext.get() is None):
+    between two tasks has finished, and unfreeze it before every
+    :data:`UNFREEZE_EVERY`-th such collection starts (see the module
+    docstring)."""
+    global _between_task_gcs
+    if info["generation"] != 2 or TaskContext.get() is not None:
+        return
+    if phase == "start":
+        if _between_task_gcs % UNFREEZE_EVERY == 0:
+            gc.unfreeze()
+        _between_task_gcs += 1
+    else:
         gc.freeze()
 
 
