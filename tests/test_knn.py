@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 import oracle
 from vrtility_spark import datagen, knn, schema, warp
@@ -242,11 +243,17 @@ def test_knn_plan_has_no_python_rdd(spark):
     assert "ExistingRDD" not in plan, plan
 
 
-def test_knn_one_query_runs_at_most_seven_jobs(spark):
+def test_knn_one_spark_query_runs_at_most_four_jobs(spark):
+    """A query frame that Spark has to compute costs one collect job on
+    top of the count job and the probe scan."""
+    from pyspark.sql import functions as F
+
     rng = np.random.default_rng(12)
     tiles = spark.createDataFrame(_point_tiles(rng, 500, [30], 8)).cache()
     tiles.count()
-    queries = spark.createDataFrame(_queries(rng, 1, [30]))
+    queries = spark.range(1).select(
+        F.lit("q0").alias("query_id"), F.lit(30).alias("zone"),
+        F.lit(4.0e5).alias("x"), F.lit(6.0e5).alias("y"), F.lit(5).alias("k"))
     sc = spark.sparkContext
     sc.setJobGroup("knn-jobs", "one kNN query")
     try:
@@ -255,7 +262,7 @@ def test_knn_one_query_runs_at_most_seven_jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         tiles.unpersist()
-    assert rows and len(jobs) <= 7, jobs
+    assert len(rows) == 5 and len(jobs) <= 4, jobs
 
 
 def test_knn_many_queries_match_bruteforce(spark):
@@ -291,9 +298,10 @@ def test_knn_empty_queries(spark):
         assert "ExistingRDD" not in plan, plan
 
 
-def test_knn_one_pandas_query_runs_at_most_five_jobs(spark):
+def test_knn_one_pandas_query_runs_at_most_three_jobs(spark):
     """A query frame built from pandas is read to the driver without a
-    Spark job: the count job and the probe are all that run."""
+    Spark job: the count job and the probe scan are all that run, and
+    reading the driver-built result runs none."""
     rng = np.random.default_rng(12)
     tiles = spark.createDataFrame(_point_tiles(rng, 500, [30], 8)).cache()
     tiles.count()
@@ -301,9 +309,46 @@ def test_knn_one_pandas_query_runs_at_most_five_jobs(spark):
     sc = spark.sparkContext
     sc.setJobGroup("knn-pandas-jobs", "one pandas-built kNN query")
     try:
-        rows = knn.knn_tiles(tiles, queries, res=8).collect()
+        out = knn.knn_tiles(tiles, queries, res=8)
+        searched = len(sc.statusTracker().getJobIdsForGroup("knn-pandas-jobs"))
+        rows = out.collect()
         jobs = sc.statusTracker().getJobIdsForGroup("knn-pandas-jobs")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         tiles.unpersist()
-    assert rows and len(jobs) <= 5, jobs
+    assert rows and len(jobs) <= 3 and len(jobs) == searched, jobs
+
+
+def test_knn_ties_come_back_in_image_id_order(spark):
+    """Tiles at one distance rank by ``image_id``, across the K cut too,
+    as the rank window of the distributed path orders them."""
+    import pandas as pd
+    from vrtility_spark import cells
+
+    c, d = 5.0e5, 1.0e4
+    x = np.array([c + d, c - d, c, c, c + 3 * d])
+    y = np.array([c, c, c + d, c - d, c])
+    tiles = spark.createDataFrame(pd.DataFrame({
+        "image_id": ["t3", "t1", "t4", "t2", "t0"], "zone": 30,
+        "xmin": x, "xmax": x, "ymin": y, "ymax": y, "caption": "c",
+        "phash": np.arange(5), "cell_id": cells.xy_to_cell_np(30, x, y, 6)}))
+    queries = spark.createDataFrame(pd.DataFrame(
+        {"query_id": ["q"], "zone": [30], "x": [c], "y": [c], "k": [3]}))
+    for search in (knn.knn_tiles, knn.knn_tiles_distributed):
+        got = sorted((r["rank"], r.image_id, r.dist)
+                     for r in search(tiles, queries, res=6).collect())
+        assert got == [(1, "t1", d), (2, "t2", d), (3, "t3", d)], search
+
+
+def test_knn_duplicate_query_id_raises(spark):
+    """Two query rows that share an id would be ranked together, each
+    getting a top-K mixed from the other's tiles."""
+    import pandas as pd
+
+    rng = np.random.default_rng(15)
+    tiles = spark.createDataFrame(_point_tiles(rng, 300, [30], 6))
+    queries = spark.createDataFrame(pd.DataFrame({
+        "query_id": ["q", "q", "p"], "zone": 30, "x": [1e5, 5e5, 3e5],
+        "y": [1e5, 5e5, 3e5], "k": 3}))
+    with pytest.raises(ValueError, match=r"duplicate query_id \['q'\]"):
+        knn.knn_tiles(tiles, queries, res=6)

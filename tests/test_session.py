@@ -190,3 +190,12 @@ def test_driver_has_no_freeze_callback():
 
     from vrtility_spark import session
     assert session._freeze_after_task_gc not in gc.callbacks
+
+
+def test_dataframe_call_site_capture_is_off(spark):
+    """``get_spark`` turns off PySpark's per-call call-site capture, so
+    a ``Column`` or ``functions`` call costs no extra py4j round trips."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False

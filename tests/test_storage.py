@@ -77,3 +77,49 @@ def test_bucketed_join_has_zero_exchange(spark, tiny_images):
     agg = storage.read_images_table(spark, "imgs_a") \
         .groupBy("cell_prefix").count()
     assert ") Exchange" not in storage.explain_str(agg)
+
+
+def test_recorded_schema_scan_runs_one_job(spark, tiny_images, tmp_path):
+    """``write_images`` records the read schema, so a pruned scan runs
+    one Spark job (no footer read to infer it) and returns what an
+    inferred read returns; without the record it falls back to
+    inference with the same rows."""
+    import re
+
+    path = str(tmp_path / "images_schema")
+    storage.write_images(tiny_images, path, cell_res=datagen.TILE_RES)
+    S = datagen.TILE_SPAN
+    box = dict(zone=30, xmin=0.1 * S, ymin=0.1 * S, xmax=1.9 * S,
+               ymax=0.9 * S, cell_res=datagen.TILE_RES)
+    sc = spark.sparkContext
+    sc.setJobGroup("scan-jobs", "one pruned scan")
+    try:
+        df = storage.scan_bbox(spark, path, **box)
+        rows = df.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("scan-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1, jobs
+
+    inferred = spark.read.parquet(path)
+    assert df.schema == inferred.schema
+    assert dict(inferred.dtypes)["zone"] == "int"
+    want = inferred.where((F.col("zone") == 30) & ~(
+        (F.col("xmax") <= box["xmin"]) | (F.col("xmin") >= box["xmax"])
+        | (F.col("ymax") <= box["ymin"]) | (F.col("ymin") >= box["ymax"])))
+    assert rows and sorted(rows) == sorted(want.collect())  # by image_id
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", storage.explain_str(df))
+    assert m and "cell_prefix" in m.group(1) and "zone" in m.group(1)
+
+    os.remove(os.path.join(path, storage.SCHEMA_FILE))
+    fallback = storage.scan_bbox(spark, path, **box)
+    assert fallback.schema == inferred.schema
+    assert sorted(fallback.collect()) == sorted(rows)
+
+
+def test_empty_write_records_no_schema(spark, tiny_images, tmp_path):
+    """An empty frame writes no parquet file, so there is no schema to
+    infer or record; the write still succeeds."""
+    path = str(tmp_path / "images_empty")
+    storage.write_images(tiny_images.limit(0), path, cell_res=datagen.TILE_RES)
+    assert not os.path.exists(os.path.join(path, storage.SCHEMA_FILE))

@@ -1,15 +1,15 @@
-"""kNN tile queries: one exact count job, then one probe.
+"""kNN tile queries: one exact count job, one probe scan, a driver rank.
 
 Required by BASELINE.json's ``north_rule`` (the reference has no kNN
 operator — SURVEY.md §2.3 J6). For each query point, find the K
 nearest scene tiles (distance = query point → tile center), exactly.
 
-:func:`knn_tiles` works in three steps, with no rounds:
+:func:`knn_tiles` works in three steps, with no rounds, after it
+collects the queries once (``schema.driver_frame``; no Spark job when
+the query frame was built from pandas): the query set is a bounded,
+user-supplied probe list, never the tile table.
 
-1. **Collect the queries** once (``schema.driver_frame``; no Spark
-   job when the query frame was built from pandas): the query set is
-   a bounded, user-supplied probe list, never the tile table.
-2. **Count** — ONE aggregation job. ``cell_id`` range predicates keep
+1. **Count** — ONE aggregation job. ``cell_id`` range predicates keep
    the tiles inside each query's Chebyshev box of radius
    ``max_rings``; they are counted per cell and collected, at most
    ``(2·max_rings+1)²`` rows per query. NumPy turns each query's cell
@@ -17,22 +17,26 @@ nearest scene tiles (distance = query point → tile center), exactly.
    whose disk holds ≥ K tiles, or ``max_rings`` when the box holds
    fewer (the best bounded answer, or the whole zone when the box
    covers it).
-3. **Probe** — the disk(r0) guarantee bounds the Kth distance by
-   ``d0 = (r0+1)·cell_size·√2`` (query anywhere inside its cell, tile
-   anywhere inside the farthest disk cell), so every true neighbour
-   lies within Chebyshev cell radius ``r1 = ceil(√2·(r0+1))``. The
-   disk(r1) cells, tagged with their query's metadata, reach Spark as
-   an Arrow-built pandas frame (a ``LocalTableScan``, no Python RDD);
-   one broadcast join plus a per-query ``row_number`` over
-   ``(dist, image_id)`` gives the exact top-K. A disk(r1) that covers
-   its zone becomes a per-zone equi-join instead of a cell list.
+2. **Probe** — ONE filtered scan. The disk(r0) guarantee bounds the
+   Kth distance by ``d0 = (r0+1)·cell_size·√2`` (query anywhere inside
+   its cell, tile anywhere inside the farthest disk cell), so every
+   true neighbour lies within Chebyshev cell radius
+   ``r1 = ceil(√2·(r0+1))``. The same literal range predicates at
+   radius ``r1`` collect the tiles of every query's disk(r1) through
+   Arrow; a disk that reaches across its zone takes the whole zone.
+3. **Rank** on the driver: each query's tiles ordered by
+   ``(dist, image_id)`` ascending, as a per-query ``row_number``
+   window would, cut at K. The result is a driver-built Arrow local
+   relation, so reading it runs no job.
 
-Nothing is persisted or checkpointed and the catalog is never counted;
-the result is a lazy plan. Driver work is bounded by the query count
-and ``max_rings``, never the table size.
+Nothing is persisted or checkpointed and the catalog is never counted.
+The driver holds the queries, the count rows and the probe's tiles:
+the tiles of each query's disk(r1), a number the count has already
+measured when ``r1 <= max_rings``. It never holds the table.
 
 :func:`knn_tiles_distributed` keeps the query table distributed for
-10⁶+-row query sets, at the price of count rounds.
+10⁶+-row query sets, or candidate sets too big for the driver, at the
+price of count rounds.
 """
 
 from __future__ import annotations
@@ -42,6 +46,8 @@ import math
 import operator
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -53,7 +59,6 @@ _SQRT2 = math.sqrt(2.0)
 
 _OUT_SCHEMA = ("query_id string, image_id string, dist double, rank int, "
                "caption string, phash long")
-_META_SCHEMA = "query_id string, qx double, qy double, k int"
 
 
 def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
@@ -231,24 +236,38 @@ def _box(qix, qiy, r, nmax: int):
             np.maximum(qiy - r, 0), np.minimum(qiy + r, nmax))
 
 
+def _in_boxes(zone, x0, x1, y0, y1, res: int):
+    """Encoded bounds ``(lo, hi)`` of each box and the predicate that
+    keeps the tiles inside any of them: a ``cell_id`` range (rows
+    ``y0..y1``) and a column range, as literals."""
+    lo, hi = encode_np(zone, res, x0, y0), encode_np(zone, res, x1, y1)
+    cell, ix = F.col("cell_id"), F.col("cell_id") % _B
+    return lo, hi, functools.reduce(operator.or_, (
+        cell.between(int(a), int(b)) & ix.between(int(c), int(d))
+        for a, b, c, d in zip(lo, hi, x0, x1)))
+
+
 def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
-              max_rings: int = 64, reliable: bool = False,
-              checkpoint_dir: str | None = None) -> DataFrame:
+              max_rings: int = 64) -> DataFrame:
     """K nearest tiles per query row (exact).
 
     ``tiles`` must carry ``cell_id`` at ``res`` (see
     :func:`vrtility_spark.warp.assign_cells`) plus ``image_id``,
     ``xmin..ymax``, ``caption``, ``phash``. ``queries`` carries
-    ``query_id, zone, x, y, k`` and is collected to the driver (an
-    ad-hoc probe list; :func:`knn_tiles_distributed` keeps it
-    distributed). ``max_rings`` caps the search radius in cells: a
-    query with fewer than K tiles inside the cap gets the best
-    bounded-partial answer.
+    ``query_id, zone, x, y, k``, one row per ``query_id``, and is
+    collected to the driver (an ad-hoc probe list;
+    :func:`knn_tiles_distributed` keeps it distributed). ``max_rings``
+    caps the search radius in cells: a query with fewer than K tiles
+    inside the cap gets the best bounded-partial answer.
 
-    The result is a lazy plan; ``reliable=True`` checkpoints it to
-    durable storage instead (see :mod:`vrtility_spark.checkpointing`).
+    Runs the count job and the probe scan, then ranks on the driver
+    (module docstring). The probe collects the tiles of every query's
+    disk(r1); for ``r1 <= max_rings`` the count has already measured
+    that number. Query or candidate sets too big for the driver belong
+    to :func:`knn_tiles_distributed`.
 
-    Returns ``(query_id, image_id, dist, rank, caption, phash)``.
+    Returns ``(query_id, image_id, dist, rank, caption, phash)`` as a
+    driver-built Arrow relation: reading it runs no Spark job.
     """
     spark = tiles.sparkSession
     tiles_p = tiles.select(
@@ -262,20 +281,21 @@ def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
         F.col("k").cast("int").alias("k")))
     if q.empty:
         return empty_frame(queries, _OUT_SCHEMA)
+    dup = q.query_id[q.query_id.duplicated()]
+    if len(dup):
+        raise ValueError(f"knn_tiles: duplicate query_id {sorted(set(dup))}"
+                         "; each query needs its own id")
     size = cell_size(res)
     nmax = (1 << res) - 1
-    zone, k = q.zone.to_numpy(np.int64), q.k.to_numpy()
-    qix = np.clip(np.floor(q.qx.to_numpy() / size), 0, nmax).astype(np.int64)
-    qiy = np.clip(np.floor(q.qy.to_numpy() / size), 0, nmax).astype(np.int64)
+    zone = q.zone.to_numpy(np.int64)
+    k = np.maximum(q.k.fillna(0).to_numpy(np.int64), 0)  # rank <= k
+    qx, qy = q.qx.to_numpy(), q.qy.to_numpy()
+    qix = np.clip(np.floor(qx / size), 0, nmax).astype(np.int64)
+    qiy = np.clip(np.floor(qy / size), 0, nmax).astype(np.int64)
 
     # ---- count: tiles per cell inside every query's max_rings box -------
     rc = min(nmax, int(max_rings))
-    x0, x1, y0, y1 = _box(qix, qiy, rc, nmax)
-    lo, hi = encode_np(zone, res, x0, y0), encode_np(zone, res, x1, y1)
-    cell, ix = F.col("cell_id"), F.col("cell_id") % _B
-    in_box = functools.reduce(operator.or_, (
-        cell.between(int(a), int(b)) & ix.between(int(c), int(d))
-        for a, b, c, d in zip(lo, hi, x0, x1)))
+    lo, hi, in_box = _in_boxes(zone, *_box(qix, qiy, rc, nmax), res)
     counts = (tiles_p.where(in_box).groupBy("cell_id").count()
               .toPandas().sort_values("cell_id"))
     cid = counts.cell_id.to_numpy(np.int64)
@@ -289,39 +309,35 @@ def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
         if filled[-1]:
             r0[j] = filled.argmax()
 
-    # ---- probe: disk(r1) cells, or the whole zone, then exact rank ------
+    # ---- probe: the tiles of every disk(r1) in one scan ------------------
     r1 = np.minimum(np.ceil(_SQRT2 * (r0 + 1)).astype(np.int64), nmax)
-    whole = 2 * r1 + 1 > nmax  # disk covers the zone: equi-join on zone
-    meta = q[["query_id", "qx", "qy", "k"]]
-    parts = []
-    if not whole.all():
-        x0, x1, y0, y1 = _box(qix, qiy, r1, nmax)
-        disk = np.flatnonzero(~whole)
-        cells = [encode_np(zone[j], res, np.arange(x0[j], x1[j] + 1)[None, :],
-                           np.arange(y0[j], y1[j] + 1)[:, None]).ravel()
-                 for j in disk]
-        cand = meta.iloc[np.repeat(disk, [len(c) for c in cells])].assign(
-            cand_cell=np.concatenate(cells))
-        cand = spark.createDataFrame(cand, _META_SCHEMA + ", cand_cell long")
-        parts.append(F.broadcast(cand).join(
-            tiles_p, F.col("cand_cell") == F.col("cell_id")))
-    if whole.any():
-        zq = spark.createDataFrame(meta[whole].assign(qzone=zone[whole]),
-                                   _META_SCHEMA + ", qzone long")
-        tzone = F.floor(F.col("cell_id") / (16 * _B * _B))
-        parts.append(F.broadcast(zq).join(tiles_p, F.col("qzone") == tzone))
-    hits = functools.reduce(DataFrame.unionByName, (
-        p.select("query_id", "qx", "qy", "k", "image_id", "caption",
-                 "phash", "tcx", "tcy") for p in parts))
+    r1[2 * r1 + 1 > nmax] = nmax  # a disk across the zone: all of it
+    x0, x1, y0, y1 = _box(qix, qiy, r1, nmax)
+    lo, hi, in_disk = _in_boxes(zone, x0, x1, y0, y1, res)
+    cand = tiles_p.where(in_disk).toArrow().sort_by("cell_id")
 
-    w = Window.partitionBy("query_id").orderBy("dist", "image_id")
-    out = (hits
-           .withColumn("dist", F.sqrt((F.col("tcx") - F.col("qx")) ** 2
-                                      + (F.col("tcy") - F.col("qy")) ** 2))
-           .withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= F.col("k"))
-           .select("query_id", "image_id", "dist", "rank", "caption", "phash"))
-    if reliable:
-        return truncate_lineage(out, reliable=True,
-                                checkpoint_dir=checkpoint_dir)
-    return out
+    # ---- rank on the driver by (dist, image_id), as a window would ------
+    cid = cand["cell_id"].to_numpy()
+    tcx, tcy = cand["tcx"].to_numpy(), cand["tcy"].to_numpy()
+    id_order = pc.rank(cand["image_id"], null_placement="at_start").to_numpy()
+    picks, dists = [], []
+    for j in range(len(q)):
+        a, b = np.searchsorted(cid, lo[j]), np.searchsorted(cid, hi[j], "right")
+        ix = cid[a:b] % _B
+        sel = a + np.flatnonzero((ix >= x0[j]) & (ix <= x1[j]))
+        d = np.sqrt((tcx[sel] - qx[j]) ** 2 + (tcy[sel] - qy[j]) ** 2)
+        top = np.lexsort((id_order[sel], d))[:k[j]]
+        picks.append(sel[top])
+        dists.append(d[top])
+    n_hit = [len(p) for p in picks]
+    if not sum(n_hit):
+        return empty_frame(queries, _OUT_SCHEMA)
+    take = np.concatenate(picks)
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array(np.repeat(q.query_id.to_numpy(), n_hit)),
+        "image_id": cand["image_id"].take(take),
+        "dist": np.concatenate(dists),
+        "rank": pa.array(np.concatenate([np.arange(1, m + 1) for m in n_hit]),
+                         pa.int32()),
+        "caption": cand["caption"].take(take),
+        "phash": cand["phash"].take(take)}))

@@ -5,6 +5,16 @@ Mirrors the execution-policy choices of the reference
 worker, parallelism at the process level) translated to Spark: AQE on,
 Arrow on, bounded Arrow batches, shuffle partitions sized to cores.
 
+It turns off PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4
+wraps every ``Column`` method and ``functions`` call in ``_with_origin``,
+which then costs about four extra py4j round trips
+(``getActiveSession``, ``conf.get``, ``PySparkCurrentOrigin.set`` and
+``clear``) and a failed ``import IPython`` search of ``sys.path`` per
+call; an interactive query builds hundreds of such expressions. The
+cost: a DataFrame error message no longer names the Python line that
+built the failing expression.
+
 Imported inside a PySpark worker (every engine UDF imports the
 package, and the package imports this module), it also stops the
 worker from re-reading its zip archives on every task. PySpark's
@@ -186,6 +196,8 @@ def get_spark(
                                os.path.join(tempfile.gettempdir(),
                                             "vrtility_warehouse")))
         .config("spark.ui.enabled", "false")
+        # no per-call Python call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
         # a fixed JIT compiler pool: by default HotSpot starts and retires
         # compiler threads as its queue swings, and a retired thread's

@@ -17,30 +17,77 @@ by (cell_id, datetime):
 ``scan_bbox`` turns a bbox query into (a) a partition-column predicate
 (pruning), (b) a cell_id range predicate (row-group skipping), and (c)
 the exact bbox refine — all before any pixel bytes are touched.
+
+``write_images`` also records the table's read schema, as Spark infers
+it right after the write (``zone`` int), in ``<path>/_read_schema.json``;
+Spark's file listing skips names that start with ``_``. ``read_images``
+and ``scan_bbox`` read with it, so a scan lists the directories and
+runs no job to infer the schema from a parquet footer. A table without
+the file (written before it existed, or by other means) is read with
+inference; an empty frame writes no parquet file, so nothing is
+recorded. The file is written and read through the Hadoop FileSystem,
+so it works on any path Spark can write.
 """
 
 from __future__ import annotations
 
+import json
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from vrtility_spark.cells import cover_bbox_np, parent_np
 from vrtility_spark.warp import assign_cells
 
 
+SCHEMA_FILE = "_read_schema.json"
+
+
+def _schema_file(spark: SparkSession, path: str):
+    """The Hadoop ``FileSystem`` and ``Path`` of ``path``'s schema file."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path, SCHEMA_FILE)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def write_images(df: DataFrame, path: str, cell_res: int, prefix_k: int = 2,
                  mode: str = "overwrite") -> None:
-    """Write an images table with the pruning-oriented layout."""
+    """Write an images table with the pruning-oriented layout, and
+    record its read schema (module docstring)."""
     out = assign_cells(df, cell_res, prefix_k)
     (out.repartition("zone", "cell_prefix")
         .sortWithinPartitions("cell_id", "datetime")
         .write.mode(mode)
         .partitionBy("zone", "cell_prefix")
         .parquet(path))
+    spark = df.sparkSession
+    try:
+        text = spark.read.parquet(path).schema.json()
+    except AnalysisException:  # an empty frame writes no file to infer from
+        return
+    fs, p = _schema_file(spark, path)
+    stream = fs.create(p, True)
+    try:
+        stream.write(bytearray(text.encode()))
+    finally:
+        stream.close()
 
 
 def read_images(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The images table at ``path``, read with its recorded schema, or
+    with inference when it has none."""
+    fs, p = _schema_file(spark, path)
+    if not fs.exists(p):
+        return spark.read.parquet(path)
+    stream = fs.open(p)
+    try:
+        text = bytes(spark._jvm.org.apache.hadoop.io.IOUtils
+                     .readFullyToByteArray(stream)).decode()
+    finally:
+        stream.close()
+    return spark.read.schema(StructType.fromJson(json.loads(text))) \
+        .parquet(path)
 
 
 def write_images_bucketed(df: DataFrame, table: str, cell_res: int,
@@ -91,7 +138,7 @@ def scan_bbox(spark: SparkSession, path: str, zone: int,
         cover_bbox_np(zone, xmin - e2, ymin - e2, xmax + e2, ymax + e2,
                       cell_res), prefix_k
     ).tolist()))
-    df = spark.read.parquet(path)
+    df = read_images(spark, path)
     df = df.where((F.col("zone") == zone) & F.col("cell_prefix").isin(prefixes))
     df = df.where(~((F.col("xmax") <= xmin) | (F.col("xmin") >= xmax)
                     | (F.col("ymax") <= ymin) | (F.col("ymin") >= ymax)))
