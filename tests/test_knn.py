@@ -35,47 +35,49 @@ def test_knn_caption_passthrough(spark, tiny_images, tiny_images_pdf):
 
 
 def test_knn_randomized_exactness(spark):
-    """Seeded random tile sets with clustered + sparse regions and
-    random k: the two-phase count/probe search must return exactly the
-    brute-force top-k (distances AND ids) every time."""
+    """Seeded random catalogs over 3 zones (one of them empty), cached,
+    with clustered + sparse regions, tiles stacked on one point, k = 0,
+    k above the zone's tile count and ties across the K cut: every call
+    returns exactly the brute-force top-k (distances AND ids), also the
+    calls that read the count index built by an earlier call."""
     import pandas as pd
-    from vrtility_spark import cells, schema
+    from vrtility_spark import cells
 
     rng = np.random.default_rng(42)
-    res = 5
+    res, zones = 5, [30, 31, 32]
+    c, d = 5.0e5, 1.0e4  # four tiles at distance d from (c, c)
     for trial in range(3):
-        n = int(rng.integers(40, 160))
-        # half clustered in one corner (hot cells), half uniform (voids)
-        xy = np.vstack([
-            rng.uniform(0, 2e5, (n // 2, 2)),
-            rng.uniform(0, cells.ZONE_SPAN, (n - n // 2, 2)),
-        ])
-        tiles_pdf = pd.DataFrame({
-            "image_id": [f"t{trial}_{i:04d}" for i in range(n)],
-            "zone": 30, "xmin": xy[:, 0], "xmax": xy[:, 0],
-            "ymin": xy[:, 1], "ymax": xy[:, 1],
-            "caption": [f"c{i}" for i in range(n)],
-            "phash": np.arange(n, dtype=np.int64),
-        })
-        tiles_pdf["cell_id"] = cells.xy_to_cell_np(
-            30, xy[:, 0], xy[:, 1], res)
-        qs = pd.DataFrame({
-            "query_id": [f"q{j}" for j in range(5)],
-            "zone": 30,
-            "x": rng.uniform(0, cells.ZONE_SPAN, 5),
-            "y": rng.uniform(0, cells.ZONE_SPAN, 5),
-            "k": rng.integers(1, 12, 5),
-        })
-        got = knn.knn_tiles(
-            spark.createDataFrame(tiles_pdf),
-            spark.createDataFrame(qs), res=res).toPandas()
-        for q in qs.itertuples(index=False):
-            d = np.hypot(xy[:, 0] - q.x, xy[:, 1] - q.y)
-            order = sorted(range(n), key=lambda i: (d[i], tiles_pdf.image_id[i]))
-            want = order[: min(q.k, n)]
-            g = got[got.query_id == q.query_id].sort_values("rank")
-            assert list(g.image_id) == [tiles_pdf.image_id[i] for i in want]
-            np.testing.assert_allclose(g.dist.values, d[want], rtol=1e-12)
+        tiles_pdf = _point_tiles(rng, int(rng.integers(40, 160)),
+                                 zones[:2], res)
+        x = np.array([c + d, c - d, c, c, c, c])
+        y = np.array([c, c, c + d, c - d, c, c])
+        ties = pd.DataFrame({
+            "image_id": [f"tie{i}" for i in (3, 1, 4, 2, 0, 5)], "zone": 31,
+            "xmin": x, "xmax": x, "ymin": y, "ymax": y, "caption": "c",
+            "phash": np.arange(6), "cell_id": cells.xy_to_cell_np(31, x, y,
+                                                                  res)})
+        tiles_pdf = pd.concat([tiles_pdf, ties], ignore_index=True)
+        tiles_pdf["image_id"] = [f"t{trial}_{i}" for i in tiles_pdf.image_id]
+        tiles = spark.createDataFrame(tiles_pdf).cache()
+        n_max = int(tiles_pdf.zone.value_counts().max())
+        try:
+            for call in range(3):
+                qs = _queries(rng, 10, zones if call else zones[:1])
+                qs["query_id"] = [f"c{call}_{i}" for i in qs.query_id]
+                qs.loc[0, "k"] = 0
+                qs.loc[1, "k"] = n_max + 5
+                qs.loc[2, ["zone", "x", "y", "k"]] = [31, c, c, 2 + call]
+                got = knn.knn_tiles(tiles, spark.createDataFrame(qs),
+                                    res=res).toPandas()
+                exp = oracle.brute_force_knn(tiles_pdf, qs)
+                assert len(got) == sum(map(len, exp.values())), (trial, call)
+                for qid, want in exp.items():
+                    g = got[got.query_id == qid].sort_values("rank")
+                    assert list(g.image_id) == [i for _, i in want], qid
+                    np.testing.assert_allclose(
+                        g.dist.values, [dd for dd, _ in want], rtol=1e-12)
+        finally:
+            tiles.unpersist()
 
 
 def test_auto_radius_clamped_to_max_rings(spark):
@@ -352,3 +354,158 @@ def test_knn_duplicate_query_id_raises(spark):
         "y": [1e5, 5e5, 3e5], "k": 3}))
     with pytest.raises(ValueError, match=r"duplicate query_id \['q'\]"):
         knn.knn_tiles(tiles, queries, res=6)
+
+
+def test_knn_query_outside_zone_extent_raises(spark):
+    """The ring bound assumes the query point lies inside the cell it
+    was mapped to. A point west of its zone used to be clipped to a
+    column-0 cell and got A0 A1 A2, where brute force says B0 A0 A1;
+    such a query, or a NaN one, is rejected by both paths."""
+    import pandas as pd
+    from vrtility_spark import cells
+
+    size = cells.cell_size(6)
+    x = np.array([2.5, 2.5, 2.5, 0.5]) * size
+    y = np.array([30.5, 30.5, 30.5, 40.5]) * size
+    tiles = spark.createDataFrame(pd.DataFrame({
+        "image_id": ["A0", "A1", "A2", "B0"], "zone": 30,
+        "xmin": x, "xmax": x, "ymin": y, "ymax": y, "caption": "c",
+        "phash": np.arange(4), "cell_id": cells.xy_to_cell_np(30, x, y, 6)}))
+    span = cells.ZONE_SPAN
+    bad = pd.DataFrame({
+        "query_id": ["west", "ok", "nan", "east"], "zone": 30,
+        "x": [-1e6, 1e5, np.nan, span], "y": [30.5 * size, 1e5, 1e5, 1e5],
+        "k": 3})
+    with pytest.raises(ValueError, match=r"\['east', 'nan', 'west'\]"):
+        knn.knn_tiles(tiles, spark.createDataFrame(bad), res=6)
+    with pytest.raises(ValueError, match=r"3 queries .* 'east'"):
+        knn.knn_tiles_distributed(tiles, spark.createDataFrame(bad), res=6)
+
+
+def _catalog(rng, near: bool):
+    """Zone-30 point tiles at res 6: 40 tiles inside 2 km of (5e5, 5e5)
+    when ``near``, else 12 tiles at least 200 km from it."""
+    import pandas as pd
+    from vrtility_spark import cells
+
+    if near:
+        xy = 5e5 + rng.uniform(-2e3, 2e3, (40, 2))
+    else:
+        a = rng.uniform(0, 2 * np.pi, 12)
+        xy = 5e5 + np.c_[np.cos(a), np.sin(a)] * rng.uniform(2e5, 4e5, (12, 1))
+    return pd.DataFrame({
+        "image_id": [f"{'dn'[near]}{i:02d}" for i in range(len(xy))],
+        "zone": 30, "xmin": xy[:, 0], "xmax": xy[:, 0],
+        "ymin": xy[:, 1], "ymax": xy[:, 1], "caption": "c",
+        "phash": np.arange(len(xy), dtype=np.int64),
+        "cell_id": cells.xy_to_cell_np(30, xy[:, 0], xy[:, 1], 6)})
+
+
+def _top(rows):
+    return [(r.query_id, r["rank"], r.image_id, round(r.dist, 6))
+            for r in sorted(rows, key=lambda r: (r.query_id, r["rank"]))]
+
+
+def _want(tiles_pdf, qs):
+    return sorted((qid, j + 1, i, round(d, 6))
+                  for qid, ds in oracle.brute_force_knn(tiles_pdf, qs).items()
+                  for j, (d, i) in enumerate(ds))
+
+
+_QUERY = {"query_id": ["q"], "zone": [30], "x": [5e5], "y": [5e5], "k": [5]}
+
+
+def test_knn_index_dies_with_its_cache_entry(spark, tmp_path):
+    """A catalog dense near the query is cached, queried (and indexed),
+    unpersisted and overwritten on disk by one sparse near it. The new
+    read plans like the old one, so counts kept for the plan would give
+    r0 = 0 and a probe that misses every true neighbour; a new cache
+    entry starts a new index."""
+    import pandas as pd
+
+    rng = np.random.default_rng(16)
+    path = tmp_path / "catalog"
+    qs = pd.DataFrame(_QUERY)
+    for near in (True, False):
+        pdf = _catalog(rng, near)
+        path.mkdir(exist_ok=True)
+        pdf.to_parquet(path / "part-0.parquet", index=False)
+        tiles = spark.read.parquet(str(path)).cache()
+        try:
+            got = knn.knn_tiles(tiles, spark.createDataFrame(qs), res=6)
+            assert _top(got.collect()) == _want(pdf, qs), near
+        finally:
+            tiles.unpersist()
+
+
+_NEW_SESSION_SCRIPT = """
+import json, sys
+import numpy as np, pandas as pd
+sys.path.insert(0, sys.argv[1])
+import test_knn as t
+from vrtility_spark import knn
+from vrtility_spark.session import get_spark
+
+out = []
+for near in (True, False):
+    spark = get_spark("knn-index", cores=1, shuffle_partitions=2)
+    pdf = t._catalog(np.random.default_rng(17), near)
+    tiles = spark.createDataFrame(pdf).cache()
+    qs = pd.DataFrame(t._QUERY)
+    got = knn.knn_tiles(tiles, spark.createDataFrame(qs), res=6).collect()
+    out.append({"key": list(knn._cache_key(tiles, 6)),
+                "got": t._top(got), "want": t._want(pdf, qs)})
+    spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_knn_index_not_reused_by_a_new_session():
+    """RDD ids restart with each SparkContext: the sparse catalog of a
+    second session gets the cache RDD id of the first session's dense
+    one. Its own application id keeps it off the stale counts. Runs in
+    its own interpreter, since only one SparkContext may live in a
+    process."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    env = dict(os.environ, PYTHONPATH=os.path.dirname(here),
+               SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run([sys.executable, "-c", _NEW_SESSION_SCRIPT, here],
+                       env=env, capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-3000:]
+    a, b = json.loads(r.stdout.strip().splitlines()[-1])
+    assert a["key"][1:] == b["key"][1:] and a["key"][0] != b["key"][0]
+    for run in (a, b):
+        assert [tuple(x) for x in run["got"]] == \
+            [tuple(x) for x in run["want"]]
+
+
+def test_knn_indexed_zone_query_runs_one_job(spark):
+    """On a cached catalog the first query that reaches a zone counts
+    it (≤ 3 jobs with the probe); a later query in that zone reads the
+    count index and runs only the probe scan."""
+    import pandas as pd
+
+    rng = np.random.default_rng(18)
+    tiles = spark.createDataFrame(_point_tiles(rng, 300, [30, 31], 6)).cache()
+    tiles.count()
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for i, (zone, x) in enumerate([(30, 4e5), (30, 7e5), (31, 2e5)]):
+            queries = spark.createDataFrame(pd.DataFrame({
+                "query_id": [f"q{i}"], "zone": [zone], "x": [x],
+                "y": [6e5], "k": [4]}))
+            sc.setJobGroup(f"knn-index-{i}", "one kNN query")
+            rows = knn.knn_tiles(tiles, queries, res=6).collect()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(
+                f"knn-index-{i}")))
+            assert len(rows) == 4
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        tiles.unpersist()
+    assert jobs[0] <= 3 and jobs[1] == 1 and jobs[2] <= 3, jobs

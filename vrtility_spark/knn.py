@@ -1,4 +1,5 @@
-"""kNN tile queries: one exact count job, one probe scan, a driver rank.
+"""kNN tile queries: ring counts from a per-cell count index, one probe
+scan, a driver rank.
 
 Required by BASELINE.json's ``north_rule`` (the reference has no kNN
 operator — SURVEY.md §2.3 J6). For each query point, find the K
@@ -7,16 +8,22 @@ nearest scene tiles (distance = query point → tile center), exactly.
 :func:`knn_tiles` works in three steps, with no rounds, after it
 collects the queries once (``schema.driver_frame``; no Spark job when
 the query frame was built from pandas): the query set is a bounded,
-user-supplied probe list, never the tile table.
+user-supplied probe list, never the tile table. A query whose ``x`` or
+``y`` is NaN or outside ``[0, ZONE_SPAN)`` is rejected: the ring bound
+below holds only for a point inside its cell.
 
-1. **Count** — ONE aggregation job. ``cell_id`` range predicates keep
-   the tiles inside each query's Chebyshev box of radius
-   ``max_rings``; they are counted per cell and collected, at most
-   ``(2·max_rings+1)²`` rows per query. NumPy turns each query's cell
-   counts into cumulative ring counts: ``r0`` is the smallest radius
-   whose disk holds ≥ K tiles, or ``max_rings`` when the box holds
-   fewer (the best bounded answer, or the whole zone when the box
-   covers it).
+1. **Count** — the tiles per cell around each query. When the catalog
+   is itself a Spark-cached frame, the counts come from a per-cell
+   count index held on the driver (the grid-with-cell-counts design of
+   *Distributed Stream KNN Join*, SIGMOD 2021): the first query that
+   reaches a zone counts that zone's contiguous ``cell_id`` range in
+   one aggregation (several new zones in one call share it), and later
+   queries read it with no Spark job. Otherwise ONE aggregation job
+   counts the cells of each query's Chebyshev box of radius
+   ``max_rings``. NumPy turns each query's cell counts into cumulative
+   ring counts: ``r0`` is the smallest radius whose disk holds ≥ K
+   tiles, or ``max_rings`` when the box holds fewer (the best bounded
+   answer, or the whole zone when the box covers it).
 2. **Probe** — ONE filtered scan. The disk(r0) guarantee bounds the
    Kth distance by ``d0 = (r0+1)·cell_size·√2`` (query anywhere inside
    its cell, tile anywhere inside the farthest disk cell), so every
@@ -29,10 +36,15 @@ user-supplied probe list, never the tile table.
    window would, cut at K. The result is a driver-built Arrow local
    relation, so reading it runs no job.
 
-Nothing is persisted or checkpointed and the catalog is never counted.
-The driver holds the queries, the count rows and the probe's tiles:
-the tiles of each query's disk(r1), a number the count has already
-measured when ``r1 <= max_rings``. It never holds the table.
+Nothing is persisted or checkpointed. The count index lives exactly as
+long as the Spark cache entry it was counted from: it is keyed on the
+application id and the id of that entry's cached RDD, so ``unpersist``
+and a new ``cache`` (or a new session) start a new index, and it adds
+no staleness beyond what Spark's cache already has. The last
+``_INDEX_ENTRIES`` cache entries keep theirs. The driver holds 16 B per
+occupied cell of each indexed zone (at most ``4**res`` cells per zone,
+never more than the zone's tiles), the queries and the probe's tiles:
+the tiles of each query's disk(r1). It never holds the table.
 
 :func:`knn_tiles_distributed` keeps the query table distributed for
 10⁶+-row query sets, or candidate sets too big for the driver, at the
@@ -44,6 +56,8 @@ from __future__ import annotations
 import functools
 import math
 import operator
+import threading
+from collections import OrderedDict
 
 import numpy as np
 import pyarrow as pa
@@ -51,7 +65,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from vrtility_spark.cells import _B, cell_size, encode_np
+from vrtility_spark.cells import _B, ZONE_SPAN, cell_size, encode_np
 from vrtility_spark.checkpointing import truncate_lineage
 from vrtility_spark.schema import driver_frame, empty_frame
 
@@ -59,6 +73,8 @@ _SQRT2 = math.sqrt(2.0)
 
 _OUT_SCHEMA = ("query_id string, image_id string, dist double, rank int, "
                "caption string, phash long")
+
+_INDEX_ENTRIES = 4  # cached catalogs whose cell counts stay on the driver
 
 
 def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
@@ -101,23 +117,31 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
     cell_counts = (tiles_p.groupBy("cell_id")
                    .agg(F.count("*").alias("_n")).persist())
 
-    def _clip(c):
-        return F.greatest(F.lit(0), F.least(F.lit(nmax), c)).cast("long")
-
     q = (queries.select(
             "query_id", F.col("zone").cast("long").alias("zone"),
             F.col("x").cast("double").alias("qx"),
             F.col("y").cast("double").alias("qy"),
             F.col("k").cast("int").alias("k"))
-         .withColumn("qix", _clip(F.floor(F.col("qx") / F.lit(size))))
-         .withColumn("qiy", _clip(F.floor(F.col("qy") / F.lit(size))))
+         .withColumn("qix", F.floor(F.col("qx") / F.lit(size)))
+         .withColumn("qiy", F.floor(F.col("qy") / F.lit(size)))
          .persist())
-    stats = q.agg(F.count("*").alias("nq"),
-                  F.max("k").alias("kmax")).collect()[0]
-    if not stats.nq:
+    # NaN and null compare false here (Spark orders NaN above ZONE_SPAN)
+    outside = ~F.coalesce(
+        (F.col("qx") >= 0) & (F.col("qx") < ZONE_SPAN)
+        & (F.col("qy") >= 0) & (F.col("qy") < ZONE_SPAN), F.lit(False))
+    stats = q.agg(F.count("*").alias("nq"), F.max("k").alias("kmax"),
+                  F.count_if(outside).alias("n_out"),
+                  F.min(F.when(outside, F.col("query_id"))).alias("out_id")
+                  ).collect()[0]
+    if not stats.nq or stats.n_out:
         q.unpersist()
         cell_counts.unpersist()
         tiles_p.unpersist()
+        if stats.n_out:
+            raise ValueError(
+                f"knn_tiles_distributed: {stats.n_out} queries with x or y "
+                f"NaN or outside [0, {ZONE_SPAN:.0f}), first query_id "
+                f"{stats.out_id!r}")
         return empty_frame(queries, _OUT_SCHEMA)
 
     # first count radius: the disk that holds ~4·kmax tiles at the
@@ -229,6 +253,75 @@ def knn_tiles_distributed(tiles: DataFrame, queries: DataFrame, res: int,
     return result
 
 
+def _cell_counts(frame: DataFrame):
+    """``frame``'s tiles per occupied cell, as ``(cell_id, count)``
+    int64 arrays sorted by ``cell_id``, from one aggregation."""
+    t = frame.groupBy("cell_id").count().toArrow().sort_by("cell_id")
+    return (t["cell_id"].to_numpy().astype(np.int64),
+            t["count"].to_numpy().astype(np.int64))
+
+
+def _cache_key(tiles: DataFrame, res: int):
+    """``(application id, cached RDD id, res)`` of the Spark cache entry
+    that serves ``tiles``, or None when ``tiles`` is not itself cached.
+    RDD ids restart with each SparkContext, hence the application id;
+    ``unpersist`` and a new ``cache`` build a new RDD, hence a new key."""
+    spark = tiles.sparkSession
+    entry = (spark._jsparkSession.sharedState().cacheManager()
+             .lookupCachedData(tiles._jdf))
+    if entry.isEmpty():
+        return None
+    rdd = entry.get().cachedRepresentation().cacheBuilder() \
+        .cachedColumnBuffers()
+    return spark.sparkContext.applicationId, rdd.id(), res
+
+
+class _CountIndex:
+    """Per-cell tile counts of cached catalogs, held on the driver.
+
+    One entry per Spark cache entry (:func:`_cache_key`): the zones
+    counted so far and their ``(cell_id, count)`` arrays, sorted. A zone
+    is counted the first time a query reaches it; the least recently
+    used entries beyond ``entries`` are dropped."""
+
+    def __init__(self, entries: int):
+        self._entries = entries
+        self._memo: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def counts(self, tiles: DataFrame, zones, res: int):
+        """Sorted ``(cell_id, count)`` arrays covering every zone in
+        ``zones``, or None when ``tiles`` is not cached."""
+        key = _cache_key(tiles, res)
+        if key is None:
+            return None
+        empty = np.empty(0, np.int64)
+        with self._lock:
+            done, cid, n = self._memo.get(key, (frozenset(), empty, empty))
+            if key in self._memo:
+                self._memo.move_to_end(key)
+        new = sorted(set(zones.tolist()) - done)
+        if new:
+            nmax = (1 << res) - 1
+            lo = encode_np(new, res, 0, 0)
+            hi = encode_np(new, res, nmax, nmax)
+            add_cid, add_n = _cell_counts(tiles.where(functools.reduce(
+                operator.or_, (F.col("cell_id").between(int(a), int(b))
+                               for a, b in zip(lo, hi)))))
+            cid = np.concatenate([cid, add_cid])
+            order = np.argsort(cid, kind="stable")
+            cid, n = cid[order], np.concatenate([n, add_n])[order]
+            with self._lock:
+                self._memo[key] = (done | frozenset(new), cid, n)
+                self._memo.move_to_end(key)
+                while len(self._memo) > self._entries:
+                    self._memo.popitem(last=False)
+        return cid, n
+
+
+_INDEX = _CountIndex(_INDEX_ENTRIES)
+
+
 def _box(qix, qiy, r, nmax: int):
     """Bounds ``(x0, x1, y0, y1)`` of each query's Chebyshev box of
     radius ``r`` around its cell, clipped to the zone."""
@@ -236,13 +329,12 @@ def _box(qix, qiy, r, nmax: int):
             np.maximum(qiy - r, 0), np.minimum(qiy + r, nmax))
 
 
-def _in_boxes(zone, x0, x1, y0, y1, res: int):
-    """Encoded bounds ``(lo, hi)`` of each box and the predicate that
-    keeps the tiles inside any of them: a ``cell_id`` range (rows
-    ``y0..y1``) and a column range, as literals."""
-    lo, hi = encode_np(zone, res, x0, y0), encode_np(zone, res, x1, y1)
+def _in_boxes(lo, hi, x0, x1):
+    """The predicate that keeps the tiles inside any box with encoded
+    bounds ``lo..hi`` (rows ``y0..y1``) and columns ``x0..x1``: a
+    ``cell_id`` range and a column range, as literals."""
     cell, ix = F.col("cell_id"), F.col("cell_id") % _B
-    return lo, hi, functools.reduce(operator.or_, (
+    return functools.reduce(operator.or_, (
         cell.between(int(a), int(b)) & ix.between(int(c), int(d))
         for a, b, c, d in zip(lo, hi, x0, x1)))
 
@@ -258,13 +350,24 @@ def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
     collected to the driver (an ad-hoc probe list;
     :func:`knn_tiles_distributed` keeps it distributed). ``max_rings``
     caps the search radius in cells: a query with fewer than K tiles
-    inside the cap gets the best bounded-partial answer.
+    inside the cap gets the best bounded-partial answer. A query whose
+    ``x`` or ``y`` is NaN or outside ``[0, ZONE_SPAN)`` raises
+    ``ValueError``.
 
-    Runs the count job and the probe scan, then ranks on the driver
-    (module docstring). The probe collects the tiles of every query's
-    disk(r1); for ``r1 <= max_rings`` the count has already measured
-    that number. Query or candidate sets too big for the driver belong
-    to :func:`knn_tiles_distributed`.
+    Counts the tiles around each query, then runs the probe scan and
+    ranks on the driver (module docstring). When ``tiles`` is itself a
+    cached frame the counts come from the driver-held count index of
+    its Spark cache entry: the first query that reaches a zone counts
+    the zone in one aggregation, and a query in an indexed zone runs
+    only the probe scan. The index lives as long as that cache entry
+    and costs 16 B per occupied cell of each indexed zone (at most
+    ``4**res`` per zone, never more than the zone's tiles). A frame
+    that is not itself cached (a ``select`` of a cached frame is not)
+    is counted inside each query's ``max_rings`` box by one
+    aggregation per call. The probe collects the tiles of every
+    query's disk(r1); for ``r1 <= max_rings`` the count has already
+    measured that number. Query or candidate sets too big for the
+    driver belong to :func:`knn_tiles_distributed`.
 
     Returns ``(query_id, image_id, dist, rank, caption, phash)`` as a
     driver-built Arrow relation: reading it runs no Spark job.
@@ -285,21 +388,26 @@ def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
     if len(dup):
         raise ValueError(f"knn_tiles: duplicate query_id {sorted(set(dup))}"
                          "; each query needs its own id")
+    qx, qy = q.qx.to_numpy(np.float64), q.qy.to_numpy(np.float64)
+    outside = ~((qx >= 0) & (qx < ZONE_SPAN) & (qy >= 0) & (qy < ZONE_SPAN))
+    if outside.any():
+        raise ValueError(
+            f"knn_tiles: query_id {sorted(q.query_id[outside])} with x or "
+            f"y NaN or outside [0, {ZONE_SPAN:.0f})")
     size = cell_size(res)
     nmax = (1 << res) - 1
     zone = q.zone.to_numpy(np.int64)
     k = np.maximum(q.k.fillna(0).to_numpy(np.int64), 0)  # rank <= k
-    qx, qy = q.qx.to_numpy(), q.qy.to_numpy()
-    qix = np.clip(np.floor(qx / size), 0, nmax).astype(np.int64)
-    qiy = np.clip(np.floor(qy / size), 0, nmax).astype(np.int64)
+    qix = np.floor(qx / size).astype(np.int64)
+    qiy = np.floor(qy / size).astype(np.int64)
 
-    # ---- count: tiles per cell inside every query's max_rings box -------
+    # ---- count: tiles per cell, from the index or inside every query's
+    # max_rings box; the ring sums below look at the box either way -----
     rc = min(nmax, int(max_rings))
-    lo, hi, in_box = _in_boxes(zone, *_box(qix, qiy, rc, nmax), res)
-    counts = (tiles_p.where(in_box).groupBy("cell_id").count()
-              .toPandas().sort_values("cell_id"))
-    cid = counts.cell_id.to_numpy(np.int64)
-    n = counts["count"].to_numpy(np.int64)
+    x0, x1, y0, y1 = _box(qix, qiy, rc, nmax)
+    lo, hi = encode_np(zone, res, x0, y0), encode_np(zone, res, x1, y1)
+    counts = _INDEX.counts(tiles, zone, res)
+    cid, n = counts or _cell_counts(tiles.where(_in_boxes(lo, hi, x0, x1)))
     r0 = np.full(len(q), rc)  # < K tiles within the cap: take them all
     for j in range(len(q)):
         a, b = np.searchsorted(cid, lo[j]), np.searchsorted(cid, hi[j], "right")
@@ -313,8 +421,9 @@ def knn_tiles(tiles: DataFrame, queries: DataFrame, res: int,
     r1 = np.minimum(np.ceil(_SQRT2 * (r0 + 1)).astype(np.int64), nmax)
     r1[2 * r1 + 1 > nmax] = nmax  # a disk across the zone: all of it
     x0, x1, y0, y1 = _box(qix, qiy, r1, nmax)
-    lo, hi, in_disk = _in_boxes(zone, x0, x1, y0, y1, res)
-    cand = tiles_p.where(in_disk).toArrow().sort_by("cell_id")
+    lo, hi = encode_np(zone, res, x0, y0), encode_np(zone, res, x1, y1)
+    cand = tiles_p.where(_in_boxes(lo, hi, x0, x1)).toArrow() \
+        .sort_by("cell_id")
 
     # ---- rank on the driver by (dist, image_id), as a window would ------
     cid = cand["cell_id"].to_numpy()
