@@ -305,9 +305,8 @@ class _CountIndex:
             nmax = (1 << res) - 1
             lo = encode_np(new, res, 0, 0)
             hi = encode_np(new, res, nmax, nmax)
-            add_cid, add_n = _cell_counts(tiles.where(functools.reduce(
-                operator.or_, (F.col("cell_id").between(int(a), int(b))
-                               for a, b in zip(lo, hi)))))
+            add_cid, add_n = _cell_counts(tiles.where(_in_boxes(
+                lo, hi, np.zeros_like(lo), np.full_like(lo, nmax))))
             cid = np.concatenate([cid, add_cid])
             order = np.argsort(cid, kind="stable")
             cid, n = cid[order], np.concatenate([n, add_n])[order]
